@@ -13,10 +13,10 @@ the old corpus's text is never re-read, never re-shingled, never
 re-hashed.  Invariant (oracle-checked by gate x70 and property-tested):
 the accumulated pair set equals the one-shot batch answer over the union.
 
-State layout (the s16/s19 versioned discipline): ``state_root/{sh,bands,
-pairs}/b{version}`` parquet dirs, committed = ``_SUCCESS`` present,
-priors re-derived from disk.  Version ids must increase; a stale or
-repeated version id is an error (the neardup id_offset guard).  The
+State layout: ``state_root/{sh,bands,pairs}/b{version}`` parquet dirs,
+committed per :mod:`hiveka_spark.commit`, priors re-derived from disk.
+Version ids must increase; a stale or repeated version id is an error
+(the neardup id_offset guard).  The
 stored state holds shingle ARRAYS and band hashes only — no text column
 exists anywhere in the index, which is the structural proof that old
 text cannot be re-processed.
@@ -36,6 +36,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hiveka_spark import commit
 from hiveka_spark.operators import dedup as D
 from hiveka_spark.streaming.neardup import committed_versions
 
@@ -44,10 +45,10 @@ _STORES = ("sh", "bands", "pairs")
 
 
 def _store_versions(state_root: str, store: str) -> set[int]:
-    root = os.path.join(state_root, store)
-    if not os.path.isdir(root):
-        return set()
-    return {int(os.path.basename(p)[1:]) for p in committed_versions(root, 10**9)}
+    return {
+        commit.version_id(p)
+        for p in commit.committed(os.path.join(state_root, store))
+    }
 
 
 def complete_versions(state_root: str) -> list[int]:
@@ -101,14 +102,15 @@ def compact_minhash_index(spark: SparkSession, state_root: str) -> int | None:
     to THIS index it would orphan the pairs store (no version present in
     all three stores, so ``complete_versions`` goes empty and the
     accumulated answer silently vanishes).  This variant keeps the
-    three-store commit protocol:
+    three-store rule:
 
-    - the new id is max(any id in ANY store) + 1, so a crashed partial
-      ingest's dirs can never collide with the compacted dir;
-    - stores publish in the ingest order (sh, bands, PAIRS LAST): a crash
-      before the pairs publish leaves the new id partial — invisible to
-      ``complete_versions`` — with every old dir intact, and a compaction
-      retry simply picks the next id;
+    - the new id is max(any id in ANY store) + 1, so it never names a
+      committed dir;
+    - stores publish (:func:`hiveka_spark.commit.publish`) in the ingest
+      order (sh, bands, PAIRS LAST): a crash before the pairs publish
+      leaves the new id partial — invisible to ``complete_versions`` —
+      with every old dir intact, and a compaction retry simply picks the
+      next id;
     - old dirs (and any stale partials) are deleted only after all three
       publishes; a crash mid-delete leaves duplicate index rows, which
       every consumer tolerates (candidates/pairs ``.distinct()``, verify
@@ -128,14 +130,10 @@ def compact_minhash_index(spark: SparkSession, state_root: str) -> int | None:
     keep = set(complete)
     for store in _STORES:  # ("sh", "bands", "pairs") — pairs last
         root = os.path.join(state_root, store)
-        dirs = [
-            p
-            for p in committed_versions(root, 10**9)
-            if int(os.path.basename(p)[1:]) in keep
-        ]
+        dirs = [p for p in commit.committed(root) if commit.version_id(p) in keep]
         tmp = os.path.join(root, "_compact_tmp")
         spark.read.parquet(*dirs).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, os.path.join(root, f"b{new_id}"))
+        commit.publish(tmp, os.path.join(root, f"b{new_id}"))
     for store in _STORES:
         root = os.path.join(state_root, store)
         for n in os.listdir(root):

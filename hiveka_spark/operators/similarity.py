@@ -22,6 +22,8 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from hiveka_spark import commit
+
 QUANT = 10000  # fixed-point scale for engine-exact cosine
 
 
@@ -1764,99 +1766,74 @@ def ivf_index_update(
 
 def ivf_index_versions(root: str) -> list[int]:
     """Version ids of the committed ``v=*`` segments under ``root``."""
-    import glob as _glob
-    import os as _os
-
-    out = []
-    for d in _glob.glob(f"{root.removeprefix('file:')}/v=*"):
-        tail = _os.path.basename(d).split("=", 1)[1]
-        if tail.isdigit() and _os.path.exists(_os.path.join(d, "_SUCCESS")):
-            out.append(int(tail))
-    return sorted(out)
+    return sorted(
+        commit.version_id(d)
+        for d in commit.committed(root.removeprefix("file:"), prefixes=("v=",))
+    )
 
 
 def ivf_index_segments(root: str) -> list[str]:
     """Paths of the LIVE committed segments under ``root``: committed
-    (``_SUCCESS``-marked) ``v=*`` dirs with every version BELOW the newest
-    ``_COMPACTED`` segment shadowed — a compacted segment contains every
-    older version by construction, so reading both (possible in the crash
-    window between :func:`ivf_index_compact`'s atomic publish and its
-    input deletes) serves every index row twice, and the top-k
-    ``row_number`` rank would let a duplicated neighbor occupy two of the
-    k slots and evict a true neighbor (round-14 advice).  Serving and
-    compaction both read through this list, which also keeps
-    partially-written segments from a crashed append (no ``_SUCCESS``)
-    out of the plan — partition discovery over the raw root would fold
-    them in silently."""
-    import os as _os
-
+    ``v=*`` dirs with every version BELOW the newest ``_COMPACTED``
+    segment shadowed.  A compacted segment contains every older version,
+    so reading both (the crash window between :func:`ivf_index_compact`'s
+    publish and its input deletes) would serve every index row twice,
+    and a duplicated neighbor would take two of the top-k slots.  Serving
+    and compaction both read through this list, which also keeps a
+    crashed append's unmarked segment out of the plan: partition
+    discovery over the raw root would fold it in silently."""
     base = root.removeprefix("file:")
     versions = ivf_index_versions(root)
     compacted = [
         v
         for v in versions
-        if _os.path.exists(_os.path.join(base, f"v={v}", "_COMPACTED"))
+        if os.path.exists(os.path.join(base, f"v={v}", "_COMPACTED"))
     ]
     floor = max(compacted) if compacted else -1
-    return [_os.path.join(base, f"v={v}") for v in versions if v >= floor]
+    return [os.path.join(base, f"v={v}") for v in versions if v >= floor]
 
 
 def ivf_index_compact(spark, root: str, before: int | None = None) -> int:
     """Fold the committed segments of a persisted IVF index into ONE
-    segment and return the NEXT safe append version — the c-dir
-    compaction recipe (streaming.neardup) for the ANN store: a
-    long-running ingest otherwise accumulates one ``v=<version>`` dir per
-    drop/micro-batch forever, and every probe pays the multi-dir listing
-    and small-file overhead.  Index content is a set of per-vector
-    (id, cell, qvec, qnorm2) rows, so the fold is a pure union — probe
-    results before and after are identical (gate x135 pins this with
-    the from-scratch oracle).
+    segment and return the NEXT safe append version.  A long-running
+    ingest otherwise accumulates one ``v=<version>`` dir per
+    drop/micro-batch, and every probe pays the multi-dir listing and
+    small-file overhead.  Index content is a set of per-vector
+    (id, cell, qvec, qnorm2) rows, so the fold is a pure union and probe
+    results are unchanged (gate x135 pins this with the from-scratch
+    oracle).
 
-    Crash ordering: materialize the merged copy OUTSIDE the root's
-    partition namespace, publish it atomically as ``v=<top+1>`` (a fresh
-    name — rename is atomic; ``ivf_index_update``'s below-max guard keeps
-    future appends above it), only then delete the inputs.  A crash
-    before the rename leaves the old segments intact (the tmp dir is not
-    a ``v=`` dir, so partition discovery never sees it); a crash after it
-    is harmless because BOTH the fold and serving read through
-    :func:`ivf_index_segments`, which shadows every version below the
-    published ``_COMPACTED`` segment — the already-folded inputs are
-    never re-read (re-folding would bake duplicate rows in permanently,
-    and serving them would let a duplicated neighbor evict a true one
-    from the top-k rank — round-14 advice).  The retry path here just
-    finishes the deletes.  At 100 TB the rewrite is also where the
-    cell-clustered file layout would be applied (sort the fold by
-    ``cell`` so probes touch contiguous row groups).
+    The fold follows :mod:`hiveka_spark.commit` with the store's own
+    naming: the merged copy is staged outside the partition namespace,
+    marked ``_COMPACTED`` and published as ``v=<top+1>`` (the
+    below-max guard of :func:`ivf_index_update` keeps future appends
+    above it), then the inputs are deleted.  :func:`ivf_index_segments`
+    shadows the inputs of a crashed fold, and the retry finishes their
+    deletes.  At 100 TB the rewrite is also where a cell-clustered file
+    layout pays off (the fold is sorted by ``cell`` so probes touch
+    contiguous row groups).
 
-    ``before`` is the IN-STREAM safety rule (streaming.neardup's
-    ``before = current batch id``): fold only live versions < ``before``,
-    so a live ingest can compact BETWEEN micro-batches without ever
-    folding the version a checkpoint replay may overwrite.  Stream sinks
-    pair it with spaced append versions (:func:`make_ivf_stream_sink`
-    appends at 2*batch_id + 2) so the fold's ``top + 1`` publish slot is
-    always free — a committed segment already at that slot raises
-    instead of being clobbered."""
-    import os as _os
+    ``before`` is the in-stream replay rule: fold only live versions
+    < ``before``.  Stream sinks pair it with spaced append versions
+    (:func:`make_ivf_stream_sink` appends at 2*batch_id + 2) so the
+    fold's ``top + 1`` publish slot is always free; a committed segment
+    already at that slot raises instead of being clobbered."""
     import shutil as _shutil
 
     base = root.removeprefix("file:")
     versions = ivf_index_versions(root)
     live = ivf_index_segments(root)
-    live_versions = sorted(
-        int(_os.path.basename(d).split("=", 1)[1]) for d in live
-    )
+    live_versions = sorted(commit.version_id(d) for d in live)
     # finish any crashed prior fold's deletes: versions shadowed by a
     # committed _COMPACTED segment are already contained in it
     for v in versions:
         if v not in live_versions:
-            _shutil.rmtree(_os.path.join(base, f"v={v}"), ignore_errors=True)
+            _shutil.rmtree(os.path.join(base, f"v={v}"), ignore_errors=True)
     if before is not None:
         live_versions = [v for v in live_versions if v < before]
-    # the "next safe append version" must clear EVERY committed version,
+    # the next safe append version must clear EVERY committed version,
     # not just the folded ones: with `before` the max committed version
-    # can sit outside the fold set (a replayed batch's own segment), and
-    # returning below it would make an honoring caller raise or clobber
-    # (round-15 review)
+    # can sit outside the fold set (a replayed batch's own segment)
     ceiling = max(versions) if versions else -1
     if len(live_versions) <= 1:
         return ceiling + 1
@@ -1868,23 +1845,18 @@ def ivf_index_compact(spark, root: str, before: int | None = None) -> int:
             "caller's version spacing must leave the fold's top+1 slot "
             "free (make_ivf_stream_sink's even/odd convention)"
         )
-    live = [
-        d
-        for d in live
-        if int(_os.path.basename(d).split("=", 1)[1]) in live_versions
-    ]
-    target = _os.path.join(base, f"v={top + 1}")
-    tmp = _os.path.join(base, "_compact_tmp")
+    live = [d for d in live if commit.version_id(d) in live_versions]
+    tmp = os.path.join(base, "_compact_tmp")
     (
         spark.read.parquet(*live)
         .sort("cell")
         .write.mode("overwrite")
         .parquet(tmp)
     )
-    open(_os.path.join(tmp, "_COMPACTED"), "w").close()
-    _os.rename(tmp, target)
+    open(os.path.join(tmp, "_COMPACTED"), "w").close()
+    commit.publish(tmp, os.path.join(base, f"v={top + 1}"))
     for v in live_versions:
-        _shutil.rmtree(_os.path.join(base, f"v={v}"), ignore_errors=True)
+        _shutil.rmtree(os.path.join(base, f"v={v}"), ignore_errors=True)
     return max(ceiling, top + 1) + 1
 
 
@@ -1896,14 +1868,14 @@ def make_ivf_stream_sink(
     compact_after: int | None = None,
 ):
     """foreachBatch sink for a LIVE IVF index with in-stream compaction
-    (round-14 verdict #5 — s29's append sink x x135's fold, concurrent):
-    each micro-batch appends its vectors as one segment, and when the
-    committed segment count reaches ``compact_after`` the accumulated
-    index folds BETWEEN micro-batches — before the batch's own append,
-    with ``before = this batch's version``, so a checkpoint replay can
-    never find its own segment folded (streaming.neardup's in-stream
-    rule).  Append versions are SPACED (2*batch_id + 2, always even) so
-    the fold's ``top + 1`` publish slot (always odd) can never collide
+    (s29's append sink x x135's fold, concurrent): each micro-batch
+    appends its vectors as one segment, and when the committed segment
+    count reaches ``compact_after`` the accumulated index folds BETWEEN
+    micro-batches — before the batch's own append, with ``before = this
+    batch's version``, so a checkpoint replay can never find its own
+    segment folded (the replay rule of :mod:`hiveka_spark.commit`).
+    Append versions are SPACED (2*batch_id + 2, always even) so the
+    fold's ``top + 1`` publish slot (always odd) can never collide
     with a present or future batch segment — the version-namespace
     discipline the band index gets from its b/c prefixes, done
     arithmetically here because the IVF store is partition-discovered.
@@ -2005,77 +1977,25 @@ def _serve_scores(
 
 def compact_probe_store(spark, probes_root: str, before: int = 10**9) -> None:
     """Fold committed probe segments (``probes/b{id}``, id < ``before``)
-    into ONE compacted segment ``c{top}`` — the wc-store recipe (round-16
-    advice: the probe store was append-only, so a long-running ingest
-    re-listed and re-scanned one dir per prior batch on every old->new
-    join).  Probe content is a SET of frozen per-node rows, so the fold
-    is a pure union; but the old->new join must never see a row twice (a
-    duplicated candidate would take two ranks in the top-k window and
-    evict a true neighbor), so both this fold and the sink's prior-probe
-    read go through :func:`~hiveka_spark.streaming.neardup.
-    wc_committed_versions` — dirs already folded into a committed c-dir
-    are shadowed, never re-read — and the retry path FIRST finishes the
-    deletes a crashed prior fold left behind.  Same in-stream safety rule
-    as every other store: callers pass ``before = current version`` so a
-    checkpoint replay can never find its own segment folded."""
-    import shutil as _shutil
-
-    from hiveka_spark.streaming.neardup import (
-        committed_versions,
-        wc_committed_versions,
+    into one ``c{top}`` segment (:func:`hiveka_spark.commit.fold`), so a
+    long-running ingest does not re-list and re-scan one dir per prior
+    batch on every old->new join.  Probe content is a set of frozen
+    per-node rows, so the fold is a pure union.  The sink's prior-probe
+    read goes through :func:`hiveka_spark.commit.live`: a duplicated
+    candidate would take two ranks in the top-k window and evict a true
+    neighbor."""
+    commit.fold(
+        probes_root,
+        before,
+        lambda dirs, staged: spark.read.parquet(*dirs)
+        .write.mode("overwrite")
+        .parquet(staged),
     )
-
-    all_dirs = committed_versions(probes_root, before)
-    dirs = wc_committed_versions(probes_root, before)
-    for d in set(all_dirs) - set(dirs):
-        # crash-retry: already folded into a committed c-dir — finish the
-        # deletes instead of re-folding (re-reading them alongside the
-        # c-dir would duplicate probe rows and corrupt future top-k merges)
-        _shutil.rmtree(d, ignore_errors=True)
-    if len(dirs) <= 1:
-        return
-    top = max(int(os.path.basename(d)[1:]) for d in dirs)
-    target = os.path.join(probes_root, f"c{top}")
-    if not os.path.exists(target):
-        tmp = os.path.join(probes_root, "_compact_tmp")
-        spark.read.parquet(*dirs).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, target)
-    for d in dirs:
-        if os.path.abspath(d) != os.path.abspath(target):
-            _shutil.rmtree(d, ignore_errors=True)
-
-
-def _cell_edge_versions(cell_dir: str, before: int) -> list[str]:
-    """Committed (``_SUCCESS``-marked) edge versions of ONE home cell."""
-    from hiveka_spark.streaming.neardup import committed_versions
-
-    if not os.path.isdir(cell_dir):
-        return []
-    return committed_versions(cell_dir, before)
-
-
-def _cell_live_dirs(cell_dir: str, before: int) -> list[str]:
-    """LIVE committed edge dirs of one cell: delta ``b{v}`` dirs plus the
-    newest base ``c{v}``, with everything a committed base already folded
-    SHADOWED (the wc-store rule) — reading a folded delta next to its base
-    would duplicate a query's rows and double them in the rank window."""
-    from hiveka_spark.streaming.neardup import wc_committed_versions
-
-    if not os.path.isdir(cell_dir):
-        return []
-    return wc_committed_versions(cell_dir, before)
 
 
 def compact_edge_cell(spark, cell_dir: str, before: int = 10**9) -> None:
-    """Fold one home cell's committed edge dirs (id < ``before``) into a
-    single base ``c{top}`` holding each query's LATEST top-k rows (the
-    per-query max-``_v`` winners — superseded delta rows drop here, which
-    is what bounds both the cell's dir listing and its dead-row volume
-    under a long ingest).  wc-store crash rules: finish a crashed prior
-    fold's deletes first (shadowed dirs are already inside the committed
-    base), publish atomically under the ``c`` prefix, only then delete
-    the folded inputs.  Thin single-cell wrapper over
-    :func:`compact_edge_cells` (one shared fold implementation)."""
+    """Fold one home cell's committed edge dirs (id < ``before``): the
+    single-cell form of :func:`compact_edge_cells`."""
     compact_edge_cells(
         spark,
         os.path.dirname(cell_dir),
@@ -2087,56 +2007,34 @@ def compact_edge_cell(spark, cell_dir: str, before: int = 10**9) -> None:
 def compact_edge_cells(
     spark, edges_root: str, cells: list[int], before: int = 10**9
 ) -> None:
-    """Fold MANY home cells' committed edge dirs in ONE staged Spark job
-    (round-16 verdict #1: :func:`compact_edge_cell` ran one tiny job per
-    folding cell, driver-sequentially — at thousands of cells that
-    serializes a fold round; guide §5 driver round trips / §2.4).
+    """Fold the committed edge dirs (id < ``before``) of every listed home
+    cell into a base ``c{top}`` per cell holding each query's LATEST
+    top-k rows: the per-query max-``_v`` winners.  Superseded delta rows
+    drop here, which bounds both the cell's dir listing and its dead-row
+    volume under a long ingest.
 
-    Per-cell SEMANTICS are compact_edge_cell's exactly — same per-query
-    max-``_v`` winners, same ``c{top}`` naming (top = the cell's own max
-    folded id), same wc-store crash rules — only the JOB SHAPE changes:
-    one read over every folding cell's live dirs, one per-query
-    latest-version filter (sound globally because a query's rows live
-    only in its frozen home cell, so the global window partitions
-    exactly like the per-cell ones), one write partitioned by home cell,
-    then per-cell atomic rename + ``_SUCCESS`` + input deletes.
-
-    Crash windows: a crashed prior STAGING write is discarded up front
-    (nothing was published, all inputs intact — the retry refolds); a
-    crash mid-PUBLISH leaves some cells folded (their c-dir committed,
-    inputs shadowed by wc_committed_versions until the next fold
-    finishes the deletes — the existing rule) and the rest untouched."""
+    All due cells fold in ONE staged Spark job, because one job per cell
+    serializes a fold round at thousands of cells: one read over every
+    folding cell's live dirs, one per-query latest-version filter (sound
+    globally because a query's rows live only in its frozen home cell),
+    one write partitioned by home cell.  Each cell's partition is then
+    published on its own (:func:`hiveka_spark.commit.publish_fold`), so
+    a crash mid-publish leaves some cells folded and the rest untouched;
+    a crashed staging write is discarded up front and refolded."""
     import shutil as _shutil
 
-    fold: list[tuple[str, list[str], int]] = []  # (cell_dir, live_dirs, top)
-    for c in cells:
-        cell_dir = os.path.join(edges_root, f"hc{c}")
-        all_dirs = _cell_edge_versions(cell_dir, before)
-        dirs = _cell_live_dirs(cell_dir, before)
-        for d in set(all_dirs) - set(dirs):
-            # crash-retry: already folded into a committed c-dir — finish
-            # the deletes instead of re-folding (re-reading them alongside
-            # the c-dir would duplicate rows in future top-k merges)
-            _shutil.rmtree(d, ignore_errors=True)
-        if len(dirs) <= 1:
-            continue
-        top = max(int(os.path.basename(d)[1:]) for d in dirs)
-        target = os.path.join(cell_dir, f"c{top}")
-        if os.path.exists(target):
-            # crash-retry: this cell's fold already published atomically;
-            # only its input deletes remained
-            for d in dirs:
-                if os.path.abspath(d) != os.path.abspath(target):
-                    _shutil.rmtree(d, ignore_errors=True)
-            continue
-        fold.append((cell_dir, dirs, top))
-    if not fold:
-        return
     staging = os.path.join(edges_root, "_fold_staging")
     _shutil.rmtree(staging, ignore_errors=True)  # crashed predecessor
+    fold = []  # (cell, live input dirs)
+    for c in cells:
+        inputs = commit.fold_inputs(os.path.join(edges_root, f"hc{c}"), before)
+        if inputs:
+            fold.append((c, inputs))
+    if not fold:
+        return
     w = Window.partitionBy("query_id")
     (
-        spark.read.parquet(*[d for _, dirs, _ in fold for d in dirs])
+        spark.read.parquet(*[d for _, inputs in fold for d in inputs])
         .withColumn("_vm", F.max("_v").over(w))
         .filter(F.col("_v") == F.col("_vm"))
         .drop("_vm")
@@ -2147,16 +2045,8 @@ def compact_edge_cells(
         .partitionBy("hc")
         .parquet(staging)
     )
-    for cell_dir, dirs, top in fold:
-        c = int(os.path.basename(cell_dir)[2:])
-        src = os.path.join(staging, f"hc={c}")
-        target = os.path.join(cell_dir, f"c{top}")
-        if not os.path.isdir(src):  # defensive: no rows staged -> no fold
-            continue
-        os.rename(src, target)
-        open(os.path.join(target, "_SUCCESS"), "w").close()
-        for d in dirs:
-            _shutil.rmtree(d, ignore_errors=True)
+    for c, inputs in fold:
+        commit.publish_fold(os.path.join(staging, f"hc={c}"), inputs)
     _shutil.rmtree(staging, ignore_errors=True)
 
 
@@ -2187,11 +2077,10 @@ def make_knn_graph_sink(
       old nodes are never re-ranked; this store is what lets the
       old->new merge run WITHOUT re-reading source vectors.  Foldable:
       ``compact_probes_after`` bounds the dir listing via
-      :func:`compact_probe_store` (round-16 advice).
+      :func:`compact_probe_store`.
     - ``edges/hc<cell>/{b<version>,c<version>}``: the per-node top-k rows
       (query_id, neighbor_id, cosine, rank, home, _v) PARTITIONED BY HOME
-      CELL, maintained as PER-QUERY DELTAS (round-15 verdict #1, taken to
-      its honest conclusion): a batch writes ONLY the queries it produced
+      CELL, maintained as PER-QUERY DELTAS: a batch writes ONLY the queries it produced
       candidates for — their complete new top-k rows, stamped with the
       batch version — never a full snapshot and never the unchanged
       queries of a touched cell.  Reads (the sink's own prev lookup, the
@@ -2202,10 +2091,10 @@ def make_knn_graph_sink(
       64/64 cells touched at the 10x probe); what stays batch-bounded is
       the INVOLVED-QUERY set, so that is the write unit.  Per cell,
       ``compact_edges_after`` folds deltas into a ``c{v}`` base
-      (:func:`compact_edge_cell` — per-query latest rows, dead rows
-      dropped, wc-store shadowing + crash rules), bounding both the
-      listing and the dead-row volume.  An untouched cell's files are
-      byte-identical across a batch (test-pinned).
+      (:func:`compact_edge_cells` — per-query latest rows, dead rows
+      dropped), bounding both the listing and the dead-row volume.  An
+      untouched cell's files are byte-identical across a batch
+      (test-pinned).
 
     Convergence is the s19 discipline at graph level — a candidate pair
     (q, nb) with nb in a cell q probes is generated EXACTLY ONCE, when
@@ -2221,28 +2110,21 @@ def make_knn_graph_sink(
     with no new candidates keeps its latest rows untouched on disk.
 
     Crash windows: the batch's delta lands in ONE partitioned staging
-    write, then each ``hc=<cell>`` subdir is renamed atomically into
-    ``edges/hc<cell>/b<version>`` and ``_SUCCESS``-marked; a crash
-    mid-publish replays the batch, which recomputes the same rows
-    (static scores; the prev lookup reads only versions < this one) and
-    overwrites by version.  The per-cell fold runs BEFORE the batch's
-    own read with ``before = version`` (the in-stream rule), finishes a
-    crashed predecessor's deletes, and publishes under the ``c`` prefix
-    so no future batch id can collide.
+    write, then each ``hc=<cell>`` subdir is published as
+    ``edges/hc<cell>/b<version>`` (:func:`hiveka_spark.commit.publish`);
+    a crash mid-publish replays the batch, which recomputes the same
+    rows (static scores; the prev lookup reads only versions < this
+    one) and replaces them by version.  The per-cell fold runs BEFORE
+    the batch's own read with ``before = version``.
 
     Scale shape per batch: one broadcast-centroid argmax over the batch,
     two cell-keyed equi-joins (batch-probes x index; prior-probes x
     batch-index — the intrinsic candidate cost, ~ batch x cell
     occupancy), one involved-query merge, and a delta write of
     Theta(involved x k) rows — vs Theta(corpus x k) for the full-rewrite
-    design (the r15 shape; measured side by side in SCALE.md round-16).
+    design (measured side by side in SCALE.md).
     Reads amortize via the per-cell fold cadence."""
     import shutil as _shutil
-
-    from hiveka_spark.streaming.neardup import (
-        committed_versions,
-        wc_committed_versions,
-    )
 
     index_root = os.path.join(state_root, "index")
     probes_root = os.path.join(state_root, "probes")
@@ -2254,7 +2136,7 @@ def make_knn_graph_sink(
         s = batch_df.sparkSession
         version = 2 * batch_id + 2
         if compact_probes_after is not None and (
-            len(committed_versions(probes_root, version))
+            len(commit.committed(probes_root, version))
             >= compact_probes_after
         ):
             compact_probe_store(s, probes_root, before=version)
@@ -2267,7 +2149,7 @@ def make_knn_graph_sink(
         bq = _probe_side(batch_df, centroids, id_col, vec_col, n_probe).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        prior_probes = wc_committed_versions(probes_root, version)
+        prior_probes = commit.live(probes_root, version)
         ivf_index_update(
             s, batch_df, index_root, version, centroids, id_col, vec_col
         )
@@ -2303,19 +2185,13 @@ def make_knn_graph_sink(
                 old.join(batch_cells, "cell", "semi").select("home")
             )
         touched = sorted(r.home for r in homes.distinct().collect())
-        # in-stream fold: bound the listing BEFORE reading prev.  All due
-        # cells fold in ONE staged Spark job (compact_edge_cells; round-16
-        # verdict #1 — the per-cell loop ran one tiny driver-sequential
-        # job per folding cell)
+        # in-stream fold: bound the listing BEFORE reading prev; all due
+        # cells fold in one staged Spark job
         if compact_edges_after is not None:
             due = [
                 c
                 for c in touched
-                if len(
-                    _cell_edge_versions(
-                        os.path.join(edges_root, f"hc{c}"), version
-                    )
-                )
+                if len(commit.committed(os.path.join(edges_root, f"hc{c}"), version))
                 >= compact_edges_after
             ]
             if due:
@@ -2323,7 +2199,7 @@ def make_knn_graph_sink(
         prev_paths: list[str] = []
         for c in touched:
             prev_paths.extend(
-                _cell_live_dirs(os.path.join(edges_root, f"hc{c}"), version)
+                commit.live(os.path.join(edges_root, f"hc{c}"), version)
             )
         # the batch's candidates need merging against each INVOLVED
         # query's latest committed top-k rows only
@@ -2353,19 +2229,16 @@ def make_knn_graph_sink(
             .partitionBy("hc")
             .parquet(staging)
         )
-        # per-cell atomic publish: rename each staged partition into its
-        # cell dir and _SUCCESS-mark it (cells with no rows stage nothing)
+        # per-cell publish of each staged partition (cells with no rows
+        # stage nothing)
         for name in sorted(os.listdir(staging)):
             if not name.startswith("hc="):
                 continue
-            c = int(name.split("=", 1)[1])
-            cell_dir = os.path.join(edges_root, f"hc{c}")
+            cell_dir = os.path.join(edges_root, f"hc{name[3:]}")
             os.makedirs(cell_dir, exist_ok=True)
-            tgt = os.path.join(cell_dir, f"b{version}")
-            if os.path.exists(tgt):  # checkpoint replay: overwrite-by-version
-                _shutil.rmtree(tgt)
-            os.rename(os.path.join(staging, name), tgt)
-            open(os.path.join(tgt, "_SUCCESS"), "w").close()
+            commit.publish(
+                os.path.join(staging, name), os.path.join(cell_dir, f"b{version}")
+            )
         _shutil.rmtree(staging, ignore_errors=True)
         try:
             bq.write.mode("overwrite").parquet(
@@ -2375,12 +2248,6 @@ def make_knn_graph_sink(
             bq.unpersist()
 
     return sink
-
-
-def _version_of(path: str) -> int:
-    import os as _os
-
-    return int(_os.path.basename(path).lstrip("bcv="))
 
 
 def knn_graph_snapshot(spark, state_root: str) -> DataFrame:
@@ -2394,7 +2261,7 @@ def knn_graph_snapshot(spark, state_root: str) -> DataFrame:
         for name in sorted(os.listdir(edges_root)):
             if not (name.startswith("hc") and name[2:].isdigit()):
                 continue
-            paths.extend(_cell_live_dirs(os.path.join(edges_root, name), 10**9))
+            paths.extend(commit.live(os.path.join(edges_root, name), 10**9))
     if not paths:
         raise FileNotFoundError(f"no committed edge snapshot under {state_root}")
     w = Window.partitionBy("query_id")
@@ -2420,11 +2287,9 @@ def ivf_index_topk(
 ) -> DataFrame:
     """IVF top-k served FROM THE PERSISTED INDEX: the corpus side is the
     read-back union of the LIVE committed segments
-    (:func:`ivf_index_segments` — ``_SUCCESS``-checked, versions below a
-    published ``_COMPACTED`` fold shadowed, so neither a half-written
-    append nor a compaction's crash window can duplicate or corrupt
-    served rows) — the source embeddings table never appears in the
-    probe plan.  Same probe/score/rank semantics as :func:`ivf_topk`
+    (:func:`ivf_index_segments`, so neither a half-written append nor a
+    compaction's crash window can duplicate or corrupt served rows) — the
+    source embeddings table never appears in the probe plan.  Same probe/score/rank semantics as :func:`ivf_topk`
     (equi-join on cell, floor-quantized cosine, deterministic ties).
 
     ``broadcast_queries`` (default True) assumes a BOUNDED probe batch —
@@ -2438,7 +2303,7 @@ def ivf_index_topk(
     if not segments:
         raise FileNotFoundError(
             f"ivf_index_topk: no committed index segments under {root!r} "
-            "(expected _SUCCESS-marked v=* dirs written by "
+            "(expected committed v=* dirs written by "
             "ivf_index_update)"
         )
     index = spark.read.parquet(*segments).select(

@@ -24,6 +24,7 @@ import io
 import json
 import struct as _struct
 from collections.abc import Iterator
+from datetime import date, datetime, timedelta, timezone
 from typing import Any
 
 import pandas as pd
@@ -72,6 +73,41 @@ def _read_varint(buf: io.BytesIO) -> int:
 
 
 # --------------------------------------------------------------------------
+# logical types: naive datetimes are UTC (the engine pins the session time
+# zone to UTC, so that is what Spark hands a pandas UDF)
+# --------------------------------------------------------------------------
+
+_EPOCH = datetime(1970, 1, 1)
+_TIME_UNITS = {"timestamp-micros": 1, "timestamp-millis": 1000}
+
+
+def _is_logical_value(logical: str, value: Any) -> bool:
+    if logical in _TIME_UNITS:
+        return isinstance(value, datetime)
+    if logical == "date":
+        return isinstance(value, date) and not isinstance(value, datetime)
+    return False
+
+
+def _to_wire(logical: str, value: Any) -> int:
+    if logical == "date":
+        return (value - _EPOCH.date()).days
+    if value.tzinfo is not None:
+        value = value.astimezone(timezone.utc).replace(tzinfo=None)
+    d = value - _EPOCH
+    micros = (d.days * 86_400 + d.seconds) * 1_000_000 + d.microseconds
+    return micros // _TIME_UNITS[logical]
+
+
+def _from_wire(logical: str, n: Any) -> Any:
+    if logical == "date":
+        return _EPOCH.date() + timedelta(days=n)
+    if logical in _TIME_UNITS:
+        return _EPOCH + timedelta(microseconds=n * _TIME_UNITS[logical])
+    return n
+
+
+# --------------------------------------------------------------------------
 # schema-driven encode/decode
 # --------------------------------------------------------------------------
 
@@ -104,14 +140,16 @@ def _branch_matches(branch: Any, value: Any) -> bool:
     if kind == "array":
         return isinstance(value, (list, tuple))
     if "logicalType" in branch:
-        return _branch_matches(kind, value)
+        return _is_logical_value(branch["logicalType"], value) or _branch_matches(
+            kind, value
+        )
     return False
 
 
 def _encode_value(out: io.BytesIO, schema: Any, value: Any) -> None:
     schema = _norm(schema)
     if isinstance(schema, list):  # union: write branch index, then value
-        if value is None and "null" in schema:
+        if (value is None or value is pd.NaT) and "null" in schema:
             _write_varint(out, schema.index("null"))
             return
         # select the branch by the VALUE's Python type — writing the first
@@ -191,6 +229,8 @@ def _encode_value(out: io.BytesIO, schema: Any, value: Any) -> None:
                 _encode_value(out, schema["values"], v)
         _write_varint(out, 0)
     elif "logicalType" in schema:
+        if _is_logical_value(schema["logicalType"], value):
+            value = _to_wire(schema["logicalType"], value)
         _encode_value(out, kind, value)
     else:
         raise ValueError(f"unsupported Avro schema {schema!r}")
@@ -258,7 +298,7 @@ def _decode_value(buf: io.BytesIO, schema: Any) -> Any:
                 k = _decode_value(buf, "string")
                 out[k] = _decode_value(buf, schema["values"])
     if "logicalType" in schema:
-        return _decode_value(buf, kind)
+        return _from_wire(schema["logicalType"], _decode_value(buf, kind))
     raise ValueError(f"unsupported Avro schema {schema!r}")
 
 

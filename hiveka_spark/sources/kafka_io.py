@@ -40,6 +40,7 @@ from dataclasses import dataclass, field
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hiveka_spark import commit
 from hiveka_spark.schema import avro_json, ddl_to_struct
 from hiveka_spark.sources.avro_codec import decode_avro_df
 
@@ -525,10 +526,7 @@ class OffsetStore:
                 # monotonic: never move a committed offset backwards (the
                 # reference keeps max offset per partition, :489-496)
                 cur[part] = max(int(off), int(cur.get(part, 0)))
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(state, fh, sort_keys=True)
-        os.replace(tmp, self.path)
+        commit.write_json(self.path, state)
 
     def resolve_range(
         self,

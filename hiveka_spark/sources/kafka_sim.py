@@ -27,6 +27,8 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hiveka_spark import commit
+
 WIRE_DDL = (
     "key binary, value binary, topic string, partition int, offset long, "
     "timestamp timestamp, timestampType int"
@@ -52,10 +54,7 @@ class SimBroker:
             return json.load(fh)
 
     def _save_meta(self, topic: str, meta: dict) -> None:
-        tmp = self._meta_path(topic) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh, sort_keys=True)
-        os.replace(tmp, self._meta_path(topic))
+        commit.write_json(self._meta_path(topic), meta)
 
     def create_topic(self, topic: str, partitions: int = 2) -> None:
         os.makedirs(os.path.join(self.root, topic), exist_ok=True)
@@ -190,7 +189,6 @@ class SimBroker:
         self,
         topics: list[str],
         spec: str | dict,
-        default: str,
         fail_on_data_loss: bool,
     ) -> dict[str, dict[str, int]]:
         earliest, latest = self.earliest(), self.latest()
@@ -230,8 +228,8 @@ class SimBroker:
         topics = [t for t in self.topics() if re.fullmatch(subscribe_pattern, t)]
         if not topics:
             return spark.createDataFrame([], WIRE_DDL)
-        start = self._bounds(topics, starting_offsets, "earliest", fail_on_data_loss)
-        end = self._bounds(topics, ending_offsets, "latest", fail_on_data_loss)
+        start = self._bounds(topics, starting_offsets, fail_on_data_loss)
+        end = self._bounds(topics, ending_offsets, fail_on_data_loss)
         bounds = spark.createDataFrame(
             [
                 (t, int(p), start[t][p], end[t][p])

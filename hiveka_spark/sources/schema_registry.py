@@ -22,6 +22,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from hiveka_spark import commit
+
 _PROMOTIONS: dict[str, set[str]] = {
     "int": {"long", "float", "double"},
     "long": {"float", "double"},
@@ -55,11 +57,7 @@ class FileSchemaRegistry:
         """Append a new immutable schema version; returns the version id."""
         os.makedirs(self._dir(topic), exist_ok=True)
         version = (self.versions(topic) or [0])[-1] + 1
-        path = os.path.join(self._dir(topic), f"v{version}.avsc")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(schema, fh, sort_keys=True)
-        os.replace(tmp, path)
+        commit.write_json(os.path.join(self._dir(topic), f"v{version}.avsc"), schema)
         return version
 
     def get(self, topic: str, version: int) -> dict:

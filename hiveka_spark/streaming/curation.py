@@ -282,8 +282,7 @@ class StreamCurationSink:
         ):
             from hiveka_spark.streaming.neardup import compact_band_index
 
-            # before=batch_id: never fold THIS batch's dir (replay safety,
-            # see compact_band_index)
+            # before=batch_id: the replay rule of hiveka_spark.commit
             compact_band_index(s, self.state_root, before=batch_id)
 
 

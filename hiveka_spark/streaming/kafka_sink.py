@@ -24,7 +24,7 @@ the object-store-grade fallback that needs no broker support.
 
 Scale shape: each micro-batch is one map-only Avro encode + one produce —
 no shuffle introduced by the sink itself (``encode_payload`` routes by key
-hash).  The marker check is one ``os.path.exists`` per batch.
+hash).  The marker check is one file stat per batch.
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ import os
 
 from pyspark.sql import DataFrame
 
+from hiveka_spark import commit
 from hiveka_spark.sources.kafka_io import KafkaTableConfig, write_kafka
 
 
@@ -80,15 +81,14 @@ class KafkaStreamSink:
         return os.path.join(self.commit_root, f"b{batch_id}")
 
     def committed_batches(self) -> list[int]:
-        try:
-            names = os.listdir(self.commit_root)
-        except FileNotFoundError:
-            return []
-        return sorted(int(n[1:]) for n in names if n.startswith("b") and n[1:].isdigit())
+        return sorted(
+            commit.version_id(p)
+            for p in commit.committed(self.commit_root, prefixes=("b",))
+        )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         marker = self._marker(batch_id)
-        if os.path.exists(marker):
+        if commit.is_committed(marker):
             # checkpoint-replayed batch that already produced: appending
             # again would duplicate messages in the log — drop it.
             return
@@ -101,5 +101,4 @@ class KafkaStreamSink:
             ts_col=self.ts_col,
             tombstone_col=self.tombstone_col,
         )
-        with open(marker, "w") as fh:
-            fh.write("committed\n")
+        commit.write_json(marker, batch_id)

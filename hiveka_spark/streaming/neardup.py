@@ -35,6 +35,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hiveka_spark import commit
 from hiveka_spark.scratch import scratch_dir
 
 
@@ -81,128 +82,48 @@ def read_bands(
 
 
 def committed_versions(root: str, before: int) -> list[str]:
-    """Committed (``_SUCCESS``-marked) version dirs with id < ``before`` —
-    the disk-derived predecessor rule (the s16 discipline).  Two dir
-    kinds, one namespace of ids: ``b{id}`` per-batch deltas and ``c{id}``
-    compacted base segments (the fold of every version <= id); a c-dir's
-    id is the HIGHEST batch it contains, so the ``id < before`` probe
-    guard applies to both unchanged."""
-    return [
-        os.path.join(root, n)
-        for n in sorted(os.listdir(root))
-        if n[:1] in ("b", "c")
-        and n[1:].isdigit()
-        and int(n[1:]) < before
-        and os.path.exists(os.path.join(root, n, "_SUCCESS"))
-    ]
+    """Committed ``b{id}`` per-batch deltas and ``c{id}`` folded bases with
+    id < ``before`` (:func:`hiveka_spark.commit.committed`).  A c-dir's id
+    is the highest batch it holds, so the ``id < before`` probe guard
+    applies to both kinds unchanged."""
+    return commit.committed(root, before)
 
 
-def wc_committed_versions(root: str, before: int) -> list[str]:
-    """LIVE committed window-count store dirs: :func:`committed_versions`
-    with stale-delta SHADOWING — every dir (``b`` or older ``c``) whose id
-    is <= the max committed c-dir id is dropped unless it IS that c-dir,
-    because a c-dir by construction AGGREGATES every version <= its id.
-
-    Why the wc store needs this and the band index does not: the band
-    probe is distinct-on-pairs, so reading a folded b-dir alongside the
-    c-dir that contains it only duplicates rows it then distincts away.
-    The wc probe SUMS ``cnt`` — in the crash window between
-    :func:`compact_window_counts`' atomic c{top} publish and its input
-    deletes, summing both would double-count every folded window: a
-    window truly seen once gets pcnt=2, the pcnt==1 retro rule in
-    :func:`make_substring_sink` silently skips emitting its stored first
-    occurrence, and the replayed batch overwrites ``starts/b{id}`` with
-    the corrupted result permanently (round-14 advice).  Both the sink's
-    prior probe and the compactor read through this wrapper, so that
-    crash window costs only disk until the next fold finishes the
-    deletes."""
-    dirs = committed_versions(root, before)
-    cids = [
-        int(os.path.basename(d)[1:])
-        for d in dirs
-        if os.path.basename(d).startswith("c")
-    ]
-    if not cids:
-        return dirs
-    mc = max(cids)
-    return [
-        d
-        for d in dirs
-        if int(os.path.basename(d)[1:]) > mc
-        or os.path.basename(d) == f"c{mc}"
-    ]
+#: live window-count store dirs (:func:`hiveka_spark.commit.live`).  The wc
+#: probe SUMS ``cnt``, so a window folded into a c-dir must never be read
+#: again from its input: it would get pcnt=2 and the pcnt==1 retro rule in
+#: :func:`make_substring_sink` would skip its stored first occurrence.
+wc_committed_versions = commit.live
 
 
 def compact_band_index(
     spark: SparkSession, state_root: str, before: int = 10**9
 ) -> None:
-    """Merge committed versions of the band index (and the shingle store)
-    with id < ``before`` into ONE compacted segment ``c{top}`` (top =
-    highest folded id), deleting the inputs.
+    """Fold the committed versions of the band index and the shingle store
+    with id < ``before`` into one ``c{top}`` segment each
+    (:func:`hiveka_spark.commit.fold`; in-stream callers pass ``before =
+    current batch id``).
 
-    The per-batch dirs grow without bound on a long-running ingest (one
-    dir per micro-batch; 8 band rows per doc forever), and each new batch
-    reads ALL of them — at some point the file-listing and small-file
-    overhead dominates the probe.  Index CONTENT is a set of per-doc
-    rows, so the merge is a pure union — probe results before and after
-    are identical (pinned by
+    The per-batch dirs grow without bound on a long-running ingest, and
+    each new batch reads all of them, so the file listing and small files
+    come to dominate the probe.  Index content is a set of per-doc rows,
+    so the fold is a pure union and probe results are unchanged (pinned by
     tests/test_streaming_neardup.py::test_continuation_through_compaction).
-    The bands rewrite is laid out partitioned by ``bh_bucket`` =
+    The bands fold is laid out partitioned by ``bh_bucket`` =
     pmod(bh, :data:`N_BH_BUCKETS`) so probes prune to matching
-    directories (:func:`read_bands`); results are layout-independent.
+    directories (:func:`read_bands`).  Safe between batches of a live
+    stream, because foreachBatch calls are serialized."""
 
-    Safe to run BETWEEN batches of a live stream (foreachBatch calls are
-    serialized — the ``compact_after`` knob of stream_minhash_dedup /
-    StreamCurationSink does exactly this) as well as between runs.  Two
-    rules make it replay-safe:
+    def bands(dirs: list[str], staged: str) -> None:
+        read_bands(spark, dirs).withColumn(
+            "bh_bucket", F.pmod(F.col("bh"), F.lit(N_BH_BUCKETS))
+        ).write.mode("overwrite").partitionBy("bh_bucket").parquet(staged)
 
-    - the compacted segment lives under the ``c`` prefix so a FUTURE
-      batch id can never collide with it (publishing under b{top+1}
-      would be overwritten by the stream's next micro-batch);
-    - in-stream callers pass ``before = current batch id`` so the
-      CURRENT batch's own dir is never folded: folding it would name the
-      segment c{batch_id}, and a checkpoint REPLAY of that batch — whose
-      prior-probe excludes ids >= batch_id — would see an empty index
-      and silently re-emit fewer pairs into its overwritten output.
-      With the guard, a replayed batch probes exactly the segment its
-      first run probed.  (Run the unbounded default only between CLEANLY
-      terminated runs, where no replay can be pending.)
+    def shingles(dirs: list[str], staged: str) -> None:
+        spark.read.parquet(*dirs).write.mode("overwrite").parquet(staged)
 
-    Crash ordering: materialize the merged copy, PUBLISH it atomically as
-    ``c{top}`` (fresh name — rename is atomic), only then delete the
-    inputs.  A crash before the rename leaves the old dirs intact (tmp is
-    invisible to committed_versions); a crash after it leaves duplicate
-    rows, which every consumer tolerates (candidate/pair ``.distinct()``,
-    identical re-verified jaccards), and the retry path detects the
-    published ``c{top}`` and just finishes the deletes — c{top} by
-    construction contains every committed version with id <= top."""
-    import shutil
-
-    for sub in ("bands", "sh"):
-        root = os.path.join(state_root, sub)
-        dirs = committed_versions(root, before)
-        if len(dirs) <= 1:
-            continue
-        top = max(int(os.path.basename(d)[1:]) for d in dirs)
-        target = os.path.join(root, f"c{top}")
-        if not os.path.exists(target):
-            tmp = os.path.join(root, "_compact_tmp")
-            if sub == "bands":
-                # the probed store: lay the fold out partitioned by
-                # bh_bucket so future probes prune directories (the
-                # round-9 "at 100 TB" comment, made real); read_bands
-                # handles the delta/segment layout split on the way in
-                read_bands(spark, dirs).withColumn(
-                    "bh_bucket", F.pmod(F.col("bh"), F.lit(N_BH_BUCKETS))
-                ).write.mode("overwrite").partitionBy("bh_bucket").parquet(tmp)
-            else:
-                spark.read.parquet(*dirs).write.mode("overwrite").parquet(tmp)
-            os.rename(tmp, target)
-        # finish (or retry after a crash-after-publish): every other
-        # committed dir with id <= top is already folded into c{top}
-        for d in dirs:
-            if os.path.abspath(d) != os.path.abspath(target):
-                shutil.rmtree(d)
+    commit.fold(os.path.join(state_root, "bands"), before, bands)
+    commit.fold(os.path.join(state_root, "sh"), before, shingles)
 
 
 def stream_minhash_dedup(
@@ -347,8 +268,7 @@ def stream_minhash_dedup(
             compact_after is not None
             and len(committed_versions(bands_root, 10**9)) >= compact_after
         ):
-            # before=batch_id: never fold THIS batch's dir (replay safety,
-            # see compact_band_index)
+            # before=batch_id: the replay rule of hiveka_spark.commit
             compact_band_index(s, state_root, before=batch_id)
 
     q = (
@@ -465,8 +385,7 @@ def make_substring_sink(state_root: str, min_len: int = 10,
             compact_after is not None
             and len(committed_versions(wc_root, 10**9)) >= compact_after
         ):
-            # before=batch_id: never fold THIS batch's dir (replay safety
-            # — compact_band_index's in-stream rule)
+            # before=batch_id: the replay rule of hiveka_spark.commit
             compact_window_counts(s, state_root, before=batch_id)
 
     return sink
@@ -541,37 +460,14 @@ def compact_window_counts(
     spark: SparkSession, state_root: str, before: int = 10**9
 ) -> None:
     """Fold committed window-count segments (``wc/b{id}``, id < before)
-    into ONE compacted segment ``c{top}`` — :func:`compact_band_index`'s
-    recipe for the substring store, with one difference: the fold
-    AGGREGATES (per window hash: cnt = segment sum, first = min
+    into one ``c{top}`` segment (:func:`hiveka_spark.commit.fold`).  The
+    fold aggregates per window hash (cnt = segment sum, first = min
     (doc, pos) struct) instead of unioning, so the store stays one row
-    per distinct window.  Probe semantics are unchanged exactly because
-    the probe already computes this aggregate over segment rows — cnt
-    sums and the min-struct both commute with the fold (pinned by
-    tests/test_streaming_neardup.py).  Same publish ordering as the band
-    compaction (publish c{top} atomically, pass ``before = current batch
-    id`` mid-stream) — but because summed counts do NOT tolerate the
-    crash window between publish and input deletes the way the band
-    index's distinct-on-pairs probe does, the fold reads through
-    :func:`wc_committed_versions` (dirs already folded into a committed
-    c-dir are shadowed, never re-summed) and FIRST finishes any stale
-    deletes a crashed prior fold left behind."""
-    import shutil
+    per distinct window.  Probe semantics are unchanged because the probe
+    already computes this aggregate over segment rows (pinned by
+    tests/test_streaming_neardup.py)."""
 
-    root = os.path.join(state_root, "wc")
-    all_dirs = committed_versions(root, before)
-    dirs = wc_committed_versions(root, before)
-    for d in set(all_dirs) - set(dirs):
-        # crash-retry: these were folded into the committed c-dir by a
-        # prior compaction that died before its deletes — finish them
-        # (re-folding them would double-count every window permanently)
-        shutil.rmtree(d, ignore_errors=True)
-    if len(dirs) <= 1:
-        return
-    top = max(int(os.path.basename(d)[1:]) for d in dirs)
-    target = os.path.join(root, f"c{top}")
-    if not os.path.exists(target):
-        tmp = os.path.join(root, "_compact_tmp")
+    def aggregate(dirs: list[str], staged: str) -> None:
         (
             spark.read.parquet(*dirs)
             .groupBy("h")
@@ -590,9 +486,7 @@ def compact_window_counts(
                 F.col("first.pos0").alias("first_pos"),
             )
             .write.mode("overwrite")
-            .parquet(tmp)
+            .parquet(staged)
         )
-        os.rename(tmp, target)
-    for d in dirs:
-        if os.path.abspath(d) != os.path.abspath(target):
-            shutil.rmtree(d)
+
+    commit.fold(os.path.join(state_root, "wc"), before, aggregate)

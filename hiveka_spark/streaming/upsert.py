@@ -9,9 +9,9 @@ MERGE-style idempotence without a table format:
 1. **Version key** — a replayed batch id overwrites *its own* version
    directory, never appends, so re-execution cannot double-count.
 2. **Disk-derived predecessor** — the previous-snapshot pointer is
-   re-derived from disk at every batch (newest *committed* ``v{id}`` with
-   ``id < batch_id``; committed = ``_SUCCESS`` marker present), never
-   trusted from driver memory.  After a driver crash + checkpoint replay
+   re-derived from disk at every batch (newest committed ``v{id}`` with
+   ``id < batch_id``, see :mod:`hiveka_spark.commit`), never trusted
+   from driver memory.  After a driver crash + checkpoint replay
    the replayed batch merges from its true predecessor instead of
    silently restarting from empty state.
 
@@ -33,6 +33,8 @@ import os
 from typing import Callable
 
 from pyspark.sql import DataFrame
+
+from hiveka_spark import commit
 
 
 class VersionedUpsertSink:
@@ -67,16 +69,9 @@ class VersionedUpsertSink:
         self._processed_any = False
 
     def _committed_versions(self) -> list[int]:
-        try:
-            names = os.listdir(self.state_root)
-        except FileNotFoundError:
-            return []
         return sorted(
-            int(n[1:])
-            for n in names
-            if n.startswith("v")
-            and n[1:].isdigit()
-            and os.path.exists(os.path.join(self.state_root, n, "_SUCCESS"))
+            commit.version_id(p)
+            for p in commit.committed(self.state_root, prefixes=("v",))
         )
 
     def predecessor_path(self, batch_id: int) -> str | None:

@@ -1399,9 +1399,9 @@ def test_knn_graph_edge_cell_compaction(spark, tmp_path):
 
     import pyspark.sql.functions as FF
 
+    from hiveka_spark import commit
     from hiveka_spark.catalog import table
     from hiveka_spark.operators.similarity import (
-        _cell_live_dirs,
         compact_edge_cell,
         ivf_topk,
         knn_graph_snapshot,
@@ -1430,7 +1430,7 @@ def test_knn_graph_edge_cell_compaction(spark, tmp_path):
         for n in cells
     )
     for n in cells:
-        assert len(_cell_live_dirs(os.path.join(edges, n), 10**9)) <= 4, (
+        assert len(commit.live(os.path.join(edges, n), 10**9)) <= 4, (
             n, os.listdir(os.path.join(edges, n)))
     expected = sorted(
         (r.query_id, r.rank, r.neighbor_id, r.cosine)
@@ -1456,7 +1456,7 @@ def test_knn_graph_edge_cell_compaction(spark, tmp_path):
     )
     ghost = os.path.join(cdir, f"b{top}")
     shutil.copytree(os.path.join(cdir, f"c{top}"), ghost)
-    assert ghost not in _cell_live_dirs(cdir, 10**9), "shadowing failed"
+    assert ghost not in commit.live(cdir, 10**9), "shadowing failed"
     got2 = sorted(
         (r.query_id, r.rank, r.neighbor_id, r.cosine)
         for r in knn_graph_snapshot(spark, str(root)).collect()
@@ -1474,9 +1474,9 @@ def test_compact_edge_cells_one_staged_fold(spark, tmp_path):
 
     import pyspark.sql.functions as FF
 
+    from hiveka_spark import commit
     from hiveka_spark.catalog import table
     from hiveka_spark.operators.similarity import (
-        _cell_live_dirs,
         compact_edge_cells,
         ivf_topk,
         knn_graph_snapshot,
@@ -1505,14 +1505,14 @@ def test_compact_edge_cells_one_staged_fold(spark, tmp_path):
     assert len(cells) > 1, "fixture must produce multiple home cells"
     multi = [
         c for c in cells
-        if len(_cell_live_dirs(os.path.join(edges, f"hc{c}"), 10**9)) > 1
+        if len(commit.live(os.path.join(edges, f"hc{c}"), 10**9)) > 1
     ]
     assert len(multi) > 1, "need >1 cell with >1 live dir to exercise batching"
 
     compact_edge_cells(spark, edges, cells, before=10**9)
 
     for c in cells:
-        live = _cell_live_dirs(os.path.join(edges, f"hc{c}"), 10**9)
+        live = commit.live(os.path.join(edges, f"hc{c}"), 10**9)
         assert len(live) == 1, (c, live)
         if c in multi:
             assert os.path.basename(live[0]).startswith("c"), (c, live)

@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import json
 import tempfile
+from datetime import datetime, timedelta
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 import pytest
 
 from hiveka_spark.sources import producers as P
@@ -72,8 +74,19 @@ def test_register_view_and_query(spark):
     broker = _broker()
     broker.create_topic("tweets", partitions=2)
     rows = P.fake_tweets(30, seed=9, base_ts=1_700_000_000)
-    cfg = _tweet_cfg()
-    write_kafka(P.typed_df(spark, P.TWEET_SCHEMA, rows), cfg, "tweets", broker=broker)
+    # TIMESTAMP and DATE columns ride the Avro logical types
+    # timestamp-micros and date; a null of each must round-trip too
+    for i, r in enumerate(rows):
+        ts = datetime(1970, 1, 1) + timedelta(seconds=r["timestamp"], microseconds=i)
+        r["ts"], r["d"] = (None, None) if i == 0 else (ts, ts.date())
+    schema = T.StructType(
+        P.TWEET_SCHEMA.fields
+        + [T.StructField("ts", T.TimestampType()), T.StructField("d", T.DateType())]
+    )
+    cfg = _tweet_cfg(
+        ddl="username STRING, text STRING, timestamp BIGINT, ts TIMESTAMP, d DATE"
+    )
+    write_kafka(P.typed_df(spark, schema, rows), cfg, "tweets", broker=broker)
     register_kafka_table(spark, "sim_tweets", cfg, broker=broker)
     per_user = {
         r["username"]: r["n"]
@@ -85,6 +98,12 @@ def test_register_view_and_query(spark):
     for r in rows:
         want[r["username"]] = want.get(r["username"], 0) + 1
     assert per_user == want
+    got = sorted(
+        ((r["text"], r["ts"], r["d"])
+         for r in spark.sql("SELECT text, ts, d FROM sim_tweets").collect()),
+        key=repr,
+    )
+    assert got == sorted(((r["text"], r["ts"], r["d"]) for r in rows), key=repr)
 
 
 def test_topic_pattern_subscription(spark):

@@ -30,10 +30,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from hiveka_spark.catalog import table
+from hiveka_spark.commit import version_id
 from hiveka_spark.operators.similarity import (
     _probe_side,
     _serve_scores,
-    _version_of,
     ivf_index_segments,
     ivf_index_update,
     knn_graph_snapshot,
@@ -124,7 +124,7 @@ def legacy_sink(state_root, batch_df, batch_id):
     merged = cands
     if prev_dirs:
         merged = merged.unionByName(
-            s.read.parquet(max(prev_dirs, key=_version_of)).select(
+            s.read.parquet(max(prev_dirs, key=version_id)).select(
                 "query_id", "neighbor_id", "cosine"
             )
         )
@@ -139,7 +139,7 @@ def legacy_sink(state_root, batch_df, batch_id):
         os.path.join(probes_root, f"b{version}")
     )
     if len(prev_dirs) > 1:
-        keep = max(prev_dirs, key=_version_of)
+        keep = max(prev_dirs, key=version_id)
         for d in prev_dirs:
             if d != keep:
                 shutil.rmtree(d, ignore_errors=True)
@@ -176,7 +176,7 @@ snap_l = sorted(
     (r.query_id, r.rank, r.neighbor_id, r.cosine)
     for r in spark.read.parquet(
         max(committed_versions(os.path.join(leg_root, "edges"), 10**9),
-            key=_version_of)
+            key=version_id)
     ).select("query_id", "rank", "neighbor_id", "cosine").collect()
 )
 print("snapshots equal:", snap_p == snap_l, f"({len(snap_p)} edges)")
