@@ -36,6 +36,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from hiveka_spark.operators.text import tokens
+from hiveka_spark.sqlexpr import qident
 
 # ---------------------------------------------------------------------------
 # Byte-exact (normalize=False) pre-tokenizer — the SentencePiece marker
@@ -677,7 +678,7 @@ def bpe_apply_fast(
     id_type = docs.schema[id_col].dataType.simpleString()
     return docs.select(
         F.col(id_col), F.lower(F.col(text_col)).alias(text_col)
-    ).mapInPandas(run, f"{id_col} {id_type}, n_bpe_tokens bigint")
+    ).mapInPandas(run, f"{qident(id_col)} {id_type}, n_bpe_tokens bigint")
 
 
 _DIGEST_MOD = 2147483647  # 2^31 - 1, shared with sampling.rolling_digest
@@ -878,7 +879,7 @@ def bpe_encode(
     text_expr = F.lower(F.col(text_col)) if normalize else F.col(text_col)
     return docs.select(
         F.col(id_col), text_expr.alias(text_col)
-    ).mapInPandas(run, f"{id_col} {id_type}, n_tokens bigint, ids_digest bigint")
+    ).mapInPandas(run, f"{qident(id_col)} {id_type}, n_tokens bigint, ids_digest bigint")
 
 
 def bpe_encode_ids(
@@ -962,7 +963,7 @@ def bpe_encode_ids(
 
     id_type = docs.schema[id_col].dataType.simpleString()
     keep_schema = "".join(
-        f", {c} {docs.schema[c].dataType.simpleString()}" for c in keep_cols
+        f", {qident(c)} {docs.schema[c].dataType.simpleString()}" for c in keep_cols
     )
     text_expr = F.lower(F.col(text_col)) if normalize else F.col(text_col)
     return docs.select(
@@ -970,7 +971,7 @@ def bpe_encode_ids(
         *[F.col(c) for c in keep_cols],
         text_expr.alias(text_col),
     ).mapInPandas(
-        run, f"{id_col} {id_type}{keep_schema}, ids array<bigint>"
+        run, f"{qident(id_col)} {id_type}{keep_schema}, ids array<bigint>"
     )
 
 
@@ -1051,11 +1052,13 @@ def bpe_decode_ids(
 
     id_type = df.schema[id_col].dataType.simpleString()
     keep_schema = "".join(
-        f", {c} {df.schema[c].dataType.simpleString()}" for c in keep_cols
+        f", {qident(c)} {df.schema[c].dataType.simpleString()}" for c in keep_cols
     )
     return df.select(
         F.col(id_col), *[F.col(c) for c in keep_cols], F.col(ids_col)
-    ).mapInPandas(run, f"{id_col} {id_type}{keep_schema}, {out_col} string")
+    ).mapInPandas(
+        run, f"{qident(id_col)} {id_type}{keep_schema}, {qident(out_col)} string"
+    )
 
 
 #: the full pre-tokenizer contract, one string: 'normalized' = lowercase +

@@ -28,6 +28,8 @@ from collections.abc import Iterator
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from hiveka_spark.sqlexpr import bigint_array_lit, qident
+
 MERSENNE31 = 2147483647  # 2^31 - 1
 
 # ---------------------------------------------------------------------------
@@ -113,11 +115,12 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
 
 def ngrams_from_tokens_sql(ws: str, k: int = 3) -> str:
     """SQL text of :func:`ngrams_from_tokens` over a token-array expression
-    given as SQL — the whole shifted-slice zip_with chain arrives as ONE
-    parsed string instead of ~2k py4j Column calls (r16, guide §5: the
-    shingle builders run per gate and per micro-batch in the streaming
-    minhash sinks; resolved expressions identical)."""
+    given as SQL."""
     n = f"greatest(size({ws}), 1)"
+    # acc[i] = ws[i] + ' ' + ws[i+1] + ... ; zip_with pads the shorter side
+    # with NULL and concat propagates it, so trailing partial grams become
+    # NULL and are filtered out, leaving exactly n-k+1 grams; a doc shorter
+    # than k is one gram of the whole text
     acc = ws
     for j in range(1, k):
         acc = (
@@ -130,10 +133,9 @@ def ngrams_from_tokens_sql(ws: str, k: int = 3) -> str:
     )
 
 
-def ngrams_from_tokens(ws: Column | str, k: int = 3) -> Column:
-    """Word k-grams (duplicates kept, document order) from a token-array
-    column (JVM-side).  A ``str`` argument is taken as the SQL text of the
-    token-array expression and composes via :func:`ngrams_from_tokens_sql`.
+def ngrams_from_tokens(ws: str, k: int = 3) -> Column:
+    """Word k-grams (duplicates kept, document order) of the token-array
+    column ``ws`` (JVM-side).
 
     Built with zip_with over shifted slices, NOT transform(sequence, i ->
     element_at(ws, i+j)): a lambda that captures `ws` embeds the whole
@@ -141,43 +143,25 @@ def ngrams_from_tokens(ws: Column | str, k: int = 3) -> Column:
     per row).  zip_with arguments are plain row-level expressions, evaluated
     once per row — ~30x faster on real documents.
 
-    IMPORTANT: pass a plain *column reference* to an already-projected token
-    array, not the tokenizer expression itself — Spark does no common-
-    subexpression elimination across the ~2k+1 references this builder makes,
-    so an inline split/lower/filter subtree would run 2k+1 times per row
-    (~3x slower end-to-end at k=3).  word_ngrams()/word_shingles() below
-    exist for single-shot convenience; multi-pass operators project tokens
-    first (see _shingle_sets).
+    ``ws`` is a column NAME, not the tokenizer expression itself: Spark
+    does no common-subexpression elimination across the ~2k+1 references
+    this builder makes, so an inline split/lower/filter subtree would run
+    2k+1 times per row (~3x slower end-to-end at k=3).  word_ngrams()/
+    word_shingles() below exist for single-shot convenience; multi-pass
+    operators project tokens first (see _shingle_sets).
     """
-    if isinstance(ws, str):
-        return F.expr(ngrams_from_tokens_sql(ws, k))
-    n = F.size(ws)
-    # acc[i] = ws[i] + ' ' + ws[i+1] + ... ; zip_with pads the shorter side
-    # with NULL and concat propagates it, so trailing partial grams become
-    # NULL and are filtered out, leaving exactly n-k+1 grams.
-    acc = ws
-    for j in range(1, k):
-        acc = F.zip_with(
-            acc,
-            F.slice(ws, j + 1, F.greatest(n, F.lit(1))),
-            lambda x, y: F.concat(x, F.lit(" "), y),
-        )
-    grams = F.filter(acc, lambda g: g.isNotNull())
-    # degenerate short docs: single gram of the whole text
-    return F.when(n >= k, grams).otherwise(F.array(F.concat_ws(" ", ws)))
+    return F.expr(ngrams_from_tokens_sql(qident(ws), k))
 
 
-def word_ngrams(text_col: Column | str, k: int = 3) -> Column:
-    """Word k-grams of lowercased text, duplicates kept (JVM-side)."""
-    if isinstance(text_col, str):
-        from hiveka_spark.operators.text import tokens_sql
+def word_ngrams(text_col: str, k: int = 3) -> Column:
+    """Word k-grams of lowercased text in column ``text_col``, duplicates
+    kept (JVM-side)."""
+    from hiveka_spark.operators.text import tokens_sql
 
-        return F.expr(ngrams_from_tokens_sql(tokens_sql(text_col), k))
-    ws = F.filter(F.split(F.lower(text_col), " "), lambda w: w != F.lit(""))
-    return ngrams_from_tokens(ws, k)
+    return F.expr(ngrams_from_tokens_sql(tokens_sql(qident(text_col)), k))
 
 
-def word_shingles(text_col: Column | str, k: int = 3) -> Column:
+def word_shingles(text_col: str, k: int = 3) -> Column:
     """Distinct word k-gram shingles of lowercased text (JVM-side)."""
     return F.array_distinct(word_ngrams(text_col, k))
 
@@ -473,21 +457,12 @@ def jaccard_pairs_sql(
               WHERE {q} >= {threshold})"""
 
 
-def bloom_positions(shingle: Column, n_hashes: int, m_bits: int) -> list[Column]:
-    """The ``n_hashes`` bit positions of a shingle in an ``m_bits`` Bloom
-    filter — portable_hash60 of a per-hash-salted shingle, mod m.  Engine-
-    portable (md5), so a SQL oracle replays every position, hence every
-    false positive."""
-    return [
-        F.pmod(portable_hash60(F.concat(F.lit(f"bloom{i}_"), shingle)), F.lit(m_bits))
-        for i in range(n_hashes)
-    ]
-
-
 def bloom_positions_spark_sql(expr: str, n_hashes: int, m_bits: int) -> list[str]:
-    """:func:`bloom_positions` as Spark SQL text (one parsed string per
-    position instead of a ~8-call py4j chain — r16 guide §5; the probe
-    runs per micro-batch in s20)."""
+    """The ``n_hashes`` bit positions of a shingle in an ``m_bits`` Bloom
+    filter, as Spark SQL text over the shingle expression ``expr`` — the
+    portable_hash60 of a per-hash-salted shingle, mod m.  Engine-portable
+    (md5), so a SQL oracle (:func:`bloom_positions_sql`) replays every
+    position, hence every false positive."""
     return [
         f"pmod(CAST(conv(substring(md5(CAST(concat('bloom{i}_', {expr})"
         f" AS STRING)), 1, 15), 16, 10) AS BIGINT), {m_bits})"
@@ -496,7 +471,7 @@ def bloom_positions_spark_sql(expr: str, n_hashes: int, m_bits: int) -> list[str
 
 
 def bloom_positions_sql(expr: str, n_hashes: int, m_bits: int) -> list[str]:
-    """DuckDB twins of :func:`bloom_positions`."""
+    """DuckDB twins of :func:`bloom_positions_spark_sql`."""
     out = []
     for i in range(n_hashes):
         salted = f"concat('bloom{i}_', {expr})"
@@ -583,13 +558,11 @@ def build_bloom_bitset(
         words[p // 64] |= 1 << (p % 64)
     # ONE parsed SQL array literal: F.lit(list) expands to one py4j
     # Column call PER ELEMENT (m_bits/64 = 4096 round trips, measured
-    # 2.8 s per build — and the streaming gates build a bitset per run);
-    # the parsed text is a single call and the resolved literal is
-    # identical (r17, guide §5)
-    vals = ",".join(
-        f"{w - (1 << 64) if w >= (1 << 63) else w}L" for w in words
+    # 2.8 s per build, and the streaming gates build a bitset per run).
+    # Words are unsigned 64-bit; the literal holds their signed twins.
+    return F.expr(
+        bigint_array_lit(w - (1 << 64) if w >= (1 << 63) else w for w in words)
     )
-    return F.expr(f"array({vals})")
 
 
 def bloom_probe(
@@ -772,9 +745,8 @@ def minhash_signatures(
     h = F.pmod(portable_hash60("s"), F.lit(MERSENNE31)).alias("h")
     hashed = sh.select("doc", h)
     # each per-permutation MIN arrives as ONE parsed SQL string instead of
-    # a ~6-call py4j Column chain (r16, guide §5 driver work: this builder
-    # runs per gate and per micro-batch in the streaming sinks; the
-    # resolved expressions are identical)
+    # a ~6-call py4j Column chain: this builder runs per gate and per
+    # micro-batch in the streaming sinks
     mins = [
         F.expr(f"MIN(pmod(h * {a} + {b}, {MERSENNE31})) AS m{i}")
         for i, (a, b) in enumerate(coeffs)
@@ -809,9 +781,9 @@ def minhash_band_rows(
         if signature_df is not None
         else minhash_signatures(df, id_col, text_col, num_perm, k, reuse, shingle_df)
     )
-    # the whole band/bucket expression arrives as ONE parsed SQL string
-    # (r16, guide §5): SQL `signature[i]` is 0-based like Column.getItem,
-    # and the hash matches portable_hash60 textually (md5/substring/conv)
+    # the whole band/bucket expression arrives as ONE parsed SQL string:
+    # SQL `signature[i]` is 0-based like Column.getItem, and the hash
+    # matches portable_hash60 textually (md5/substring/conv)
     structs = ", ".join(
         f"struct({bi} AS band, "
         "CAST(conv(substring(md5(CAST(concat_ws('_', "
@@ -888,10 +860,9 @@ def simhash(
     signature in int range; the bit-vote sums are computed as one aggregate
     of +/-1 contributions per bit — explode + single shuffle)."""
     toks = F.filter(F.split(F.lower(text_col), " "), lambda w: w != F.lit(""))
-    # expressions compose as parsed SQL strings (r16, guide §5 — the
-    # change-6 treatment: ~500 py4j round trips -> ~40), and the hash is
-    # projected ONCE per token row instead of appearing inside all
-    # ``bits`` vote aggregates
+    # expressions compose as parsed SQL strings (~40 py4j round trips
+    # instead of ~500), and the hash is projected ONCE per token row
+    # instead of appearing inside all ``bits`` vote aggregates
     t = df.select(F.col(id_col).alias("doc"), F.explode(toks).alias("w")).select(
         "doc",
         F.expr(

@@ -24,6 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from hiveka_spark.operators.dedup import portable_hash60, portable_hash60_sql
+from hiveka_spark.sqlexpr import qident
 
 
 def sample_bucket(id_col: Column | str, n_buckets: int = 100) -> Column:
@@ -397,7 +398,7 @@ def segmented_order_digest(
     """
     spark = df.sparkSession
     group_cols = [group_col] if isinstance(group_col, str) else list(group_col)
-    seg = F.expr(f"CAST(({pos_col} - 1) DIV {seg_size} AS BIGINT)")
+    seg = F.expr(f"CAST(({qident(pos_col)} - 1) DIV {seg_size} AS BIGINT)")
     segs = (
         df.groupBy(*[F.col(g) for g in group_cols], seg.alias("_seg"))
         .agg(
@@ -462,7 +463,7 @@ def composed_order_digest(
         f"{len_col} bigint, _pw bigint",
     )
     t = df.join(F.broadcast(pow_tbl), len_col)
-    seg = F.expr(f"CAST(({pos_col} - 1) DIV {seg_size} AS BIGINT)")
+    seg = F.expr(f"CAST(({qident(pos_col)} - 1) DIV {seg_size} AS BIGINT)")
     segs = t.groupBy(*[F.col(g) for g in group_cols], seg.alias("_seg")).agg(
         F.aggregate(
             F.array_sort(F.collect_list(F.struct(pos_col, dig_col, "_pw"))),

@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from hiveka_spark import commit
+from hiveka_spark.sqlexpr import bigint_array_lit, qident
 
 QUANT = 10000  # fixed-point scale for engine-exact cosine
 
@@ -50,8 +51,9 @@ def _scan_parallelism(df: DataFrame, target: int) -> int:
     return df.rdd.getNumPartitions()
 
 
-def quantized(col: Column | str) -> Column:
-    """array<float> -> array<bigint> fixed-point at 1e-4 resolution.
+def quantized(col: str) -> Column:
+    """array<float> column ``col`` -> array<bigint> fixed-point at 1e-4
+    resolution.
 
     The component is cast to DOUBLE before the multiply: float32 * int runs
     in float32, where x * 1e4 can land within half an ulp of a .5 boundary
@@ -59,19 +61,10 @@ def quantized(col: Column | str) -> Column:
     -0.042849998921 -> float32 product exactly -428.5 -> HALF_UP -429, vs
     the double product -428.49998921 -> -428).  Every SQL oracle promotes
     float to double before arithmetic, so double-first is the portable
-    semantic.
-
-    String inputs build the transform as ONE parsed SQL expression instead
-    of a py4j lambda-column chain (r16, guide §5 driver work: the ANN
-    gates construct this dozens of times; each py4j Column op is a driver
-    round trip, while F.expr is a single call parsed JVM-side)."""
-    if isinstance(col, str):
-        return F.expr(
-            f"transform({col}, x -> "
-            f"CAST(round(CAST(x AS DOUBLE) * {QUANT}, 0) AS BIGINT))"
-        )
-    return F.transform(
-        col, lambda x: F.round(x.cast("double") * QUANT, 0).cast("bigint")
+    semantic."""
+    return F.expr(
+        f"transform({qident(col)}, x -> "
+        f"CAST(round(CAST(x AS DOUBLE) * {QUANT}, 0) AS BIGINT))"
     )
 
 
@@ -79,10 +72,7 @@ def with_quantized_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     # qnorm2 references the qvec COLUMN: CollapseProject keeps the two
     # Projects separate (qvec is referenced twice and non-cheap), so qvec
     # is computed ONCE per row instead of being inlined into qnorm2 — the
-    # extra Project fuses into the same WholeStageCodegen span (plan diff
-    # pinned in plans/r16/x06/x15: joins/exchanges identical, +Project
-    # only).  Both expressions arrive as two parsed SQL strings, not ~10
-    # driver calls (r16, guide §5).
+    # extra Project fuses into the same WholeStageCodegen span
     return df.withColumn("qvec", quantized(vec_col)).withColumn(
         "qnorm2",
         F.expr(
@@ -93,82 +83,52 @@ def with_quantized_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 
 
 def dot_sql(a: str, b: str) -> str:
-    """Integer dot product of two array<bigint> columns as SQL text — the
-    same aggregate(zip_with(...)) runtime expression :func:`cosine_expr`
-    builds, but composed as ONE parsed string (r16, guide §5 driver work:
-    one py4j call instead of a lambda-column chain per call site).  An
-    unrolled element_at expansion was tried and measured ~2x SLOWER at
-    runtime than the higher-order form on the x139 candidate join (64
+    """Integer dot product of two array<bigint> SQL expressions as SQL
+    text.  An unrolled element_at expansion was measured ~2x SLOWER at
+    runtime than this higher-order form on the x139 candidate join (64
     bounds/null checks per side beat the primitive-array loop), so the
-    zip_with form stays."""
+    zip_with form stays; the per-ROW unpack of :func:`_unpack_qv_sql` is
+    what removes the interpreted per-pair fold."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     )
 
 
-def l2_sql(a: str, b: str) -> str:
-    """Squared-L2 twin of :func:`dot_sql` — same runtime expression as
-    the F.aggregate/F.zip_with chain, one parsed string."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-
-
 def cosine_sql(qa: str, qb: str, na2: str, nb2: str) -> Column:
-    """cos = dot/(sqrt*sqrt) — bit-identical to :func:`cosine_expr` (same
-    integer dot, same double division), built as one parsed string."""
+    """cos = dot(qa, qb) / (sqrt(na2) * sqrt(nb2)) over quantized arrays
+    and their bigint squared norms: an all-integer dot and one double
+    division, so the value is deterministic and engine-exact."""
     return F.expr(f"{dot_sql(qa, qb)} / (SQRT({na2}) * SQRT({nb2}))")
 
 
-def cosine_expr(qa: Column, qb: Column, na2: Column, nb2: Column) -> Column:
-    """cos = dot(qa,qb) / (sqrt(na2)*sqrt(nb2)) — all-int dot, deterministic."""
-    dot = F.aggregate(
-        F.zip_with(qa, qb, lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    return dot / (F.sqrt(na2.cast("double")) * F.sqrt(nb2.cast("double")))
-
-
 #: Embedding dimensionality of the scoring surfaces — the scalar-unpacked
-#: scoring joins (see :func:`_unpack_qv`) extract exactly this many
+#: scoring joins (see :func:`_unpack_qv_sql`) extract exactly this many
 #: components per side.
 SCORE_DIM = 64
 
 
-def _unpack_qv(arr: str, prefix: str, dim: int = SCORE_DIM) -> list[Column]:
-    """One scalar bigint column per vector component, extracted ONCE PER
-    ROW before a scoring join (r16, guide §4 boundary/§2.4): the
-    aggregate(zip_with(...)) dot product is an INTERPRETED higher-order
-    function evaluated once per candidate PAIR — at candidates-per-query ~
-    corpus*n_probe/n_cells that is the dominant executor cost of every
-    bulk ANN join.  Over scalar columns the pair dot compiles to plain
-    whole-stage-codegen multiply-adds (the same trick _pq_subvectors
-    documents for the encode join, ~5x there).  Unrolling element_at at
-    the PAIR level was measured ~2x slower (dot_sql's note) — the win
-    comes from paying the per-component extraction once per ROW, never
-    per pair.
+def _unpack_qv_sql(arr: str, prefix: str, dim: int = SCORE_DIM) -> list[str]:
+    """One scalar bigint column per vector component, as ``expr AS alias``
+    SQL strings for one ``selectExpr`` call, extracted ONCE PER ROW before
+    a scoring join: the aggregate(zip_with(...)) dot product is an
+    INTERPRETED higher-order function evaluated once per candidate PAIR —
+    at candidates-per-query ~ corpus*n_probe/n_cells that is the dominant
+    executor cost of every bulk ANN join.  Over scalar columns the pair
+    dot compiles to plain whole-stage-codegen multiply-adds (the same
+    trick _pq_subvectors documents for the encode join, ~5x there).
+    Unrolling element_at at the PAIR level was measured ~2x slower
+    (dot_sql's note) — the win comes from paying the per-component
+    extraction once per ROW, never per pair.
 
     ``dim`` must match the vectors (callers with non-default dims pass it
     explicitly, like the PQ seams).  A mismatch fails LOUDLY either way —
     shorter AND longer arrays hit the size guard's raise_error on the
     last component; without the guard a longer vector would silently
     score on its first ``dim`` components only.  NULL arrays stay NULL
-    (the explicit IS NULL arm — config-independent, unlike the previous
-    ``size(NULL) = -1`` probe which flips to NULL under ANSI mode;
-    round-16 advice), as the interpreted zip_with form did."""
-    return [F.expr(s) for s in _unpack_qv_sql(arr, prefix, dim)]
-
-
-def _unpack_qv_sql(arr: str, prefix: str, dim: int = SCORE_DIM) -> list[str]:
-    """:func:`_unpack_qv` as ``expr AS alias`` SQL strings for
-    ``selectExpr`` — the scoring surfaces pass the whole component list in
-    ONE varargs py4j call instead of ``dim`` separate ``F.expr`` round
-    trips (r16 third session: 8 unpack invocations cost 1.4 s of pure
-    driver latency in x84's profile, and _serve_scores pays two per
-    micro-batch in the streaming IVF sinks)."""
+    (the explicit IS NULL arm is config-independent, unlike a
+    ``size(NULL) = -1`` probe, which flips to NULL under ANSI mode), as
+    the interpreted zip_with form did."""
     cols = [
         f"element_at({arr}, {i + 1}) AS {prefix}{i}" for i in range(dim - 1)
     ]
@@ -197,8 +157,9 @@ def scalar_cosine_floor(
 
 def scalar_l2(ap: str, bp: str, dim: int = SCORE_DIM) -> Column:
     """Bigint squared-L2 over scalar component columns — bit-identical to
-    ``l2_sql`` (integer arithmetic, associative), codegen'd instead of
-    interpreted per pair (see :func:`_unpack_qv`)."""
+    the zip_with fold of :func:`_cell_scored_arr_sql` (integer arithmetic,
+    associative), codegen'd instead of interpreted per pair (see
+    :func:`_unpack_qv_sql`)."""
     return F.expr(
         " + ".join(f"({ap}{i} - {bp}{i}) * ({ap}{i} - {bp}{i})" for i in range(dim))
     ).cast("bigint")
@@ -217,15 +178,14 @@ def brute_force_topk(
 
     Output: query_id, neighbor_id, cosine (floor-quantized 4dp), rank.
     """
-    # scalar-unpacked scoring (r16, see _unpack_qv): per-pair cosine is
-    # codegen'd multiply-adds, extraction paid once per row; the whole
-    # component list rides ONE selectExpr call (see _unpack_qv_sql)
+    # scalar-unpacked scoring (see _unpack_qv_sql): per-pair cosine is
+    # codegen'd multiply-adds, extraction paid once per row
     c = with_quantized_norm(corpus, vec_col).selectExpr(
-        f"`{id_col}` AS neighbor_id", "qnorm2 AS cn2",
+        f"{qident(id_col)} AS neighbor_id", "qnorm2 AS cn2",
         *_unpack_qv_sql("qvec", "c_", dim),
     )
     q = with_quantized_norm(queries, vec_col).selectExpr(
-        f"`{id_col}` AS query_id", "qnorm2 AS qn2",
+        f"{qident(id_col)} AS query_id", "qnorm2 AS qn2",
         *_unpack_qv_sql("qvec", "q_", dim),
     )
     scored = (
@@ -258,48 +218,22 @@ def plane_weights(n_planes: int, dim: int, tag: str = "") -> list[list[int]]:
     ]
 
 
-def lsh_bucket(qvec_col: Column | str, n_planes: int, dim: int, tag: str = "") -> Column:
+def lsh_bucket(qvec_col: str, n_planes: int, dim: int, tag: str = "") -> Column:
     """Sign-bit bucket id from deterministic hyperplanes over the QUANTIZED
-    vector: dot products are exact bigint arithmetic (|qv| <= 1e4ish, |w| <=
-    500, dim 64 => |dot| < 2^30), so the bucket is order- and
-    engine-independent.
-
-    Composed as ONE parsed SQL string (r17, guide §5): the previous
-    `F.lit(<nested python list>)` form expanded to one py4j Column call
-    per element — n_planes*dim + n_planes round trips per invocation,
-    ~0.24 s each at (16, 64), and lsh_neardup_pairs builds n_tables of
-    them per gate (1.9 s of pure driver latency in x05's profile).  The
-    resolved literals and the fold are identical."""
-    if isinstance(qvec_col, Column):  # no SQL name to splice — legacy path
-        planes = F.lit(plane_weights(n_planes, dim, tag)).cast(
-            "array<array<bigint>>"
-        )
-        pows = F.lit([2**p for p in range(n_planes)]).cast("array<bigint>")
-        dots = F.transform(
-            planes,
-            lambda w: F.aggregate(
-                F.zip_with(qvec_col, w, lambda a, b: a * b),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ),
-        )
-        bits = F.zip_with(
-            dots,
-            pows,
-            lambda d, pw: F.when(d > 0, pw).otherwise(F.lit(0).cast("bigint")),
-        )
-        return F.aggregate(bits, F.lit(0).cast("bigint"), lambda acc, x: acc + x)
-    qvec = f"`{qvec_col}`"
-    planes_sql = "array(" + ", ".join(
-        "array(" + ",".join(f"{int(c)}L" for c in w) + ")"
-        for w in plane_weights(n_planes, dim, tag)
+    vector column ``qvec_col``: dot products are exact bigint arithmetic
+    (|qv| <= 1e4ish, |w| <= 500, dim 64 => |dot| < 2^30), so the bucket is
+    order- and engine-independent.  Bit p is set iff the dot with plane p
+    of :func:`plane_weights` is > 0.  The planes and the bit weights are
+    array literals inside the parsed expression, one plan node each."""
+    planes = "array(" + ", ".join(
+        bigint_array_lit(w) for w in plane_weights(n_planes, dim, tag)
     ) + ")"
-    pows_sql = "array(" + ",".join(f"{2**p}L" for p in range(n_planes)) + ")"
+    pows = bigint_array_lit(2**p for p in range(n_planes))
     return F.expr(
-        f"aggregate(zip_with(transform({planes_sql}, "
-        f"w -> aggregate(zip_with({qvec}, w, (a, b) -> a * b), "
+        f"aggregate(zip_with(transform({planes}, "
+        f"w -> aggregate(zip_with({qident(qvec_col)}, w, (a, b) -> a * b), "
         "CAST(0 AS BIGINT), (acc, x) -> acc + x)), "
-        f"{pows_sql}, (d, pw) -> CASE WHEN d > 0 THEN pw "
+        f"{pows}, (d, pw) -> CASE WHEN d > 0 THEN pw "
         "ELSE CAST(0 AS BIGINT) END), "
         "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     )
@@ -337,13 +271,13 @@ def lsh_topk(
             *[F.col("bucket").bitwiseXOR(F.lit(2 ** p).cast("bigint")) for p in range(n_planes)],
         )
         q = q.withColumn("bucket", F.explode(probes))
-    # scalar-unpacked scoring (r16, see _unpack_qv / _unpack_qv_sql)
+    # scalar-unpacked scoring (see _unpack_qv_sql)
     cc = c.selectExpr(
-        f"`{id_col}` AS neighbor_id", "qnorm2 AS cn2",
+        f"{qident(id_col)} AS neighbor_id", "qnorm2 AS cn2",
         "bucket", *_unpack_qv_sql("qvec", "c_", dim),
     )
     qq = q.selectExpr(
-        f"`{id_col}` AS query_id", "qnorm2 AS qn2",
+        f"{qident(id_col)} AS query_id", "qnorm2 AS qn2",
         "bucket", *_unpack_qv_sql("qvec", "q_", dim),
     )
     scored = (
@@ -429,8 +363,8 @@ def ivf_topk(
     a bounded probe batch rides a driver broadcast into the cell join.
     For BULK scoring (kNN graph, query side corpus-sized — gate x139)
     pass False: both sides then shuffle on ``cell``, which is the only
-    plan that survives a corpus-sized query table (round-13 advice,
-    same knob as ivf_index_topk).
+    plan that survives a corpus-sized query table (same knob as
+    ivf_index_topk).
     """
     v = with_quantized_norm(corpus, vec_col)
     cents = _cell_centroids(
@@ -451,13 +385,13 @@ def ivf_topk(
 
     # scoring sides unpacked to scalar component columns ONCE PER ROW so
     # the candidate-pair cosine is codegen'd multiply-adds instead of an
-    # interpreted per-pair zip_with (r16, see _unpack_qv)
+    # interpreted per-pair zip_with (see _unpack_qv_sql)
     c = nearest_cells(v, 1).selectExpr(
-        f"`{id_col}` AS neighbor_id", "qnorm2 AS cn2",
+        f"{qident(id_col)} AS neighbor_id", "qnorm2 AS cn2",
         "cell", *_unpack_qv_sql("qvec", "c_", dim),
     )
     q = nearest_cells(queries.transform(lambda d: with_quantized_norm(d, vec_col)), n_probe).selectExpr(
-        f"`{id_col}` AS query_id", "qnorm2 AS qn2",
+        f"{qident(id_col)} AS query_id", "qnorm2 AS qn2",
         "cell", *_unpack_qv_sql("qvec", "q_", dim),
     )
     scored = (
@@ -483,9 +417,8 @@ def _pq_sub_from_qv(
     by _pq_subvectors, ivfpq_topk, and ivfpq_residual_topk so the
     subspace-extraction expression exists exactly once.  ``keep`` columns
     (the residual path carries the cell id) pass through untouched."""
-    # ONE parsed SQL string instead of ~m*dsub py4j Column constructions
-    # (r16, guide §5 driver work: this expression is built several times
-    # per ANN gate and measured ~0.5 s per construction at dim 64)
+    # ONE parsed SQL string: built as m*dsub Column constructions, this
+    # expression measured ~0.5 s of driver time per build at dim 64
     subs = ", ".join(
         f"struct(CAST({s} AS BIGINT) AS sub, "
         + ", ".join(
@@ -533,7 +466,7 @@ def pq_subvectors_shared(
     dim: int = 64,
     rotate: list[tuple[list[int], int]] | None = None,
 ) -> DataFrame:
-    """The subvector frame MATERIALIZED for sharing (r16, guide §2.4):
+    """The subvector frame MATERIALIZED for sharing:
     id-hash-repartitioned to the cluster's parallelism and eagerly
     checkpointed, so (a) every consumer (each Lloyd pass of
     :func:`train_pq_codebooks`, the encode/distortion passes of
@@ -561,7 +494,7 @@ def _pq_cands(cents: DataFrame, dsub: int) -> DataFrame:
 
 
 def _pq_best(c_sub: DataFrame, cents: DataFrame, dsub: int) -> DataFrame:
-    """Per-row PQ code assignment (r16, guide §2.4): attach each
+    """Per-row PQ code assignment: attach each
     subvector row's nearest codeword as (code, d2) WITHOUT the old
     join-explosion argmin.  The old shape — broadcast-join the codebook
     on `sub` (xN_centroids row multiplication), then
@@ -578,9 +511,9 @@ def _pq_best(c_sub: DataFrame, cents: DataFrame, dsub: int) -> DataFrame:
     the serving encodes, the distortion passes).  Keeps every c_sub
     column and appends (code, d2)."""
 
-    # ONE parsed SQL string for the candidate-scoring lambda (r16, guide
-    # §5): the per-Column construction of dsub difference-square terms per
-    # candidate struct was a measurable driver cost per gate
+    # ONE parsed SQL string for the candidate-scoring lambda: dsub
+    # difference-square terms per candidate struct as Column nodes were a
+    # measurable driver cost per gate
     d2_sql = " + ".join(
         f"(sv_{i} - c.cv_{i}) * (sv_{i} - c.cv_{i})" for i in range(dsub)
     )
@@ -600,7 +533,7 @@ def _pq_best(c_sub: DataFrame, cents: DataFrame, dsub: int) -> DataFrame:
 
 def _pq_d2(dsub: int, a_prefix: str, b_prefix: str) -> Column:
     """Sum of squared component deltas — pure codegen-able bigint math,
-    built as ONE parsed SQL string (r16, guide §5 driver work)."""
+    built as ONE parsed SQL string."""
     terms = " + ".join(
         f"({a_prefix}{i} - {b_prefix}{i}) * ({a_prefix}{i} - {b_prefix}{i})"
         for i in range(dsub)
@@ -734,7 +667,7 @@ def _opq_apply(df: DataFrame, chain: list[tuple[list[int], int]]) -> DataFrame:
         dim = max(len(u) for u, _ in chain)
         _opq_headroom_guard(chain, dim)
     for u, uu in chain:
-        u_sql = "array(" + ",".join(f"{int(c)}L" for c in u) + ")"
+        u_sql = bigint_array_lit(u)
         df = df.withColumn(
             "_dot",
             F.expr(
@@ -792,7 +725,7 @@ def train_pq_codebooks(
     ROTATED space — the OPQ posture; serve with the same chain handed to
     :func:`pq_topk`.
 
-    ``subvectors`` (r16, guide §2.4): a PRECOMPUTED subvector frame
+    ``subvectors``: a PRECOMPUTED subvector frame
     (:func:`pq_subvectors_shared`'s id-partitioned materialized shape, or
     any frame with _pq_subvectors' columns) — callers that also encode
     against the trained books hand it in so the scan + rotation +
@@ -823,7 +756,7 @@ def _pq_train_loop(
     """The per-subspace Lloyd loop of :func:`train_pq_codebooks`, factored
     so the residual-encoding path (:func:`ivfpq_residual_topk`) trains its
     codebooks over RESIDUAL subvectors with the byte-identical update rule
-    (per-row broadcast-array argmin — :func:`_pq_best`, r16: no corpus
+    (per-row broadcast-array argmin — :func:`_pq_best`: no corpus
     Sort/Exchange per pass — truncating-integer-division means,
     empty-cell keep)."""
     for _ in range(n_iters):
@@ -857,22 +790,10 @@ def _pq_train_loop(
     return cents
 
 
-def _l2_bigint(a: Column, b: Column) -> Column:
-    """Bigint squared-L2 between two quantized vectors — the ONE definition
-    every coarse-quantizer site (ivfpq_topk, ivf_cell_stage,
-    train_ivf_centroids) folds, so a tie-break or arithmetic tweak cannot
-    drift between the seams the oracles certify as bit-equal."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _cell_cands(ccents: DataFrame) -> DataFrame:
     """ONE-row (_cc) frame holding every coarse centroid as an array of
     (cell, _cv) structs (bounded: n_cells elements) — the broadcast shape
-    the per-row coarse argmin consumes (r16, guide §2.4): the old
+    the per-row coarse argmin consumes: the old
     ``crossJoin(centroids) -> groupBy(_id).agg(min(struct(cd2, cell, ...)))``
     planned as a SortAggregate over the n_cells-times-expanded corpus
     plus a corpus-sized Exchange (the vector array riding the shuffle);
@@ -880,20 +801,18 @@ def _cell_cands(ccents: DataFrame) -> DataFrame:
     return ccents.agg(F.collect_list(F.struct("cell", "_cv")).alias("_cc"))
 
 
-def _cell_scored_arr(with_cv: bool = False) -> Column:
-    """Array of (cd2, cell[, _cv]) structs: the row's ``_qv`` scored
+def _cell_scored_arr_sql(with_cv: bool = False) -> str:
+    """SQL array of (cd2, cell[, _cv]) structs: the row's ``_qv`` scored
     against every candidate in the broadcast ``_cc`` array.  (cd2, cell)
     is a total order (cells are distinct), so ``array_min`` of it is the
     old min(struct) argmin bit-for-bit and ``array_sort`` + slice is the
     old (cd2, cell)-ascending row_number probe ranking; trailing fields
     (``_cv`` for the residual path) ride behind the decisive prefix
-    exactly as they rode the old struct comparator."""
-
-    return F.expr(_cell_scored_arr_sql(with_cv))
-
-
-def _cell_scored_arr_sql(with_cv: bool = False) -> str:
-    """:func:`_cell_scored_arr` as SQL text (composable into selectExpr)."""
+    exactly as they rode the old struct comparator.  Its bigint squared-L2
+    is the ONE definition every coarse-quantizer site (ivfpq_topk,
+    ivf_cell_stage, train_ivf_centroids) folds, so a tie-break or
+    arithmetic tweak cannot drift between the seams the oracles certify
+    as bit-equal."""
     cv = ", c._cv AS _cv" if with_cv else ""
     return (
         "transform(_cc, c -> struct("
@@ -920,20 +839,20 @@ def _coarse_stage(
     """Corpus cell assignment + per-query probe sets off a broadcast
     centroid frame — lazy; callers decide about materialization.
 
-    r16: per-row broadcast-array argmin (:func:`_cell_cands`) — the
+    Per-row broadcast-array argmin (:func:`_cell_cands`): the
     corpus side is MAP-ONLY (no n_cells row multiplication, no
     SortAggregate, no corpus Exchange); probe ranking is array_sort +
     slice per query row, the same (cd2, cell)-ascending order."""
     cands = _cell_cands(ccents)
     corp_cell = v.crossJoin(F.broadcast(cands)).select(
-        "_id", F.array_min(_cell_scored_arr())["cell"].alias("cell")
+        "_id", F.array_min(F.expr(_cell_scored_arr_sql()))["cell"].alias("cell")
     )
     probes = (
         qv.crossJoin(F.broadcast(cands))
         .select(
             F.col("_id").alias("query_id"),
             F.explode(
-                F.slice(F.array_sort(_cell_scored_arr()), 1, n_probe)
+                F.slice(F.array_sort(F.expr(_cell_scored_arr_sql())), 1, n_probe)
             ).alias("_s"),
         )
         .select("query_id", F.col("_s.cell").alias("cell"))
@@ -968,11 +887,11 @@ def train_ivf_centroids(
     cents = _stride_cells(v, cell_stride, n_cells)
 
     for _ in range(n_iters):
-        # per-row broadcast-array argmin (r16): the vector stays on its
+        # per-row broadcast-array argmin: the vector stays on its
         # row — no n_cells expansion, no SortAggregate, no corpus
         # Exchange for the assignment; (cd2, cell) is the same total order
         assigned = v.crossJoin(F.broadcast(_cell_cands(cents))).select(
-            F.array_min(_cell_scored_arr())["cell"].alias("cell"), "_qv"
+            F.array_min(F.expr(_cell_scored_arr_sql()))["cell"].alias("cell"), "_qv"
         )
         comp = (
             assigned.select("cell", F.posexplode("_qv").alias("pos", "val"))
@@ -1060,12 +979,12 @@ def ivf_exact_candidates(
         if cell_centroids is not None
         else _stride_cells(v, cell_stride, n_cells)
     )
-    # per-row broadcast-array argmin / sorted-slice probe ranking (r16):
+    # per-row broadcast-array argmin / sorted-slice probe ranking:
     # corpus assignment is map-only (vector stays on its row), probe_rank
     # is the array position of the (cd2, cell)-ascending sort — the same
     # order the old row_number ranked
     cands = _cell_cands(ccents)
-    # scalar-unpacked candidate scoring (r16, see _unpack_qv / _unpack_qv_sql)
+    # scalar-unpacked candidate scoring (see _unpack_qv_sql)
     corp = v.crossJoin(F.broadcast(cands)).selectExpr(
         "_id AS neighbor_id",
         f"array_min({_cell_scored_arr_sql()}).cell AS cell",
@@ -1077,7 +996,7 @@ def ivf_exact_candidates(
             F.col("_id").alias("query_id"),
             F.col("_qv").alias("qqvec"),
             F.posexplode(
-                F.slice(F.array_sort(_cell_scored_arr()), 1, n_probe)
+                F.slice(F.array_sort(F.expr(_cell_scored_arr_sql())), 1, n_probe)
             ).alias("_p", "_s"),
         )
         .selectExpr(
@@ -1122,7 +1041,7 @@ def exact_rerank(
     by pool coverage (did the first stage surface the true neighbor),
     which x77 measures arm-against-arm."""
     cand = candidates.select("query_id", "neighbor_id")
-    # scalar-unpacked rerank scoring (r16, see _unpack_qv / _unpack_qv_sql)
+    # scalar-unpacked rerank scoring (see _unpack_qv_sql)
     cv = corpus.select(
         F.col(id_col).alias("neighbor_id"), quantized(vec_col).alias("_cq")
     ).selectExpr("neighbor_id", *_unpack_qv_sql("_cq", "c_", dim))
@@ -1230,7 +1149,7 @@ def pq_topk(
             *[F.col(f"sv_{i}").alias(f"cv_{i}") for i in range(dsub)],
         )
     # encode: nearest centroid per (vector, subspace) — per-row
-    # broadcast-array argmin (_pq_best, r16): same deterministic
+    # broadcast-array argmin (_pq_best): same deterministic
     # (d2 asc, code asc) order, no row multiplication, no Sort/Exchange
     codes = _pq_best(c_sub, cents, dsub).select(
         F.col("_id").alias("neighbor_id"), "sub", "code"
@@ -1341,7 +1260,7 @@ def ivfpq_topk(
     subs_with_cell = _pq_sub_from_qv(
         v.join(corp_cell, "_id"), "_id", m, dsub, keep=("cell",)
     )
-    # per-row broadcast-array argmin (_pq_best, r16): no row
+    # per-row broadcast-array argmin (_pq_best): no row
     # multiplication, no corpus Sort/Exchange; cell rides the row
     codes = _pq_best(subs_with_cell, pcents, dsub).select(
         F.col("_id").alias("neighbor_id"), "cell", "sub", "code"
@@ -1423,8 +1342,8 @@ def ivfpq_residual_topk(
         else _stride_cells(v, cell_stride, n_cells)
     )
 
-    # corpus: cell assignment + residual out of ONE per-row argmin (r16:
-    # broadcast candidate array, map-only — no n_cells expansion, no
+    # corpus: cell assignment + residual out of ONE per-row argmin
+    # (broadcast candidate array, map-only — no n_cells expansion, no
     # SortAggregate/Exchange).  (cd2, cell) is a total order (cells are
     # distinct), so the trailing _cv field never compares — it rides the
     # winning struct exactly as it rode the old comparator; residual =
@@ -1432,7 +1351,7 @@ def ivfpq_residual_topk(
     cands = _cell_cands(ccents)
     corp_res = (
         v.crossJoin(F.broadcast(cands))
-        .withColumn("_b", F.array_min(_cell_scored_arr(with_cv=True)))
+        .withColumn("_b", F.array_min(F.expr(_cell_scored_arr_sql(with_cv=True))))
         .select(
             "_id",
             F.col("_b.cell").alias("cell"),
@@ -1447,7 +1366,7 @@ def ivfpq_residual_topk(
             F.col("_id").alias("query_id"),
             "_qv",
             F.explode(
-                F.slice(F.array_sort(_cell_scored_arr(with_cv=True)), 1, n_probe)
+                F.slice(F.array_sort(F.expr(_cell_scored_arr_sql(with_cv=True))), 1, n_probe)
             ).alias("_s"),
         )
         .select(
@@ -1493,7 +1412,7 @@ def ivfpq_residual_topk(
     # lazy localCheckpoint is NOT job-free under AQE — it materializes the
     # upstream broadcast while translating the plan to an RDD)
 
-    # per-row broadcast-array argmin (_pq_best, r16) — same
+    # per-row broadcast-array argmin (_pq_best) — same
     # (d2, code)-ascending assignment, no residual-corpus Sort/Exchange
     codes = _pq_best(c_sub, rcents, dsub).select(
         F.col("_id").alias("neighbor_id"), "cell", "sub", "code"
@@ -1577,7 +1496,7 @@ def lsh_neardup_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    # scalar-unpacked verify (r16, see _unpack_qv): the exact cosine on
+    # scalar-unpacked verify (see _unpack_qv_sql): the exact cosine on
     # each surviving pair is codegen'd multiply-adds
     a = v.selectExpr("_id AS id_a", "qnorm2 AS na2",
                      *_unpack_qv_sql("qvec", "a_", dim))
@@ -1607,10 +1526,10 @@ def cosine_neardup_pairs(
     exact answers on bounded inputs.
     """
     v = with_quantized_norm(df, vec_col)
-    # scalar-unpacked scoring (r16, see _unpack_qv)
-    a = v.selectExpr(f"`{id_col}` AS id_a", "qnorm2 AS na2",
+    # scalar-unpacked scoring (see _unpack_qv_sql)
+    a = v.selectExpr(f"{qident(id_col)} AS id_a", "qnorm2 AS na2",
                      *_unpack_qv_sql("qvec", "a_", dim))
-    b = v.selectExpr(f"`{id_col}` AS id_b", "qnorm2 AS nb2",
+    b = v.selectExpr(f"{qident(id_col)} AS id_b", "qnorm2 AS nb2",
                      *_unpack_qv_sql("qvec", "b_", dim))
     return (
         a.crossJoin(b)
@@ -1663,7 +1582,7 @@ def semantic_dedup(
         .filter(F.col("c_rank") == 1)
         .select(F.col(id_col).alias("_id"), "qvec", "qnorm2", "cell")
     )
-    # scalar-unpacked in-cell pair scoring (r16, see _unpack_qv): the
+    # scalar-unpacked in-cell pair scoring (see _unpack_qv_sql): the
     # sum(cell_size^2) candidate volume is the dominant cost here
     a = assigned.selectExpr(
         "_id AS id_a", "qnorm2 AS na2",
@@ -1741,14 +1660,15 @@ def ivf_index_update(
     drift is an observable: compare per-cell occupancy across segments;
     when a cell bloats, retrain offline and REBUILD — frozen parameters
     are what make the increment valid, exactly like x95's frozen
-    tokenizer.)"""
+    tokenizer.)  The segment is staged and published through
+    :mod:`hiveka_spark.commit`, so a replay of ``version`` leaves the
+    committed segment whole until its replacement is."""
+    base = root.removeprefix("file:")
     existing = ivf_index_versions(root)
     if existing:
         top = max(existing)
-        import os as _os
-
-        top_compacted = _os.path.exists(
-            _os.path.join(root.removeprefix("file:"), f"v={top}", "_COMPACTED")
+        top_compacted = os.path.exists(
+            os.path.join(base, f"v={top}", "_COMPACTED")
         )
         if version < top or (version == top and top_compacted):
             raise ValueError(
@@ -1759,9 +1679,11 @@ def ivf_index_update(
                 f"> {top} (== max is only a safe replay overwrite of a "
                 "plain segment)"
             )
+    staged = os.path.join(base, f"_staging_v{version}")
     ivf_assign(vecs, centroids, id_col, vec_col).write.mode(
         "overwrite"
-    ).parquet(f"{root}/v={version}")
+    ).parquet(staged)
+    commit.publish(staged, os.path.join(base, f"v={version}"))
 
 
 def ivf_index_versions(root: str) -> list[int]:
@@ -1960,7 +1882,7 @@ def _serve_scores(
     input).  ``extra`` passes additional query-side columns through (the
     s33 sink carries ``home``).  Both sides unpack to scalar component
     columns per ROW so the per-PAIR cosine is codegen'd multiply-adds,
-    not an interpreted zip_with (r16, see _unpack_qv)."""
+    not an interpreted zip_with (see _unpack_qv_sql)."""
     idx_sc = index.selectExpr(
         "cell", "neighbor_id", "cn2", *_unpack_qv_sql("cvec", "c_", dim)
     )
@@ -2142,10 +2064,10 @@ def make_knn_graph_sink(
             compact_probe_store(s, probes_root, before=version)
         from pyspark import StorageLevel
 
-        # batch-sized; LAZY persist instead of the eager localCheckpoint
-        # this used to be (r16, guide §1.2): the homes collect below is
-        # the first action and materializes the cache, so no dedicated
-        # job pays for it.  Unpersisted after the probes-store write.
+        # batch-sized; LAZY persist, not an eager localCheckpoint: the
+        # homes collect below is the first action and materializes the
+        # cache, so no dedicated job pays for it.  Unpersisted after the
+        # probes-store write.
         bq = _probe_side(batch_df, centroids, id_col, vec_col, n_probe).persist(
             StorageLevel.MEMORY_AND_DISK
         )

@@ -12,6 +12,8 @@ import pandas as pd  # noqa: F401  (resolves pandas-UDF type hints under future-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from hiveka_spark.sqlexpr import in_list, qident, str_array_lit, str_lit
+
 # Small per-language marker lexicons for the n-gram/stopword language-ID
 # heuristic.  Order matters: deterministic tie-break is list order.
 LANG_MARKERS: dict[str, list[str]] = {
@@ -32,47 +34,17 @@ TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 def tokens_sql(col_sql: str) -> str:
     """SQL text of :func:`tokens` over a column expression given as SQL.
 
-    The text builders below compose whole output columns as single parsed
-    SQL strings instead of hundreds of py4j Column calls (r16, guide §5:
-    they run per gate AND per micro-batch in the streaming curation sinks;
-    the resolved expressions are identical — double literals carry the
-    ``D`` suffix so no SQL literal parses as DECIMAL and changes a result
-    type).
-    """
+    The text builders below compose each output column as one parsed SQL
+    string (see :mod:`hiveka_spark.sqlexpr`).  Double literals carry the
+    ``D`` suffix so that no literal parses as DECIMAL and changes a result
+    type."""
     return f"filter(split(lower({col_sql}), ' '), w -> w != '')"
 
 
-def _qident(name: str) -> str:
-    """Backtick-quote a plain column NAME for interpolation into SQL text
-    (round-16 advice: the parsed-SQL builders must resolve names with
-    spaces / reserved words exactly as the Column API did)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _str_lit(w: str) -> str:
-    """SQL string literal: backslashes first (default escapedStringLiterals
-    is false, so '\\' is an escape character in SQL text), then quotes."""
-    return "'" + w.replace("\\", "\\\\").replace("'", "''") + "'"
-
-
-def _in_list(var: str, words: list[str]) -> str:
-    """SQL ``var IN ('w1', 'w2', ...)`` membership test; an empty word
-    list is the always-false predicate (``x IN ()`` does not parse)."""
-    if not words:
-        return "false"
-    return f"{var} IN ({', '.join(_str_lit(w) for w in words)})"
-
-
-def _array_lit(words: list[str]) -> str:
-    """SQL ``array('w1', ...)`` literal."""
-    return "array(" + ", ".join(_str_lit(w) for w in words) + ")"
-
-
-def tokens(col: Column | str) -> Column:
-    """Whitespace tokens of lowercased text, empties removed."""
-    if isinstance(col, str):
-        return F.expr(tokens_sql(col))
-    return F.filter(F.split(F.lower(col), " "), lambda w: w != F.lit(""))
+def tokens(col: str) -> Column:
+    """Whitespace tokens of lowercased text in column ``col``, empties
+    removed."""
+    return F.expr(tokens_sql(qident(col)))
 
 
 def floor4(col: Column) -> Column:
@@ -87,14 +59,14 @@ def floor4(col: Column) -> Column:
 
 def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace + regex token counts and char count."""
-    text_col = _qident(text_col)
+    text_col = qident(text_col)
     toks = tokens_sql(text_col)
-    pat = TOKEN_PATTERN.replace("\\", "\\\\")
     return df.withColumns(
         {
             "n_tokens": F.expr(f"CAST(size({toks}) AS BIGINT)"),
             "n_regex_tokens": F.expr(
-                f"CAST(size(regexp_extract_all({text_col}, '{pat}', 0)) AS BIGINT)"
+                f"CAST(size(regexp_extract_all({text_col}, {str_lit(TOKEN_PATTERN)}, 0))"
+                " AS BIGINT)"
             ),
             "n_chars_actual": F.expr(f"CAST(length({text_col}) AS BIGINT)"),
         }
@@ -107,7 +79,7 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     Features are exact small-int rationals quantized with floor4 so the DuckDB
     oracle reproduces them bit-for-bit.
     """
-    text_col = _qident(text_col)
+    text_col = qident(text_col)
     toks = tokens_sql(text_col)
     n_tok = f"size({toks})"
     # sum of token lengths via JVM-side fold (no UDF)
@@ -115,7 +87,7 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
         f"aggregate(transform({toks}, w -> CAST(length(w) AS BIGINT)), "
         "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     )
-    n_stop = f"size(filter({toks}, w -> {_in_list('w', EN_STOPWORDS)}))"
+    n_stop = f"size(filter({toks}, w -> {in_list('w', EN_STOPWORDS)}))"
     n_alnum_space = f"length(regexp_replace(lower({text_col}), '[^a-z0-9 ]', ''))"
     punct_ratio = (
         f"(length({text_col}) - {n_alnum_space}) * 1.0D"
@@ -152,12 +124,12 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     (per-language score columns -> greatest -> case) is identical and all
     JVM-side.
     """
-    text_col = _qident(text_col)
+    text_col = qident(text_col)
     toks = tokens_sql(text_col)
     out = df.withColumns(
         {
             f"score_{lang}": F.expr(
-                f"size(filter({toks}, w -> {_in_list('w', markers)}))"
+                f"size(filter({toks}, w -> {in_list('w', markers)}))"
             )
             for lang, markers in LANG_MARKERS.items()
         }
@@ -188,7 +160,7 @@ def with_gopher_rules(
     with input bytes); every ratio is floor4-quantized so a SQL oracle
     replays the decisions bit-for-bit.  Emits per-rule flags, not just
     ``keep`` — production pipelines log WHICH rule dropped a doc."""
-    text_col = _qident(text_col)
+    text_col = qident(text_col)
     toks = tokens_sql(text_col)
     n = f"size({toks})"
     sum_len = (
@@ -201,7 +173,7 @@ def with_gopher_rules(
         f"size(filter({toks}, w -> w rlike '[a-z]')) * 1.0D / greatest({n}, 1)"
     )
     n_stop = (
-        f"size(array_intersect(array_distinct({toks}), {_array_lit(EN_STOPWORDS)}))"
+        f"size(array_intersect(array_distinct({toks}), {str_array_lit(EN_STOPWORDS)}))"
     )
     flag = "CAST(CASE WHEN {} THEN 1 ELSE 0 END AS BIGINT)".format
     out = df.withColumns(
@@ -241,7 +213,7 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
       normalized text's characters, folded JVM-side — the classic rolling
       fingerprint, kept in bigint range so ANSI mode never overflows.
     """
-    text_col = _qident(text_col)
+    text_col = qident(text_col)
     norm = f"trim(regexp_replace(lower({text_col}), '\\\\s+', ' '))"
     roll = (
         f"aggregate(split({norm}, ''), CAST(0 AS BIGINT), "
@@ -281,10 +253,10 @@ def with_sentiment(
     neg = SENTIMENT_NEG if neg is None else neg
     # NULL text scores as empty (0/0/0/neutral) so the pandas-UDF twin —
     # where None naturally maps to "" — stays pinned equal row-for-row
-    text_col = _qident(text_col)
+    text_col = qident(text_col)
     toks = tokens_sql(f"coalesce({text_col}, '')")
-    n_pos = f"size(filter({toks}, w -> {_in_list('w', pos)}))"
-    n_neg = f"size(filter({toks}, w -> {_in_list('w', neg)}))"
+    n_pos = f"size(filter({toks}, w -> {in_list('w', pos)}))"
+    n_neg = f"size(filter({toks}, w -> {in_list('w', neg)}))"
     n_tok = f"size({toks})"
     polarity = (
         f"CAST(FLOOR(({n_pos} - {n_neg}) * 1000000.0D"

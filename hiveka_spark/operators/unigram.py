@@ -63,6 +63,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from hiveka_spark.operators.bpe import _sp_pretokenize, sp_unit_freq
+from hiveka_spark.sqlexpr import qident
 
 _SP_MARKER = "▁"
 
@@ -523,7 +524,7 @@ def unigram_apply_fast(
 
     id_type = docs.schema[id_col].dataType.simpleString()
     return docs.select(id_col, text_col).mapInPandas(
-        run, f"{id_col} {id_type}, n_tokens bigint, roundtrip_ok boolean"
+        run, f"{qident(id_col)} {id_type}, n_tokens bigint, roundtrip_ok boolean"
     )
 
 
@@ -669,7 +670,7 @@ def unigram_encode_ids(
 
     id_type = docs.schema[id_col].dataType.simpleString()
     return docs.select(id_col, text_col).mapInPandas(
-        run, f"{id_col} {id_type}, n_tokens bigint, ids_digest bigint"
+        run, f"{qident(id_col)} {id_type}, n_tokens bigint, ids_digest bigint"
     )
 
 
@@ -863,7 +864,7 @@ def unigram_sampled_encode(
     id_type = docs.schema[id_col].dataType.simpleString()
     return docs.select(id_col, text_col).mapInPandas(
         run,
-        f"{id_col} {id_type}, n_tokens bigint, n_sampled bigint, "
+        f"{qident(id_col)} {id_type}, n_tokens bigint, n_sampled bigint, "
         "ids_digest bigint",
     )
 
@@ -949,7 +950,7 @@ def unigram_epoch_sampled_encode(
     id_type = docs.schema[id_col].dataType.simpleString()
     return docs.select(id_col, text_col).mapInPandas(
         run,
-        f"epoch bigint, {id_col} {id_type}, n_tokens bigint, "
+        f"epoch bigint, {qident(id_col)} {id_type}, n_tokens bigint, "
         "n_sampled bigint, ids_digest bigint",
     )
 
@@ -1011,7 +1012,7 @@ def unigram_score(
 
     id_type = docs.schema[id_col].dataType.simpleString()
     return docs.select(id_col, text_col).mapInPandas(
-        run, f"{id_col} {id_type}, n_tokens bigint, cost_q_total bigint"
+        run, f"{qident(id_col)} {id_type}, n_tokens bigint, cost_q_total bigint"
     )
 
 
@@ -1089,6 +1090,6 @@ def unigram_encode_bytes(
     id_type = docs.schema[id_col].dataType.simpleString()
     return docs.select(id_col, text_col).mapInPandas(
         run,
-        f"{id_col} {id_type}, n_tokens bigint, n_fallback_bytes bigint, "
+        f"{qident(id_col)} {id_type}, n_tokens bigint, n_fallback_bytes bigint, "
         "ids_digest bigint, roundtrip_ok bigint",
     )

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from hiveka_spark.catalog import dim, load_tables, table
 from hiveka_spark.queries import register
+from hiveka_spark.sqlexpr import qident
 
 # ---------------------------------------------------------------------------
 # Joins beyond inner-equi
@@ -354,7 +355,7 @@ def q35_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wide = joined.groupBy("n_name").pivot("o_orderpriority", _PRIORITIES).count()
     return wide.select(
-        "n_name", *[F.coalesce(F.col(f"`{p}`"), F.lit(0)).alias(p) for p in _PRIORITIES]
+        "n_name", *[F.coalesce(F.col(qident(p)), F.lit(0)).alias(p) for p in _PRIORITIES]
     )
 
 

@@ -6,8 +6,10 @@ each micro-batch is reduced per key and merged into a versioned snapshot
 directory ``state_root/v{batch_id}``.  Two properties give Delta/Iceberg
 MERGE-style idempotence without a table format:
 
-1. **Version key** — a replayed batch id overwrites *its own* version
-   directory, never appends, so re-execution cannot double-count.
+1. **Version key** — a replayed batch id replaces *its own* version
+   directory, never appends, so re-execution cannot double-count.  The
+   new version is staged and published through :mod:`hiveka_spark.commit`,
+   so the committed version it replaces stays whole until the rename.
 2. **Disk-derived predecessor** — the previous-snapshot pointer is
    re-derived from disk at every batch (newest committed ``v{id}`` with
    ``id < batch_id``, see :mod:`hiveka_spark.commit`), never trusted
@@ -142,6 +144,6 @@ class VersionedUpsertSink:
         if prev_path is not None:
             prev = batch_df.sparkSession.read.parquet(prev_path)
             reduced = self.merge(prev, reduced)
-        out = os.path.join(self.state_root, f"v{batch_id}")
-        # mode=overwrite: a replayed batch id rewrites its own version.
-        reduced.write.mode("overwrite").parquet(out)
+        staged = os.path.join(self.state_root, f"_staging_v{batch_id}")
+        reduced.write.mode("overwrite").parquet(staged)
+        commit.publish(staged, os.path.join(self.state_root, f"v{batch_id}"))

@@ -243,6 +243,78 @@ def _schema_registry():
     )
 
 
+def _rows(paths: list[str]) -> list[tuple]:
+    """Rows of the parquet dirs ``paths``."""
+    return sorted(
+        tuple(r.values())
+        for p in paths
+        for r in pq.read_table(p).to_pylist()
+    )
+
+
+def _upsert_sink():
+    # the act replays batch 1 over a committed v1 that an earlier run of
+    # it left behind: the replacement must not cost the committed version
+    def sink(state):
+        import pyspark.sql.functions as F
+
+        from hiveka_spark.streaming.upsert import VersionedUpsertSink
+
+        return VersionedUpsertSink(
+            f"{state}/upsert",
+            lambda df: df.groupBy("k").agg(F.sum("n").alias("n")),
+            lambda prev, cur: prev.unionByName(cur).groupBy("k").agg(
+                F.sum("n").alias("n")
+            ),
+        )
+
+    def batch(spark, rows):
+        return spark.createDataFrame(rows, "k bigint, n bigint").coalesce(1)
+
+    def setup(spark, state):
+        sink(state)(batch(spark, [(1, 1), (2, 1)]), 0)
+        sink(state)(batch(spark, [(1, 5)]), 1)
+
+    def act(spark, state):
+        sink(state)(batch(spark, [(2, 7), (3, 1)]), 1)
+
+    def read(state):
+        latest = sink(state).latest_path()
+        return os.path.relpath(latest, state), _rows([latest])
+
+    return setup, act, read
+
+
+def _ivf_segments():
+    # the act replays segment v=1 over a committed copy of other vectors
+    def frames(spark, ids):
+        vecs = spark.createDataFrame(
+            [(i, [1.0 + i % 3, 1.0 + i % 2]) for i in ids],
+            "vec_id bigint, embedding array<float>",
+        ).coalesce(1)
+        cents = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell bigint, embedding array<float>"
+        )
+        return vecs, cents
+
+    def update(spark, state, ids, version):
+        from hiveka_spark.operators.similarity import ivf_index_update
+
+        vecs, cents = frames(spark, ids)
+        ivf_index_update(spark, vecs, f"{state}/ivf", version, cents)
+
+    def setup(spark, state):
+        update(spark, state, [1, 2], 0)
+        update(spark, state, [3], 1)
+
+    def read(state):
+        from hiveka_spark.operators.similarity import ivf_index_segments
+
+        return _rows(ivf_index_segments(f"{state}/ivf"))
+
+    return setup, lambda spark, state: update(spark, state, [4, 5, 6], 1), read
+
+
 STORES = {
     "band_index": _band_index,
     "window_counts": _window_counts,
@@ -251,6 +323,8 @@ STORES = {
     "offset_store": _offset_store,
     "broker_meta": _broker_meta,
     "schema_registry": _schema_registry,
+    "upsert_sink": _upsert_sink,
+    "ivf_segments": _ivf_segments,
 }
 
 

@@ -1343,10 +1343,27 @@ def test_sentiment_empty_lexicon_is_valid_sql(spark):
 
 
 def test_text_builders_quote_odd_column_names(spark):
-    """Round-16 advice: parsed-SQL builders must backtick-quote plain
-    column-name arguments so names with spaces/reserved words resolve as
-    the Column API resolved them."""
+    """Parsed-SQL builders must backtick-quote plain column-name arguments
+    (hiveka_spark.sqlexpr.qident) so names with spaces, backticks or
+    reserved words resolve as the Column API resolves them."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.types import (
+        ArrayType,
+        FloatType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from hiveka_spark.operators.dedup import word_ngrams
+    from hiveka_spark.operators.similarity import (
+        brute_force_topk,
+        lsh_bucket,
+        with_quantized_norm,
+    )
     from hiveka_spark.operators.text import (
+        tokens,
         with_fingerprint,
         with_gopher_rules,
         with_lang_id,
@@ -1355,14 +1372,57 @@ def test_text_builders_quote_odd_column_names(spark):
         with_token_stats,
     )
 
+    text = "the quick brown fox is in it for the win"
     df = spark.createDataFrame(
-        [(1, "the quick brown fox is in it for the win")],
+        [(1, text)],
         ["doc_id", "doc text"],  # space + would not parse unquoted
     )
     for fn in (with_token_stats, with_quality, with_lang_id,
                with_gopher_rules, with_fingerprint, with_sentiment):
         row = fn(df, text_col="doc text").collect()[0]
         assert row["doc_id"] == 1, fn.__name__
+    # the id name is spliced into the mapInPandas output schema DDL too
+    from hiveka_spark.operators.bpe import bpe_apply_fast
+
+    row = bpe_apply_fast(
+        df.withColumnRenamed("doc_id", "doc id"), [("t", "h")],
+        text_col="doc text", id_col="doc id",
+    ).collect()[0]
+    assert row["doc id"] == 1 and row["n_bpe_tokens"] > 0
+
+    # the array builders, on a name with a space and one with a backtick:
+    # each must give the answer it gives on a plain name
+    vecs = [(i, [0.1 * i, -0.2, 0.3 * (i % 3), 0.05]) for i in range(1, 7)]
+
+    def frames(id_name: str, vec_name: str, text_name: str):
+        t = spark.createDataFrame(
+            [(text,)], StructType([StructField(text_name, StringType())])
+        )
+        v = spark.createDataFrame(vecs, StructType([
+            StructField(id_name, LongType()),
+            StructField(vec_name, ArrayType(FloatType())),
+        ]))
+        return t, v
+
+    def answers(id_name: str, vec_name: str, text_name: str):
+        t, v = frames(id_name, vec_name, text_name)
+        q = with_quantized_norm(v, vec_name)
+        buckets = q.select(F.col("qvec").alias(vec_name)).select(
+            lsh_bucket(vec_name, 3, 4).alias("b")
+        )
+        topk = brute_force_topk(v, v, id_col=id_name, vec_col=vec_name, k=2, dim=4)
+        return (
+            t.select(tokens(text_name)).first()[0],
+            t.select(word_ngrams(text_name, 2)).first()[0],
+            sorted(tuple(r) for r in q.select("qvec", "qnorm2").collect()),
+            sorted(r["b"] for r in buckets.collect()),
+            sorted(tuple(r) for r in topk.collect()),
+        )
+
+    want = answers("id", "vec", "text")
+    assert want[0][:2] == ["the", "quick"] and want[1][0] == "the quick"
+    for odd in (("doc id", "emb vec", "doc text"), ("a`b", "q`v", "t`x")):
+        assert answers(*odd) == want, odd
 
 
 def test_sentiment_lexicon_backslash_word(spark):
@@ -1377,21 +1437,26 @@ def test_sentiment_lexicon_backslash_word(spark):
     assert out["n_pos"] == 1 and out["sentiment"] == "positive"
 
 
-def test_lsh_bucket_sql_and_column_paths_agree(spark):
-    """r17: lsh_bucket composes its hyperplane literals as ONE parsed SQL
-    string when given a column NAME; the legacy Column path must produce
-    identical buckets (same planes, same fold)."""
-    import pyspark.sql.functions as F
-
+def test_lsh_bucket_matches_python_planes(spark):
+    """lsh_bucket sets bit p iff the integer dot of the quantized vector
+    with plane p of plane_weights is positive: the buckets Spark computes
+    equal the ones pure Python computes from the same ints."""
     from hiveka_spark.catalog import table
-    from hiveka_spark.operators.similarity import lsh_bucket, with_quantized_norm
+    from hiveka_spark.operators.similarity import (
+        lsh_bucket,
+        plane_weights,
+        with_quantized_norm,
+    )
 
     from .conftest import SF_SMOKE
 
     v = with_quantized_norm(table(spark, SF_SMOKE, "embeddings"), "embedding")
-    out = v.select(
-        "vec_id",
-        lsh_bucket("qvec", 4, 64, tag="t0_").alias("b_sql"),
-        lsh_bucket(F.col("qvec"), 4, 64, tag="t0_").alias("b_col"),
-    ).collect()
-    assert out and all(r["b_sql"] == r["b_col"] for r in out)
+    out = v.select("qvec", lsh_bucket("qvec", 4, 64, tag="t0_").alias("b")).collect()
+    planes = plane_weights(4, 64, tag="t0_")
+    want = [
+        sum(2**p for p, w in enumerate(planes)
+            if sum(a * b for a, b in zip(r["qvec"], w)) > 0)
+        for r in out
+    ]
+    assert len(set(want)) > 1
+    assert [r["b"] for r in out] == want

@@ -66,7 +66,7 @@ for n in (1, 4, 10):
         # |corpus in cell| * |queries probing cell| (the n_cells knob's target)
         from hiveka_spark.operators.similarity import (
             _cell_centroids,
-            cosine_expr,
+            cosine_sql,
             with_quantized_norm,
         )
         from pyspark.sql import Window
@@ -78,7 +78,7 @@ for n in (1, 4, 10):
         eff = cents.count()
         scored = v.crossJoin(F.broadcast(cents)).withColumn(
             "c_cos",
-            cosine_expr(F.col("qvec"), F.col("cvec"), F.col("qnorm2"), F.col("cn2")),
+            cosine_sql("qvec", "cvec", "qnorm2", "cn2"),
         )
         w = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), F.col("cell"))
         ranked = scored.withColumn("r", F.row_number().over(w))

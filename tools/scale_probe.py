@@ -101,7 +101,7 @@ def probes(spark: SparkSession, sf_dir: str, n: int):
         # (per-cell pair volume is duplicate-rate-sensitive -> excluded)
         from pyspark.sql import Window
 
-        from hiveka_spark.operators.similarity import cosine_expr, with_quantized_norm
+        from hiveka_spark.operators.similarity import cosine_sql, with_quantized_norm
 
         emb = replicate(table(spark, sf_dir, "embeddings"), n, ["vec_id"])
         v = with_quantized_norm(emb, "embedding")
@@ -111,7 +111,7 @@ def probes(spark: SparkSession, sf_dir: str, n: int):
         )
         scored = v.crossJoin(F.broadcast(cents)).withColumn(
             "c_cos",
-            cosine_expr(F.col("qvec"), F.col("cvec"), F.col("qnorm2"), F.col("cn2")),
+            cosine_sql("qvec", "cvec", "qnorm2", "cn2"),
         )
         w = Window.partitionBy("vec_id").orderBy(F.col("c_cos").desc(), "cell")
         return (
