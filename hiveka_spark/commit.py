@@ -4,7 +4,8 @@ A store is a directory of versions named ``<prefix><id>`` (``b3``, ``c7``,
 ``v12``, ``v=4``).  Its versions change only through this module:
 
 - **Stage, mark, rename.**  A writer builds a new version under a staging
-  path that no reader lists, :func:`publish` writes the ``_SUCCESS``
+  path that no reader lists (:func:`write_version` stages ``<name>`` as
+  ``_staging_<name>`` beside it), :func:`publish` writes the ``_SUCCESS``
   marker inside the staged dir, then one atomic rename moves it to its
   target.  The rename is the commit point: before it the old state is
   whole, after it the new version is whole.
@@ -93,7 +94,8 @@ def live(root: str, before: int) -> list[str]:
     ]
 
 
-def _remove(path: str) -> None:
+def remove(path: str) -> None:
+    """Delete the version dir ``path``, its marker first."""
     try:
         os.remove(os.path.join(path, MARKER))
     except FileNotFoundError:
@@ -105,8 +107,17 @@ def publish(staged: str, target: str) -> None:
     """Mark ``staged`` and rename it to ``target``, replacing what is there."""
     open(os.path.join(staged, MARKER), "w").close()
     if os.path.isdir(target):
-        _remove(target)
+        remove(target)
     os.rename(staged, target)
+
+
+def write_version(target: str, write: Callable[[str], None]) -> None:
+    """Publish one version: ``write(staged)`` builds it at ``_staging_<name>``
+    beside ``target``, then :func:`publish` moves it into place."""
+    root, name = os.path.split(target)
+    staged = os.path.join(root, f"_staging_{name}")
+    write(staged)
+    publish(staged, target)
 
 
 def fold_inputs(root: str, before: int) -> list[str]:
@@ -116,7 +127,7 @@ def fold_inputs(root: str, before: int) -> list[str]:
     live."""
     dirs = live(root, before)
     for d in set(_entries(root, before, ("b", "c"))) - set(dirs):
-        _remove(d)
+        remove(d)
     return dirs if len(dirs) > 1 else []
 
 
@@ -127,7 +138,7 @@ def publish_fold(staged: str, inputs: list[str]) -> None:
     top = max(version_id(d) for d in inputs)
     publish(staged, os.path.join(os.path.dirname(inputs[0]), f"c{top}"))
     for d in inputs:
-        _remove(d)
+        remove(d)
 
 
 def fold(

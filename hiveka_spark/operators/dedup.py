@@ -28,6 +28,7 @@ from collections.abc import Iterator
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from hiveka_spark.operators.text import tokens, tokens_sql
 from hiveka_spark.sqlexpr import bigint_array_lit, qident
 
 MERSENNE31 = 2147483647  # 2^31 - 1
@@ -156,8 +157,6 @@ def ngrams_from_tokens(ws: str, k: int = 3) -> Column:
 def word_ngrams(text_col: str, k: int = 3) -> Column:
     """Word k-grams of lowercased text in column ``text_col``, duplicates
     kept (JVM-side)."""
-    from hiveka_spark.operators.text import tokens_sql
-
     return F.expr(ngrams_from_tokens_sql(tokens_sql(qident(text_col)), k))
 
 
@@ -182,8 +181,6 @@ def _shingle_sets(
     accumulating copies.  The repartition by doc additionally means doc-keyed
     aggregations/windows/joins downstream inherit the partitioning (no extra
     shuffle)."""
-    from hiveka_spark.operators.text import tokens
-
     # two-step projection: tokenize ONCE into a column, then shingle off the
     # column reference (see ngrams_from_tokens: no CSE across HOF references)
     toks = df.filter(F.col(id_col).isNotNull()).select(
@@ -315,8 +312,6 @@ def shingle_novelty(
 
     Output: (doc_id, n_shingles, n_novel, novelty[floor4]).
     """
-    from hiveka_spark.operators.text import tokens
-
     # NOT _shingle_sets: its repartition-by-doc is the right co-location for
     # the multi-pass pairwise algorithms, but novelty's very next operator
     # shuffles by SHINGLE — a doc-keyed exchange first would be a pure-waste
@@ -371,8 +366,6 @@ def contamination_overlap(
     ZERO shuffle of training data; the only shuffle is the per-doc count,
     keyed by doc id.  Shingling reuses word_shingles (JVM-side, codegen'd).
     """
-    from hiveka_spark.operators.text import tokens
-
     tr = (
         train.select(F.col(id_col).alias("doc"), tokens(text_col).alias("ws"))
         .select("doc", F.array_distinct(ngrams_from_tokens("ws", k)).alias("sh"))
@@ -526,8 +519,6 @@ def bloom_decontamination(
 def eval_shingle_set(eval_df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
     """Distinct eval-corpus shingles (one column ``s``) — the build input
     for both the Bloom bitset and the exact-hit verifier."""
-    from hiveka_spark.operators.text import tokens
-
     return (
         eval_df.select(tokens(text_col).alias("ws"))
         .select(F.explode(F.array_distinct(ngrams_from_tokens("ws", k))).alias("s"))
@@ -581,8 +572,6 @@ def bloom_probe(
     one shared bitset — the probe is per-doc-local (a doc's shingles all
     live in its own row), so batch-local application over any stream split
     equals the one-shot batch answer."""
-    from hiveka_spark.operators.text import tokens
-
     tr = (
         train.select(F.col(id_col).alias("doc"), tokens(text_col).alias("ws"))
         .select("doc", F.array_distinct(ngrams_from_tokens("ws", k)).alias("sh"))
@@ -651,8 +640,6 @@ def containment_decontamination(
     zero training-corpus shuffle beyond that count.  Exact by design: a
     one-sided-rare quoted excerpt can evade MinHash banding entirely, so
     the exact path is the right default while the eval side is small."""
-    from hiveka_spark.operators.text import tokens
-
     def shingle_rows(df: DataFrame) -> DataFrame:
         return (
             df.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("ws"))
@@ -859,7 +846,7 @@ def simhash(
     """SimHash per document over whitespace tokens (bits<=32 keeps the
     signature in int range; the bit-vote sums are computed as one aggregate
     of +/-1 contributions per bit — explode + single shuffle)."""
-    toks = F.filter(F.split(F.lower(text_col), " "), lambda w: w != F.lit(""))
+    toks = tokens(text_col)
     # expressions compose as parsed SQL strings (~40 py4j round trips
     # instead of ~500), and the hash is projected ONCE per token row
     # instead of appearing inside all ``bits`` vote aggregates
@@ -1073,8 +1060,6 @@ def _window_occurrences(
     once (the incremental update's posture — a 1 TB drop must not pay two
     text scans); the one-shot gates leave it lazy (their single-action
     plans pay one scan per branch, the documented small trade)."""
-    from hiveka_spark.operators.text import tokens
-
     L = min_len
     toks = docs.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col).alias("doc"), tokens(text_col).alias("ws")
@@ -1217,8 +1202,6 @@ def substring_dedup_rewrite(
         "doc",
         F.explode(F.sequence(F.col("pos0"), F.col("pos0") + L - 1)).alias("wpos"),
     ).distinct()
-    from hiveka_spark.operators.text import tokens
-
     words = docs.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col).alias("doc"), tokens(text_col).alias("ws")
     ).select("doc", F.posexplode("ws").alias("wpos", "w"))

@@ -37,8 +37,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from hiveka_spark import commit
-from hiveka_spark.operators import dedup as D
-from hiveka_spark.streaming.neardup import committed_versions
+from hiveka_spark.streaming.neardup import band_index_step
 
 
 _STORES = ("sh", "bands", "pairs")
@@ -60,13 +59,9 @@ def complete_versions(state_root: str) -> list[int]:
     its retry and silently drop its pairs from every future accumulated
     answer — so partial versions are invisible here (never probed as
     priors, never returned) and retryable (the same version id may be
-    re-ingested; every store write is mode=overwrite)."""
-    sets = [_store_versions(state_root, s) for s in _STORES]
-    return sorted(sets[0] & sets[1] & sets[2])
-
-
-def _manifest_path(state_root: str) -> str:
-    return os.path.join(state_root, "manifest.json")
+    re-ingested; every store write publishes through
+    :mod:`hiveka_spark.commit`, which replaces the partial dir whole)."""
+    return sorted(set.intersection(*[_store_versions(state_root, s) for s in _STORES]))
 
 
 def _check_manifest(state_root: str, params: dict) -> None:
@@ -76,7 +71,7 @@ def _check_manifest(state_root: str, params: dict) -> None:
     update writes the manifest; later updates must match it exactly."""
     import json
 
-    path = _manifest_path(state_root)
+    path = os.path.join(state_root, "manifest.json")
     if os.path.exists(path):
         with open(path) as fh:
             existing = json.load(fh)
@@ -89,8 +84,7 @@ def _check_manifest(state_root: str, params: dict) -> None:
             )
     else:
         os.makedirs(state_root, exist_ok=True)
-        with open(path, "w") as fh:
-            json.dump(params, fh)
+        commit.write_json(path, params)
 
 
 def compact_minhash_index(spark: SparkSession, state_root: str) -> int | None:
@@ -120,8 +114,6 @@ def compact_minhash_index(spark: SparkSession, state_root: str) -> int | None:
     updates, never concurrently with one.  After compaction the next
     ingest must use a version id above the returned one (the normal
     monotone-version guard enforces this)."""
-    import shutil
-
     complete = complete_versions(state_root)
     if len(complete) <= 1:
         return None
@@ -131,14 +123,15 @@ def compact_minhash_index(spark: SparkSession, state_root: str) -> int | None:
     for store in _STORES:  # ("sh", "bands", "pairs") — pairs last
         root = os.path.join(state_root, store)
         dirs = [p for p in commit.committed(root) if commit.version_id(p) in keep]
-        tmp = os.path.join(root, "_compact_tmp")
-        spark.read.parquet(*dirs).write.mode("overwrite").parquet(tmp)
-        commit.publish(tmp, os.path.join(root, f"b{new_id}"))
+        commit.write_version(
+            os.path.join(root, f"b{new_id}"),
+            spark.read.parquet(*dirs).write.mode("overwrite").parquet,
+        )
     for store in _STORES:
         root = os.path.join(state_root, store)
         for n in os.listdir(root):
             if n.startswith("b") and n[1:].isdigit() and int(n[1:]) != new_id:
-                shutil.rmtree(os.path.join(root, n), ignore_errors=True)
+                commit.remove(os.path.join(root, n))
     return new_id
 
 
@@ -181,77 +174,39 @@ def minhash_index_update(
             "(crashed mid-update) does not count and may be re-ingested "
             "under its own id."
         )
-    sh_root = os.path.join(state_root, "sh")
-    bands_root = os.path.join(state_root, "bands")
     pairs_root = os.path.join(state_root, "pairs")
-    complete_set = set(complete)
 
-    # 1. shingle + band the NEW docs once; both stores are written from one
-    #    persisted shingle frame, then re-read from disk so every downstream
-    #    plan (including this update's own verify) runs off the index, not
-    #    the text — the same no-recompute rule the index gives FUTURE runs.
-    sh_new = D._shingle_sets(docs, id_col, text_col, k, reuse=True)
-    sh_new.write.mode("overwrite").parquet(os.path.join(sh_root, f"b{version}"))
-    sh_new_disk = spark.read.parquet(os.path.join(sh_root, f"b{version}"))
-    D.minhash_band_rows(
-        None, num_perm=num_perm, bands=bands, shingle_df=sh_new_disk
-    ).write.mode("overwrite").parquet(os.path.join(bands_root, f"b{version}"))
-    bands_new = spark.read.parquet(os.path.join(bands_root, f"b{version}"))
+    # the new docs are shingled and banded once and probe the persisted
+    # index; priors are COMPLETE versions only (see complete_versions): a
+    # partial version's bands must not be probed, its pairs were never
+    # emitted.  Old text never re-enters: verification reads the shingle
+    # store.
+    def priors(store: str) -> list[str]:
+        return [
+            p for p in commit.committed(os.path.join(state_root, store), version)
+            if commit.version_id(p) in complete
+        ]
 
-    # 2. candidates: within-version self-join + probe of the persisted index
-    a = bands_new.select(F.col("doc").alias("id_a"), "band", "bh")
-    b = bands_new.select(F.col("doc").alias("id_b"), "band", "bh")
-    cand = a.join(b, ["band", "bh"]).filter(F.col("id_a") < F.col("id_b"))
-    # priors = COMPLETE versions only (see complete_versions): a partial
-    # version's bands must not be probed — its pairs were never emitted
-    prior_bands = [
-        p
-        for p in committed_versions(bands_root, version)
-        if int(os.path.basename(p)[1:]) in complete_set
-    ]
-    sh_sources = [os.path.join(sh_root, f"b{version}")]
-    if prior_bands:
-        idx = spark.read.parquet(*prior_bands).select(
-            F.col("doc").alias("id_old"), "band", "bh"
-        )
-        new = bands_new.select(F.col("doc").alias("id_new"), "band", "bh")
-        cross = (
-            idx.join(new, ["band", "bh"])
-            .filter(F.col("id_old") != F.col("id_new"))
-            .select(
-                F.least("id_old", "id_new").alias("id_a"),
-                F.greatest("id_old", "id_new").alias("id_b"),
-            )
-        )
-        cand = cand.select("id_a", "id_b").unionByName(cross)
-        sh_sources = [
-            p
-            for p in committed_versions(sh_root, version)
-            if int(os.path.basename(p)[1:]) in complete_set
-        ] + sh_sources
-    cand = cand.select("id_a", "id_b").distinct()
-
-    # 3. exact-verify against the shingle STORE (old shingles come from the
-    #    index; text never re-enters), emit this version's pairs
-    sh_all = spark.read.parquet(*sh_sources)
-    D._verified_jaccard(cand, sh_all, threshold).write.mode("overwrite").parquet(
-        os.path.join(pairs_root, f"b{version}")
+    batch = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    pairs = band_index_step(
+        batch, state_root, version, priors("bands"), priors("sh"),
+        num_perm, bands, k, threshold,
+    )
+    commit.write_version(
+        os.path.join(pairs_root, f"b{version}"),
+        pairs.write.mode("overwrite").parquet,
     )
 
-    # 4. auto-compaction: this version is complete (its pairs write just
-    #    committed), so the fold is between-updates by construction
+    # auto-compaction: this version is complete (its pairs write just
+    # committed), so the fold is between-updates by construction
     if compact_after is not None and len(complete_versions(state_root)) >= compact_after:
         compact_minhash_index(spark, state_root)
 
-    # 5. accumulated answer across every COMPLETE version
+    # accumulated answer across every COMPLETE version
     done = set(complete_versions(state_root))
     return (
         spark.read.parquet(
-            *[
-                p
-                for p in committed_versions(pairs_root, 10**9)
-                if int(os.path.basename(p)[1:]) in done
-            ]
+            *[p for p in commit.committed(pairs_root) if commit.version_id(p) in done]
         )
         .select("id_a", "id_b", "jaccard")
         .distinct()
@@ -302,13 +257,11 @@ def substring_index_update(
     from hiveka_spark.operators.dedup import _dup_span_stats, _window_occurrences
 
     wc_root = os.path.join(state_root, "wc")
-    complete = committed_versions(wc_root, 10**9) if os.path.isdir(wc_root) else []
-    if complete and version <= max(
-        int(os.path.basename(p)[1:]) for p in complete
-    ):
+    complete = commit.committed(wc_root)
+    top = max(map(commit.version_id, complete), default=-1)
+    if version <= top:
         raise ValueError(
-            "window-count store already holds version "
-            f"b{max(int(os.path.basename(p)[1:]) for p in complete)}; pass a "
+            f"window-count store already holds version b{top}; pass a "
             "higher version (or a fresh state_root)"
         )
 
@@ -323,10 +276,13 @@ def substring_index_update(
     # this version's segment: written once, then re-read from disk so the
     # probe below runs off the index — the same no-recompute rule future
     # versions get
-    occ.groupBy("h").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    ).write.mode("overwrite").parquet(os.path.join(wc_root, f"b{version}"))
-    own = spark.read.parquet(os.path.join(wc_root, f"b{version}"))
+    own_dir = os.path.join(wc_root, f"b{version}")
+    commit.write_version(
+        own_dir,
+        occ.groupBy("h").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+        .write.mode("overwrite").parquet,
+    )
+    own = spark.read.parquet(own_dir)
 
     if complete:
         prior = (

@@ -1679,11 +1679,10 @@ def ivf_index_update(
                 f"> {top} (== max is only a safe replay overwrite of a "
                 "plain segment)"
             )
-    staged = os.path.join(base, f"_staging_v{version}")
-    ivf_assign(vecs, centroids, id_col, vec_col).write.mode(
-        "overwrite"
-    ).parquet(staged)
-    commit.publish(staged, os.path.join(base, f"v={version}"))
+    commit.write_version(
+        os.path.join(base, f"v={version}"),
+        ivf_assign(vecs, centroids, id_col, vec_col).write.mode("overwrite").parquet,
+    )
 
 
 def ivf_index_versions(root: str) -> list[int]:
@@ -1740,8 +1739,6 @@ def ivf_index_compact(spark, root: str, before: int | None = None) -> int:
     (:func:`make_ivf_stream_sink` appends at 2*batch_id + 2) so the
     fold's ``top + 1`` publish slot is always free; a committed segment
     already at that slot raises instead of being clobbered."""
-    import shutil as _shutil
-
     base = root.removeprefix("file:")
     versions = ivf_index_versions(root)
     live = ivf_index_segments(root)
@@ -1750,7 +1747,7 @@ def ivf_index_compact(spark, root: str, before: int | None = None) -> int:
     # committed _COMPACTED segment are already contained in it
     for v in versions:
         if v not in live_versions:
-            _shutil.rmtree(os.path.join(base, f"v={v}"), ignore_errors=True)
+            commit.remove(os.path.join(base, f"v={v}"))
     if before is not None:
         live_versions = [v for v in live_versions if v < before]
     # the next safe append version must clear EVERY committed version,
@@ -1768,17 +1765,14 @@ def ivf_index_compact(spark, root: str, before: int | None = None) -> int:
             "free (make_ivf_stream_sink's even/odd convention)"
         )
     live = [d for d in live if commit.version_id(d) in live_versions]
-    tmp = os.path.join(base, "_compact_tmp")
-    (
-        spark.read.parquet(*live)
-        .sort("cell")
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    open(os.path.join(tmp, "_COMPACTED"), "w").close()
-    commit.publish(tmp, os.path.join(base, f"v={top + 1}"))
-    for v in live_versions:
-        _shutil.rmtree(os.path.join(base, f"v={v}"), ignore_errors=True)
+
+    def write(staged: str) -> None:
+        spark.read.parquet(*live).sort("cell").write.mode("overwrite").parquet(staged)
+        open(os.path.join(staged, "_COMPACTED"), "w").close()
+
+    commit.write_version(os.path.join(base, f"v={top + 1}"), write)
+    for d in live:
+        commit.remove(d)
     return max(ceiling, top + 1) + 1
 
 
@@ -2163,8 +2157,9 @@ def make_knn_graph_sink(
             )
         _shutil.rmtree(staging, ignore_errors=True)
         try:
-            bq.write.mode("overwrite").parquet(
-                os.path.join(probes_root, f"b{version}")
+            commit.write_version(
+                os.path.join(probes_root, f"b{version}"),
+                bq.write.mode("overwrite").parquet,
             )
         finally:
             bq.unpersist()

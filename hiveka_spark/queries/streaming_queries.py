@@ -859,10 +859,11 @@ def s19_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same DuckDB MinHash replay as x03.
 
     State layout follows the s16 discipline: per-batch versioned
-    subdirectories (bands/b{id}, sh/b{id}, pairs/b{id}) written with
-    overwrite, prior state re-derived from committed (_SUCCESS) dirs with
-    id < batch_id — a checkpoint-replayed batch rewrites its own outputs
-    and re-probes its true predecessors, never double-emits.
+    subdirectories (bands/b{id}, sh/b{id}, pairs/b{id}) published through
+    hiveka_spark/commit.py, prior state re-derived from committed
+    (_SUCCESS) dirs with id < batch_id — a checkpoint-replayed batch
+    replaces its own outputs and re-probes its true predecessors, never
+    double-emits.
 
     Scale shape: per batch, one signature aggregate over the BATCH only
     (the index is never recomputed), one (band, bh)-keyed equi-join against

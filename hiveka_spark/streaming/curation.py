@@ -30,7 +30,8 @@ the batch answer for ANY arrival order — the standard CDC/compacted-topic
 pattern, and the reason the convergence oracle can be exact.
 
 Replay safety composes from the parts: dedup state dirs are versioned by
-batch id and overwritten on replay (the s16/s19 discipline); the produce
+batch id and published through :mod:`hiveka_spark.commit`, so a replayed
+batch replaces its own version whole; the produce
 step is marker-gated (kafka_sink.py) so a checkpoint-replayed batch never
 appends twice; and even a crash in the produce->marker window only
 duplicates records whose keys compact away (an extra upsert or tombstone
@@ -62,9 +63,9 @@ from hiveka_spark.sources.kafka_io import (
     read_kafka_batch,
 )
 from hiveka_spark.streaming.neardup import (
-    N_BH_BUCKETS,
+    band_index_step,
     committed_versions,
-    read_bands,
+    compact_band_index,
 )
 
 
@@ -131,20 +132,15 @@ class StreamCurationSink:
         self.compact_after = compact_after
         self.bands_root = os.path.join(state_root, "bands")
         self.sh_root = os.path.join(state_root, "sh")
-        for p in (self.bands_root, self.sh_root):
-            os.makedirs(p, exist_ok=True)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from hiveka_spark.operators import dedup as D
         from hiveka_spark.operators.text import with_gopher_rules
 
-        s = batch_df.sparkSession
-
         # stage 1+2 (stateless): Gopher rule chain, then the Bloom probe on
         # the survivors; participants are persisted (LAZY — the shingle
         # write below is the first action and materializes the cache, so
-        # unlike the eager localCheckpoint this used to be, no dedicated
-        # job pays for the materialization; r16, guide §1.2) so the three
+        # no dedicated job pays for the materialization) so the three
         # downstream consumers (shingle write, band write, produce) don't
         # re-run tokenization — bounded by one micro-batch, unpersisted at
         # batch end.
@@ -177,68 +173,13 @@ class StreamCurationSink:
             StorageLevel.MEMORY_AND_DISK
         )
 
-        # stage 3 (stateful): s19's band-index discipline — write this
-        # batch's shingles/bands (overwrite by id: replay-idempotent), probe
-        # the committed index for cross-batch candidates, self-join for
-        # within-batch ones, Jaccard-verify both.
-        D._shingle_sets(part, "doc_id", "text", self.k, reuse=False).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self.sh_root, f"b{batch_id}"))
-        sh_cur = s.read.parquet(os.path.join(self.sh_root, f"b{batch_id}"))
-        prior = committed_versions(self.bands_root, batch_id)
-        bands_out = D.minhash_band_rows(
-            None, "doc_id", "text",
-            num_perm=self.num_perm, bands=self.bands, k=self.k,
-            reuse=False, shingle_df=sh_cur,
-        )
-        obs = None
-        if prior:
-            # the batch's distinct bh_buckets ride the band-write job as an
-            # Observation accumulator (r16, guide §1.2: the separate
-            # distinct+collect job this replaces cost one Spark job per
-            # micro-batch for a handful of small ints)
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            bands_out = bands_out.observe(
-                obs,
-                F.collect_set(
-                    F.pmod(F.col("bh"), F.lit(N_BH_BUCKETS))
-                ).alias("bk"),
-            )
-        bands_out.write.mode("overwrite").parquet(
-            os.path.join(self.bands_root, f"b{batch_id}")
-        )
-        bands_cur = s.read.parquet(os.path.join(self.bands_root, f"b{batch_id}"))
-
-        a = bands_cur.select(F.col("doc").alias("id_a"), "band", "bh")
-        b = bands_cur.select(F.col("doc").alias("id_b"), "band", "bh")
-        cand = a.join(b, ["band", "bh"]).filter(F.col("id_a") < F.col("id_b"))
-        if prior:
-            # bucket-pruned probe: the compacted c-segment is partitioned
-            # by bh_bucket (neardup.compact_band_index), so reading only
-            # this batch's buckets prunes directories before any I/O
-            buckets = list(obs.get["bk"])
-            idx = read_bands(s, prior, bh_buckets=buckets).select(
-                F.col("doc").alias("id_old"), "band", "bh"
-            )
-            new = bands_cur.select(F.col("doc").alias("id_new"), "band", "bh")
-            cross = (
-                idx.join(new, ["band", "bh"])
-                .filter(F.col("id_old") != F.col("id_new"))
-                .select(
-                    F.least("id_old", "id_new").alias("id_a"),
-                    F.greatest("id_old", "id_new").alias("id_b"),
-                )
-            )
-            cand = cand.select("id_a", "id_b").unionByName(cross)
-        cand = cand.select("id_a", "id_b").distinct()
-        sh_all = s.read.parquet(
-            os.path.join(self.sh_root, f"b{batch_id}"),
-            *committed_versions(self.sh_root, batch_id),
-        )
-        pairs = D._verified_jaccard(cand, sh_all, self.threshold).select(
-            "id_a", "id_b"
+        # stage 3 (stateful): the s19 band-index step against every
+        # committed prior version
+        pairs = band_index_step(
+            part, self.state_root, batch_id,
+            committed_versions(self.bands_root, batch_id),
+            committed_versions(self.sh_root, batch_id),
+            self.num_perm, self.bands, self.k, self.threshold,
         )
 
         # survivorship: every verified pair's id_b loses (x60's batch rule).
@@ -280,10 +221,10 @@ class StreamCurationSink:
             self.compact_after is not None
             and len(committed_versions(self.bands_root, 10**9)) >= self.compact_after
         ):
-            from hiveka_spark.streaming.neardup import compact_band_index
-
             # before=batch_id: the replay rule of hiveka_spark.commit
-            compact_band_index(s, self.state_root, before=batch_id)
+            compact_band_index(
+                batch_df.sparkSession, self.state_root, before=batch_id
+            )
 
 
 def curated_topic_config(

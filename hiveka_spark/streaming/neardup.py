@@ -6,11 +6,16 @@ micro-batch:
 
 1. computes MinHash band rows + shingle sets for ITS docs only,
 2. writes them to per-batch versioned dirs (``bands/b{id}``, ``sh/b{id}``,
-   overwrite — a checkpoint-replayed batch rewrites its own version),
+   published through :mod:`hiveka_spark.commit`, so a checkpoint-replayed
+   batch replaces its own version whole),
 3. probes the committed band index of all PRIOR batches for cross-batch
    candidates and self-joins for within-batch candidates,
 4. Jaccard-verifies both against the accumulated shingle store, and
 5. emits verified pairs to ``pairs/b{id}``.
+
+Steps 1-4 are :func:`band_index_step`, shared with the live curation sink
+(``streaming/curation.py``) and the batch incremental index
+(``operators/incremental.py``).
 
 Convergence contract (batch-split invariance): a pair (a, b) is
 discovered exactly once — when the later doc arrives — so the union of
@@ -33,7 +38,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from hiveka_spark import commit
 from hiveka_spark.scratch import scratch_dir
@@ -79,6 +84,91 @@ def read_bands(
     for f in frames[1:]:
         out = out.unionByName(f)
     return out
+
+
+def band_index_step(
+    batch: DataFrame,
+    state_root: str,
+    version: int,
+    prior_bands: list[str],
+    prior_sh: list[str],
+    num_perm: int,
+    bands: int,
+    k: int,
+    threshold: float,
+) -> DataFrame:
+    """Add the (doc_id, text) frame ``batch`` to the band index under
+    ``state_root`` as version ``version`` and return its verified
+    (id_a, id_b, jaccard) pairs: within the batch, and against the
+    ``prior_bands`` index dirs, verified over the batch's shingles plus
+    ``prior_sh``.
+
+    The shingles are written once to ``sh/b{version}`` and the bands are
+    derived from the read-back frame, so the batch is tokenized once and
+    the parquet round trip doubles as the persist.  Both versions publish
+    through :func:`hiveka_spark.commit.write_version`.  The batch's
+    ``bh_bucket`` set rides the band write as an ``Observation``, so the
+    probe prunes the committed index to those buckets (:func:`read_bands`)
+    without a job of its own."""
+    from hiveka_spark.operators import dedup as D
+
+    s = batch.sparkSession
+    sh_dir = os.path.join(state_root, "sh", f"b{version}")
+    bands_dir = os.path.join(state_root, "bands", f"b{version}")
+    commit.write_version(
+        sh_dir,
+        D._shingle_sets(batch, "doc_id", "text", k, reuse=False)
+        .write.mode("overwrite").parquet,
+    )
+    rows = D.minhash_band_rows(
+        None, num_perm=num_perm, bands=bands, shingle_df=s.read.parquet(sh_dir)
+    )
+    if prior_bands:
+        obs = Observation()
+        rows = rows.observe(
+            obs,
+            F.collect_set(F.pmod(F.col("bh"), F.lit(N_BH_BUCKETS))).alias("bk"),
+        )
+    commit.write_version(bands_dir, rows.write.mode("overwrite").parquet)
+    cur = s.read.parquet(bands_dir)
+    a = cur.select(F.col("doc").alias("id_a"), "band", "bh")
+    b = cur.select(F.col("doc").alias("id_b"), "band", "bh")
+    cand = a.join(b, ["band", "bh"]).filter(F.col("id_a") < F.col("id_b"))
+    if prior_bands:
+        idx = read_bands(s, prior_bands, bh_buckets=list(obs.get["bk"])).select(
+            F.col("doc").alias("id_old"), "band", "bh"
+        )
+        new = cur.select(F.col("doc").alias("id_new"), "band", "bh")
+        cross = (
+            idx.join(new, ["band", "bh"])
+            # a doc_id re-ingested in a later version matches its own index
+            # rows: without this guard it would pair with itself (jaccard
+            # 1.0), a pair the one-shot batch operator never produces
+            .filter(F.col("id_old") != F.col("id_new"))
+            .select(
+                F.least("id_old", "id_new").alias("id_a"),
+                F.greatest("id_old", "id_new").alias("id_b"),
+            )
+        )
+        cand = cand.select("id_a", "id_b").unionByName(cross)
+    cand = cand.select("id_a", "id_b").distinct()
+    return D._verified_jaccard(cand, s.read.parquet(sh_dir, *prior_sh), threshold)
+
+
+def _drain_files(spark: SparkSession, src_dir: str, sink, checkpoint_dir: str) -> None:
+    """Run the parquet files of ``src_dir`` through the foreachBatch
+    ``sink``, one file per micro-batch, until none is left."""
+    (
+        spark.readStream.schema(spark.read.parquet(src_dir).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(sink)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def committed_versions(root: str, before: int) -> list[str]:
@@ -159,15 +249,11 @@ def stream_minhash_dedup(
     A long-running ingest otherwise pays O(batches) version-dir listing
     on every probe forever; N bounds it at a constant.  The pairs store
     (pure emission log, never probed) stays per-batch."""
-    from hiveka_spark.operators import dedup as D
-
     src_dir = scratch_dir(prefix="sneardup_src_")
     state_root = state_root or scratch_dir(prefix="sneardup_state_")
     bands_root = os.path.join(state_root, "bands")
     sh_root = os.path.join(state_root, "sh")
     pairs_root = os.path.join(state_root, "pairs")
-    for p in (bands_root, sh_root, pairs_root):
-        os.makedirs(p, exist_ok=True)
     # Collision guard: this run's versions (starting at id_offset) must
     # sort strictly after every existing committed version, or batch 0
     # would OVERWRITE the prior corpus's b0 state and silently corrupt
@@ -188,97 +274,27 @@ def stream_minhash_dedup(
     docs.select("doc_id", "text").repartition(n_batches).write.mode(
         "overwrite"
     ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_id = batch_id + id_offset
-        s = batch_df.sparkSession
-        # write this batch's shingles FIRST, read them back, and derive
-        # band rows FROM the read-back frame: one tokenization pass per
-        # batch instead of two, and the parquet round trip doubles as the
-        # persist (each frame feeds two consumers) while making replay
-        # idempotent (overwrite by id)
-        D._shingle_sets(batch_df, "doc_id", "text", k, reuse=False).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(sh_root, f"b{batch_id}"))
-        sh_cur = s.read.parquet(os.path.join(sh_root, f"b{batch_id}"))
-        prior_bands = committed_versions(bands_root, batch_id)
-        bands_out = D.minhash_band_rows(
-            None, "doc_id", "text",
-            num_perm=num_perm, bands=bands, k=k, reuse=False, shingle_df=sh_cur,
+        pairs = band_index_step(
+            batch_df, state_root, batch_id,
+            committed_versions(bands_root, batch_id),
+            committed_versions(sh_root, batch_id),
+            num_perm, bands, k, threshold,
         )
-        obs = None
-        if prior_bands:
-            # the batch's distinct bh_buckets ride the band-write job as an
-            # Observation accumulator (r16, guide §1.2: replaces a separate
-            # distinct+collect job per micro-batch for <= N_BH_BUCKETS ints)
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            bands_out = bands_out.observe(
-                obs,
-                F.collect_set(
-                    F.pmod(F.col("bh"), F.lit(N_BH_BUCKETS))
-                ).alias("bk"),
-            )
-        bands_out.write.mode("overwrite").parquet(
-            os.path.join(bands_root, f"b{batch_id}")
+        commit.write_version(
+            os.path.join(pairs_root, f"b{batch_id}"),
+            pairs.write.mode("overwrite").parquet,
         )
-        bands_cur = s.read.parquet(os.path.join(bands_root, f"b{batch_id}"))
-        sh_all = s.read.parquet(
-            os.path.join(sh_root, f"b{batch_id}"),
-            *committed_versions(sh_root, batch_id),
-        )
-        a = bands_cur.select(F.col("doc").alias("id_a"), "band", "bh")
-        b = bands_cur.select(F.col("doc").alias("id_b"), "band", "bh")
-        cand = a.join(b, ["band", "bh"]).filter(F.col("id_a") < F.col("id_b"))
-        if prior_bands:
-            # everything the probe join could match lives in the batch's
-            # bucket set, so the committed c-segment prunes to matching
-            # partition dirs before any read
-            buckets = list(obs.get["bk"])
-            idx = read_bands(s, prior_bands, bh_buckets=buckets).select(
-                F.col("doc").alias("id_old"), "band", "bh"
-            )
-            new = bands_cur.select(F.col("doc").alias("id_new"), "band", "bh")
-            cross = (
-                idx.join(new, ["band", "bh"])
-                # a doc_id re-ingested in a later batch/run matches its own
-                # band index entries; without this filter it would emit a
-                # degenerate self-pair (id_a == id_b, jaccard 1.0) the
-                # one-shot batch operator can never produce, breaking
-                # batch-split invariance for re-ingested ids
-                .filter(F.col("id_old") != F.col("id_new"))
-                .select(
-                    F.least("id_old", "id_new").alias("id_a"),
-                    F.greatest("id_old", "id_new").alias("id_b"),
-                )
-            )
-            cand = cand.select("id_a", "id_b").unionByName(cross)
-        cand = cand.select("id_a", "id_b").distinct()
-        D._verified_jaccard(cand, sh_all, threshold).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(pairs_root, f"b{batch_id}"))
         if (
             compact_after is not None
             and len(committed_versions(bands_root, 10**9)) >= compact_after
         ):
             # before=batch_id: the replay rule of hiveka_spark.commit
-            compact_band_index(s, state_root, before=batch_id)
+            compact_band_index(batch_df.sparkSession, state_root, before=batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_sneardup_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_files(spark, src_dir, sink, scratch_dir(prefix="ckpt_sneardup_"))
     emitted = committed_versions(pairs_root, 10**9)
     assert emitted, "no micro-batch emitted pairs output"
     return spark.read.parquet(*emitted).distinct()
@@ -296,8 +312,9 @@ def make_substring_sink(state_root: str, min_len: int = 10,
     """foreachBatch sink for :func:`stream_substring_dedup` — exposed so
     the kill-and-resume test can wrap it (the s23 _CrashBefore pattern).
 
-    Store layout (the s16/s19 versioned-dir discipline, everything
-    overwrite-by-batch-id so checkpoint replay is idempotent):
+    Store layout (the s16/s19 versioned-dir discipline, every version
+    published through :mod:`hiveka_spark.commit` so checkpoint replay is
+    idempotent):
 
     - ``wc/b{id}``: this batch's window-count segment — per distinct
       window hash (h, cnt, first_doc, first_pos).  The (doc, pos0) of the
@@ -325,8 +342,6 @@ def make_substring_sink(state_root: str, min_len: int = 10,
 
     wc_root = os.path.join(state_root, "wc")
     starts_root = os.path.join(state_root, "starts")
-    for p in (wc_root, starts_root):
-        os.makedirs(p, exist_ok=True)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -335,15 +350,19 @@ def make_substring_sink(state_root: str, min_len: int = 10,
         _sizes, occ = _window_occurrences(
             batch_df, "text", "doc_id", min_len, checkpoint=True
         )
-        occ.groupBy("h").agg(
-            F.count(F.lit(1)).cast("bigint").alias("cnt"),
-            F.min(F.struct("doc", "pos0")).alias("first"),
-        ).select(
-            "h", "cnt",
-            F.col("first.doc").alias("first_doc"),
-            F.col("first.pos0").alias("first_pos"),
-        ).write.mode("overwrite").parquet(os.path.join(wc_root, f"b{batch_id}"))
-        own = s.read.parquet(os.path.join(wc_root, f"b{batch_id}"))
+        own_dir = os.path.join(wc_root, f"b{batch_id}")
+        commit.write_version(
+            own_dir,
+            occ.groupBy("h").agg(
+                F.count(F.lit(1)).cast("bigint").alias("cnt"),
+                F.min(F.struct("doc", "pos0")).alias("first"),
+            ).select(
+                "h", "cnt",
+                F.col("first.doc").alias("first_doc"),
+                F.col("first.pos0").alias("first_pos"),
+            ).write.mode("overwrite").parquet,
+        )
+        own = s.read.parquet(own_dir)
 
         prior_dirs = wc_committed_versions(wc_root, batch_id)
         if prior_dirs:
@@ -373,8 +392,9 @@ def make_substring_sink(state_root: str, min_len: int = 10,
         else:
             duph0 = own.filter(F.col("cnt") >= 2).select("h")
             starts_out = occ.join(duph0, "h").select("doc", "pos0")
-        starts_out.distinct().write.mode("overwrite").parquet(
-            os.path.join(starts_root, f"b{batch_id}")
+        commit.write_version(
+            os.path.join(starts_root, f"b{batch_id}"),
+            starts_out.distinct().write.mode("overwrite").parquet,
         )
         # trigger on COMMITTED dirs, not the shadowed live view: after a
         # crashed fold the live count collapses to 1 while the folded
@@ -431,22 +451,9 @@ def stream_substring_dedup(
         docs.select("doc_id", "text").repartition(n_batches).write.mode(
             "overwrite"
         ).parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     sink = sink_fn or make_substring_sink(state_root, min_len,
                                           compact_after=compact_after)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_files(spark, src_dir, sink, checkpoint_dir)
     emitted = committed_versions(os.path.join(state_root, "starts"), 10**9)
     assert emitted, "no micro-batch emitted starts output"
     starts = spark.read.parquet(*emitted).distinct()

@@ -25,6 +25,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from hiveka_spark import commit
+
+
 def events_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -246,12 +249,16 @@ def run_foreach_batch_parquet(
     stream_df: DataFrame, out_dir: str, checkpoint: str, output_mode: str = "append"
 ) -> None:
     """Exactly-once idempotent sink: foreachBatch writes each micro-batch as
-    parquet keyed by batch id (re-run of a batch overwrites, not duplicates).
+    parquet keyed by batch id, published through :mod:`hiveka_spark.commit`
+    (a re-run of a batch replaces its version whole, never duplicates it).
     Unlike the memory sink this supports CHECKPOINT RECOVERY — a restarted
     query resumes source offsets and keyed state and continues batch ids."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={batch_id}"))
+        commit.write_version(
+            os.path.join(out_dir, f"batch={batch_id}"),
+            batch_df.write.mode("overwrite").parquet,
+        )
 
     q = (
         stream_df.writeStream.foreachBatch(sink)

@@ -144,6 +144,7 @@ class VersionedUpsertSink:
         if prev_path is not None:
             prev = batch_df.sparkSession.read.parquet(prev_path)
             reduced = self.merge(prev, reduced)
-        staged = os.path.join(self.state_root, f"_staging_v{batch_id}")
-        reduced.write.mode("overwrite").parquet(staged)
-        commit.publish(staged, os.path.join(self.state_root, f"v{batch_id}"))
+        commit.write_version(
+            os.path.join(self.state_root, f"v{batch_id}"),
+            reduced.write.mode("overwrite").parquet,
+        )

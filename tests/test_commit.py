@@ -285,6 +285,37 @@ def _upsert_sink():
     return setup, act, read
 
 
+def _band_index_step():
+    # the act replays version 1 over a committed b1 that an earlier run of
+    # it left behind: its sh and bands versions must not cost the committed
+    # ones
+    def step(spark, state, version, texts):
+        from hiveka_spark import commit
+        from hiveka_spark.streaming.neardup import band_index_step
+
+        batch = spark.createDataFrame(
+            [(10 * version + i, t) for i, t in enumerate(texts)],
+            "doc_id bigint, text string",
+        ).coalesce(1)
+        band_index_step(
+            batch, state, version,
+            commit.committed(f"{state}/bands", version),
+            commit.committed(f"{state}/sh", version),
+            num_perm=4, bands=2, k=2, threshold=0.5,
+        )
+
+    def setup(spark, state):
+        step(spark, state, 0, ["a b c d", "a b c e"])
+        step(spark, state, 1, ["x y z", "a b c d"])
+
+    def act(spark, state):
+        step(spark, state, 1, ["p q r s", "a b c e f"])
+
+    return setup, act, lambda state: [
+        _live_rows(f"{state}/{r}") for r in ("sh", "bands")
+    ]
+
+
 def _ivf_segments():
     # the act replays segment v=1 over a committed copy of other vectors
     def frames(spark, ids):
@@ -317,6 +348,7 @@ def _ivf_segments():
 
 STORES = {
     "band_index": _band_index,
+    "band_index_step": _band_index_step,
     "window_counts": _window_counts,
     "probe_store": _probe_store,
     "edge_cells": _edge_cells,
