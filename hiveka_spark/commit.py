@@ -4,11 +4,13 @@ A store is a directory of versions named ``<prefix><id>`` (``b3``, ``c7``,
 ``v12``, ``v=4``).  Its versions change only through this module:
 
 - **Stage, mark, rename.**  A writer builds a new version under a staging
-  path that no reader lists (:func:`write_version` stages ``<name>`` as
-  ``_staging_<name>`` beside it), :func:`publish` writes the ``_SUCCESS``
-  marker inside the staged dir, then one atomic rename moves it to its
-  target.  The rename is the commit point: before it the old state is
-  whole, after it the new version is whole.
+  path that no reader lists (:func:`staging_path`: ``_staging_<name>``
+  beside the target), :func:`publish` writes the ``_SUCCESS`` marker
+  inside the staged dir, then one atomic rename moves it to its target.
+  :func:`write_version` does this for one version; :func:`staging` holds
+  one staged write that publishes several, such as a Spark write
+  partitioned by target store.  The rename is the commit point: before
+  it the old state is whole, after it the new version is whole.
 - **Readers see only marked dirs** (:func:`committed`).  A half-written
   dir, such as a crashed direct Spark write, has no marker and is never
   read.
@@ -42,7 +44,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 MARKER = "_SUCCESS"
 
@@ -111,13 +114,31 @@ def publish(staged: str, target: str) -> None:
     os.rename(staged, target)
 
 
-def write_version(target: str, write: Callable[[str], None]) -> None:
-    """Publish one version: ``write(staged)`` builds it at ``_staging_<name>``
-    beside ``target``, then :func:`publish` moves it into place."""
+def staging_path(target: str) -> str:
+    """Where ``target`` is staged: ``_staging_<name>`` beside it, a name
+    no listing of this module matches."""
     root, name = os.path.split(target)
-    staged = os.path.join(root, f"_staging_{name}")
+    return os.path.join(root, f"_staging_{name}")
+
+
+def write_version(target: str, write: Callable[[str], None]) -> None:
+    """Publish one version: ``write(staged)`` builds it at the
+    :func:`staging_path` of ``target``, then :func:`publish` moves it into
+    place."""
+    staged = staging_path(target)
     write(staged)
     publish(staged, target)
+
+
+@contextmanager
+def staging(target: str) -> Iterator[str]:
+    """The :func:`staging_path` of ``target`` for a block that publishes
+    parts of it: a crashed predecessor's staged dir is removed before the
+    block, and whatever the block left unpublished is removed after it."""
+    staged = staging_path(target)
+    shutil.rmtree(staged, ignore_errors=True)
+    yield staged
+    shutil.rmtree(staged, ignore_errors=True)
 
 
 def fold_inputs(root: str, before: int) -> list[str]:
@@ -148,7 +169,7 @@ def fold(
     ``write(inputs, staged)`` writes their merged copy to ``staged``."""
     inputs = fold_inputs(root, before)
     if inputs:
-        staged = os.path.join(root, "_compact_tmp")
+        staged = staging_path(os.path.join(root, "fold"))
         write(inputs, staged)
         publish_fold(staged, inputs)
 

@@ -1936,34 +1936,31 @@ def compact_edge_cells(
     one write partitioned by home cell.  Each cell's partition is then
     published on its own (:func:`hiveka_spark.commit.publish_fold`), so
     a crash mid-publish leaves some cells folded and the rest untouched;
-    a crashed staging write is discarded up front and refolded."""
-    import shutil as _shutil
-
-    staging = os.path.join(edges_root, "_fold_staging")
-    _shutil.rmtree(staging, ignore_errors=True)  # crashed predecessor
-    fold = []  # (cell, live input dirs)
-    for c in cells:
-        inputs = commit.fold_inputs(os.path.join(edges_root, f"hc{c}"), before)
-        if inputs:
-            fold.append((c, inputs))
-    if not fold:
-        return
-    w = Window.partitionBy("query_id")
-    (
-        spark.read.parquet(*[d for _, inputs in fold for d in inputs])
-        .withColumn("_vm", F.max("_v").over(w))
-        .filter(F.col("_v") == F.col("_vm"))
-        .drop("_vm")
-        # duplicate the partition column so the data files keep `home`
-        # (the sink's own staging convention)
-        .withColumn("hc", F.col("home"))
-        .write.mode("overwrite")
-        .partitionBy("hc")
-        .parquet(staging)
-    )
-    for c, inputs in fold:
-        commit.publish_fold(os.path.join(staging, f"hc={c}"), inputs)
-    _shutil.rmtree(staging, ignore_errors=True)
+    a crashed staging write is discarded up front and refolded
+    (:func:`hiveka_spark.commit.staging`)."""
+    with commit.staging(os.path.join(edges_root, "fold")) as staged:
+        fold = []  # (cell, live input dirs)
+        for c in cells:
+            inputs = commit.fold_inputs(os.path.join(edges_root, f"hc{c}"), before)
+            if inputs:
+                fold.append((c, inputs))
+        if not fold:
+            return
+        w = Window.partitionBy("query_id")
+        (
+            spark.read.parquet(*[d for _, inputs in fold for d in inputs])
+            .withColumn("_vm", F.max("_v").over(w))
+            .filter(F.col("_v") == F.col("_vm"))
+            .drop("_vm")
+            # duplicate the partition column so the data files keep `home`
+            # (the sink's own staging convention)
+            .withColumn("hc", F.col("home"))
+            .write.mode("overwrite")
+            .partitionBy("hc")
+            .parquet(staged)
+        )
+        for c, inputs in fold:
+            commit.publish_fold(os.path.join(staged, f"hc={c}"), inputs)
 
 
 def make_knn_graph_sink(
@@ -2040,8 +2037,6 @@ def make_knn_graph_sink(
     Theta(involved x k) rows — vs Theta(corpus x k) for the full-rewrite
     design (measured side by side in SCALE.md).
     Reads amortize via the per-cell fold cadence."""
-    import shutil as _shutil
-
     index_root = os.path.join(state_root, "index")
     probes_root = os.path.join(state_root, "probes")
     edges_root = os.path.join(state_root, "edges")
@@ -2134,28 +2129,27 @@ def make_knn_graph_sink(
         wr = Window.partitionBy("query_id").orderBy(
             F.col("cosine").desc(), F.col("neighbor_id")
         )
-        staging = os.path.join(edges_root, f"_staging_b{version}")
-        (
-            merged.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-            .filter(F.col("rank") <= k)
-            .withColumn("_v", F.lit(version).cast("bigint"))
-            # duplicate the partition column so the data files keep `home`
-            .withColumn("hc", F.col("home"))
-            .write.mode("overwrite")
-            .partitionBy("hc")
-            .parquet(staging)
-        )
-        # per-cell publish of each staged partition (cells with no rows
-        # stage nothing)
-        for name in sorted(os.listdir(staging)):
-            if not name.startswith("hc="):
-                continue
-            cell_dir = os.path.join(edges_root, f"hc{name[3:]}")
-            os.makedirs(cell_dir, exist_ok=True)
-            commit.publish(
-                os.path.join(staging, name), os.path.join(cell_dir, f"b{version}")
+        with commit.staging(os.path.join(edges_root, f"b{version}")) as staged:
+            (
+                merged.withColumn("rank", F.row_number().over(wr).cast("bigint"))
+                .filter(F.col("rank") <= k)
+                .withColumn("_v", F.lit(version).cast("bigint"))
+                # duplicate the partition column so the data files keep `home`
+                .withColumn("hc", F.col("home"))
+                .write.mode("overwrite")
+                .partitionBy("hc")
+                .parquet(staged)
             )
-        _shutil.rmtree(staging, ignore_errors=True)
+            # per-cell publish of each staged partition (cells with no rows
+            # stage nothing)
+            for name in sorted(os.listdir(staged)):
+                if not name.startswith("hc="):
+                    continue
+                cell_dir = os.path.join(edges_root, f"hc{name[3:]}")
+                os.makedirs(cell_dir, exist_ok=True)
+                commit.publish(
+                    os.path.join(staged, name), os.path.join(cell_dir, f"b{version}")
+                )
         try:
             commit.write_version(
                 os.path.join(probes_root, f"b{version}"),

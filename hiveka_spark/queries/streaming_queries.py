@@ -4,19 +4,25 @@ run through the same correctness gate as batch queries.
 The reference's "streaming" is repeated batch pulls of new offset ranges
 (KafkaInputFormat.java:471-501 resume + TODO.md:6-9 queries on top); the
 Spark-native equivalent is a real micro-batch stream.  Each entry here runs
-a file-source stream (same DataFrame DAG as a Kafka source — see
-hiveka_spark.streaming.pipeline) to completion with trigger(availableNow)
-and returns the drained result, so the driver can hash-compare it against a
-batch DuckDB oracle: the streaming plan must converge to the batch answer.
+a file-source or simulated-Kafka stream (the same DataFrame DAG as a Kafka
+source) to completion and returns the drained result, so the correctness
+gate can hash-compare it against a batch DuckDB oracle: the streaming plan
+must converge to the batch answer.  Checkpoints go to fresh temp dirs — each
+invocation is a fresh run, not a resume.  Two drains of
+:mod:`hiveka_spark.streaming.pipeline` run every stream:
 
-Complete output mode is used for windowed aggregations (no rows withheld by
-the final watermark), append for dedup.  Checkpoints go to fresh temp dirs —
-each invocation is a fresh run, not a resume.
-
-Every drain pins a state partition count sized to its key cardinality at
-gate scale (per-partition state-store setup is a fixed cost — see
-pipeline.run_available_now); production deployments size this to their
-cluster instead.
+- s01–s15, s17 and s18 collect through the memory sink
+  (``run_available_now``, via :func:`_drain`).  Complete output mode is
+  used for windowed aggregations (no rows withheld by the final
+  watermark), append for dedup, and each pins a state partition count
+  sized to its key cardinality at gate scale (per-partition state-store
+  setup is a fixed cost); production deployments size this to their
+  cluster instead.
+- s16 and s19–s33 hand each micro-batch to an idempotent foreachBatch
+  sink (``drain``).  The file-stream entries write their input as 4
+  parquet files and drain one file per micro-batch (``drain_files``), so
+  every sink runs 4 real micro-batches; s23–s26 drain a raw Kafka topic
+  through the live curation sink (:func:`_live_curation`).
 """
 
 from __future__ import annotations
@@ -40,6 +46,23 @@ def _drain(
         checkpoint=scratch_dir(prefix=f"ckpt_{name}_"),
         shuffle_partitions=shuffle_partitions,
     )
+
+
+def _upsert_snapshot(
+    spark: SparkSession, src_dir: str, name: str, batch_reduce, merge
+) -> DataFrame:
+    """Drain the files of ``src_dir`` through a
+    :class:`~hiveka_spark.streaming.upsert.VersionedUpsertSink` and return
+    its final snapshot."""
+    from hiveka_spark.streaming.upsert import VersionedUpsertSink
+
+    sink = VersionedUpsertSink(
+        scratch_dir(prefix=f"gate_{name}state_"), batch_reduce, merge
+    )
+    P.drain_files(spark, src_dir, sink, scratch_dir(prefix=f"ckpt_{name}_"))
+    final = sink.latest_path()
+    assert final is not None
+    return spark.read.parquet(final)
 
 
 @register(
@@ -660,25 +683,18 @@ def s16_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     version key + disk-derived predecessor together give the MERGE-style
     idempotence a Delta/Iceberg sink provides natively.
 
-    The fixture is re-written as 4 parquet files and streamed with
-    maxFilesPerTrigger=1, so the merge logic is exercised across 4 REAL
-    micro-batches (a single-batch drain would never merge at all — the s07
-    lesson).  The drained final snapshot must equal the batch aggregate of
-    the whole table — streaming-upsert convergence, hash-checked."""
+    The fixture is re-written as 4 parquet files and drained one file per
+    micro-batch (``drain_files``), so the merge logic is exercised across 4
+    real micro-batches (a single-batch drain would never merge at all).
+    The drained final snapshot must equal the batch aggregate of the whole
+    table — streaming-upsert convergence, hash-checked."""
 
     from hiveka_spark.catalog import table
-    from hiveka_spark.streaming.upsert import VersionedUpsertSink
 
-    src_dir = scratch_dir(prefix="gate_fbsrc_")
-    state_root = scratch_dir(prefix="gate_fbstate_")
+    src_dir = scratch_dir(prefix="gate_s16src_")
     ev = table(spark, sf_dir, "events").select("user_id", "ts", "value")
     ev.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+
     def batch_reduce(batch_df: DataFrame) -> DataFrame:
         return batch_df.groupBy("user_id").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
@@ -699,18 +715,7 @@ def s16_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    sink = VersionedUpsertSink(state_root, batch_reduce, merge)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_s16_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = sink.latest_path()
-    assert final is not None
-    return spark.read.parquet(final)
+    return _upsert_snapshot(spark, src_dir, "s16", batch_reduce, merge)
 
 
 @register(
@@ -848,8 +853,8 @@ def s19_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-joins for within-batch candidates, Jaccard-verifies both against
     the accumulated shingle store, and appends its bands/shingles to the
     index.  The fixture is streamed as 4 real micro-batches
-    (maxFilesPerTrigger=1 — the s07/s16 lesson), so the index is genuinely
-    built and probed incrementally.
+    (``drain_files``), so the index is genuinely built and probed
+    incrementally.
 
     Convergence contract: a near-dup pair (a, b) is discovered exactly once
     — when the later of the two docs arrives (same-batch pairs by the batch
@@ -918,10 +923,12 @@ def s20_stream_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator shape — and the union of per-batch outputs must equal x62's
     one-shot batch answer, which is exactly what the shared oracle checks.
 
-    4 real micro-batches (maxFilesPerTrigger=1); per-batch results go to
-    versioned dirs (replay-idempotent, the s16/s19 discipline)."""
+    4 real micro-batches (``drain_files``); each batch's result is
+    published as ``b{batch_id}`` through :mod:`hiveka_spark.commit`, so a
+    replayed batch replaces its own version whole."""
     import os
 
+    from hiveka_spark import commit
     from hiveka_spark.catalog import table
     from hiveka_spark.operators import dedup as D
     from hiveka_spark.queries.extensions import _BLOOM_H, _BLOOM_M, _EVAL_SOURCES
@@ -937,27 +944,17 @@ def s20_stream_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = scratch_dir(prefix="gate_s20src_")
     out_root = scratch_dir(prefix="gate_s20out_")
     tr.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        D.bloom_probe(
-            batch_df, bitset, ev_sh, "doc_id", "text",
-            k=3, m_bits=_BLOOM_M, n_hashes=_BLOOM_H,
-        ).write.mode("overwrite").parquet(os.path.join(out_root, f"b{batch_id}"))
+        commit.write_version(
+            os.path.join(out_root, f"b{batch_id}"),
+            D.bloom_probe(
+                batch_df, bitset, ev_sh, "doc_id", "text",
+                k=3, m_bits=_BLOOM_M, n_hashes=_BLOOM_H,
+            ).write.mode("overwrite").parquet,
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_s20_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    P.drain_files(spark, src_dir, sink, scratch_dir(prefix="ckpt_s20_"))
     emitted = committed_versions(out_root, 10**9)
     assert len(emitted) >= 3, f"expected >=3 micro-batches, got {len(emitted)}"
     return spark.read.parquet(*emitted)
@@ -1003,22 +1000,14 @@ def s21_stream_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_upsert.py), and never holds stream-length state in memory.
     Only MERGEABLE stats qualify (counts/sums; x50's exact distinct counts
     and discrete median need the full corpus — at 100 TB those become
-    sketches).  4 real micro-batches; drained snapshot must equal the batch
-    aggregate."""
+    sketches).  4 real micro-batches (``drain_files``); drained snapshot
+    must equal the batch aggregate."""
     from hiveka_spark.catalog import table
     from hiveka_spark.operators.text import tokens
-    from hiveka_spark.streaming.upsert import VersionedUpsertSink
 
     src_dir = scratch_dir(prefix="gate_s21src_")
-    state_root = scratch_dir(prefix="gate_s21state_")
     d = table(spark, sf_dir, "documents").select("doc_id", "text", "source", "n_chars")
     d.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def batch_reduce(batch_df: DataFrame) -> DataFrame:
         return (
@@ -1044,18 +1033,7 @@ def s21_stream_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    sink = VersionedUpsertSink(state_root, batch_reduce, merge)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_s21_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = sink.latest_path()
-    assert final is not None
-    return spark.read.parquet(final)
+    return _upsert_snapshot(spark, src_dir, "s21", batch_reduce, merge)
 
 
 @register(
@@ -1073,11 +1051,12 @@ def s22_stream_kafka_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     via foreachBatch + the batch producer, with batch-id commit markers so
     a checkpoint-replayed micro-batch never appends twice (see
     streaming/kafka_sink.py for the exactly-once contract).  4 real
-    micro-batches produce Avro-framed records into the SimBroker topic;
-    after the drain, a REPLAY of the last committed batch id is simulated
-    and asserted to leave every partition's end offset unchanged; the topic
-    is then batch-read + decode_wire'd back — one oracle certifies the
-    whole encode -> produce -> log -> scan -> decode loop per document."""
+    micro-batches (``drain_files``) produce Avro-framed records into the
+    SimBroker topic; after the drain, a REPLAY of the last committed batch
+    id is simulated and asserted to leave every partition's end offset
+    unchanged; the topic is then batch-read + decode_wire'd back — one
+    oracle certifies the whole encode -> produce -> log -> scan -> decode
+    loop per document."""
     from hiveka_spark.catalog import table
     from hiveka_spark.sources.kafka_io import (
         KafkaTableConfig,
@@ -1102,25 +1081,12 @@ def s22_stream_kafka_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", F.col("n_chars").cast("bigint").alias("n_chars"))
     )
     curated.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     sink = KafkaStreamSink(
         cfg, "curated_out", scratch_dir(prefix="gate_s22commits_"),
         broker=broker, key_col="doc_id",
     )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_s22_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    P.drain_files(spark, src_dir, sink, scratch_dir(prefix="ckpt_s22_"))
     committed = sink.committed_batches()
     assert len(committed) >= 3, f"expected >=3 produced micro-batches, got {committed}"
 
@@ -1138,6 +1104,99 @@ def s22_stream_kafka_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # s23 — the LIVE pipeline: ingest topic -> curate -> compacted curated topic
 # ---------------------------------------------------------------------------
+
+
+def _live_curation(
+    spark: SparkSession,
+    d: DataFrame,
+    tag: str,
+    payload_cols: tuple[str, ...] = ("lang", "n_chars"),
+):
+    """The live curation pipeline of s23–s26 over the source corpus ``d``:
+    the eval Bloom bitset, a SimBroker with a raw and a log-compacted
+    curated topic, and state, commit and checkpoint roots, all isolated
+    per ``tag``.  ``payload_cols`` is what the curated topic carries
+    beside ``doc_id``: s23's default holds no text (the shape the
+    benchmark uses too); s24–s26 carry the text for tokenization.
+
+    Returns ``(raw, run, read)``:
+
+    - ``raw``: the training docs of ``d`` (the eval sources removed);
+    - ``run(docs)`` produces ``docs`` onto the raw topic, drains whatever
+      the raw topic holds through a fresh
+      :class:`~hiveka_spark.streaming.curation.StreamCurationSink` on the
+      same roots (the kill-and-resume posture: only the on-disk state
+      carries over), and returns the curated topic's end offsets from
+      before the drain, where what it produced starts;
+    - ``read(**kw)`` is ``read_compacted`` of the curated topic."""
+    from hiveka_spark.operators import dedup as D
+    from hiveka_spark.queries.extensions import _BLOOM_H, _BLOOM_M, _EVAL_SOURCES
+    from hiveka_spark.sources.kafka_io import (
+        KafkaTableConfig,
+        decode_wire,
+        write_kafka,
+    )
+    from hiveka_spark.sources.kafka_sim import SimBroker
+    from hiveka_spark.streaming.curation import (
+        StreamCurationSink,
+        curated_topic_config,
+        read_compacted,
+    )
+    from hiveka_spark.streaming.kafka_sink import KafkaStreamSink
+
+    is_eval = F.col("source").isin(*_EVAL_SOURCES)
+    ev_sh = D.eval_shingle_set(d.filter(is_eval), "text", k=3).localCheckpoint(
+        eager=True
+    )
+    bitset = D.build_bloom_bitset(ev_sh, _BLOOM_M, _BLOOM_H)
+    raw = d.filter(~is_eval).select(
+        "doc_id", "text", "lang", F.col("n_chars").cast("bigint").alias("n_chars")
+    )
+
+    raw_topic, cur_topic = f"docs_raw{tag}", f"docs_curated{tag}"
+    broker = SimBroker(scratch_dir(prefix=f"gate_s{tag}broker_"))
+    cfg_in = KafkaTableConfig(
+        bootstrap_servers="sim://gate",
+        whitelist_topics=[raw_topic],
+        ddl="doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT",
+    )
+    broker.create_topic(raw_topic, partitions=4)
+    cfg_out = curated_topic_config(
+        "sim://gate", cur_topic, with_text="text" in payload_cols
+    )
+    broker.create_topic(cur_topic, partitions=4)
+    roots = {
+        k: scratch_dir(prefix=f"gate_s{tag}{k}_")
+        for k in ("state", "commits", "ckpt")
+    }
+
+    def run(docs: DataFrame) -> dict[int, int]:
+        start = {int(p): int(o) for p, o in broker.latest()[cur_topic].items()}
+        write_kafka(docs, cfg_in, raw_topic, key_col="doc_id", broker=broker)
+        sink = StreamCurationSink(
+            roots["state"],
+            KafkaStreamSink(
+                cfg_out, cur_topic, roots["commits"], broker=broker,
+                key_col="doc_id", tombstone_col="_tombstone",
+            ),
+            bitset, ev_sh,
+            num_perm=32, bands=8, k=3, threshold=0.8,
+            bloom_m=_BLOOM_M, bloom_h=_BLOOM_H,
+            payload_cols=payload_cols,
+        )
+        typed = decode_wire(
+            broker.stream(spark, raw_topic, max_files_per_trigger=1), cfg_in
+        ).select("doc_id", "text", "lang", "n_chars")
+        P.drain(typed, sink, roots["ckpt"])
+        committed = sink.produce_sink.committed_batches()
+        assert len(committed) >= 3, f"expected >=3 curated micro-batches, got {committed}"
+        return start
+
+    def read(**kw) -> DataFrame:
+        kw.setdefault("payload_cols", payload_cols)
+        return read_compacted(spark, cfg_out, broker=broker, **kw)
+
+    return raw, run, read
 
 
 def _s23_oracle(contain_pct: int = 50) -> str:
@@ -1240,142 +1299,15 @@ def s23_stream_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     produce->marker crash window compacts away; arrival-order
     convergence)."""
     from hiveka_spark.catalog import table
-    from hiveka_spark.operators import dedup as D
-    from hiveka_spark.queries.extensions import _BLOOM_H, _BLOOM_M, _EVAL_SOURCES
-    from hiveka_spark.sources.kafka_io import KafkaTableConfig, write_kafka
-    from hiveka_spark.sources.kafka_sim import SimBroker
-    from hiveka_spark.streaming.curation import (
-        StreamCurationSink,
-        curated_topic_config,
-        read_compacted,
-    )
-    from hiveka_spark.streaming.kafka_sink import KafkaStreamSink
 
-    d = table(spark, sf_dir, "documents")
-    ev = d.filter(F.col("source").isin(*_EVAL_SOURCES))
-    ev_sh = D.eval_shingle_set(ev, "text", k=3).localCheckpoint(eager=True)
-    bitset = D.build_bloom_bitset(ev_sh, _BLOOM_M, _BLOOM_H)
-
-    broker = SimBroker(scratch_dir(prefix="gate_s23broker_"))
-    cfg_in = KafkaTableConfig(
-        bootstrap_servers="sim://gate",
-        whitelist_topics=["docs_raw"],
-        ddl="doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT",
-    )
-    broker.create_topic("docs_raw", partitions=4)
-    raw = d.filter(~F.col("source").isin(*_EVAL_SOURCES)).select(
-        "doc_id", "text", "lang", F.col("n_chars").cast("bigint").alias("n_chars")
-    )
-    write_kafka(raw, cfg_in, "docs_raw", key_col="doc_id", broker=broker)
-
-    cfg_out = curated_topic_config("sim://gate", "docs_curated")
-    broker.create_topic("docs_curated", partitions=4)
-
-    from hiveka_spark.sources.kafka_io import decode_wire
-
-    typed = decode_wire(
-        broker.stream(spark, "docs_raw", max_files_per_trigger=1), cfg_in
-    ).select("doc_id", "text", "lang", "n_chars")
-
-    sink = StreamCurationSink(
-        scratch_dir(prefix="gate_s23state_"),
-        KafkaStreamSink(
-            cfg_out, "docs_curated", scratch_dir(prefix="gate_s23commits_"),
-            broker=broker, key_col="doc_id", tombstone_col="_tombstone",
-        ),
-        bitset, ev_sh,
-        num_perm=32, bands=8, k=3, threshold=0.8,
-        bloom_m=_BLOOM_M, bloom_h=_BLOOM_H,
-    )
-    q = (
-        typed.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_s23_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    committed = sink.produce_sink.committed_batches()
-    assert len(committed) >= 3, f"expected >=3 curated micro-batches, got {committed}"
-    return read_compacted(spark, cfg_out, broker=broker)
+    raw, run, read = _live_curation(spark, table(spark, sf_dir, "documents"), "23")
+    run(raw)
+    return read()
 
 
 # ---------------------------------------------------------------------------
 # s24 — token-certified manifest of the LIVE curated topic
 # ---------------------------------------------------------------------------
-
-
-def _live_curated_docs(spark: SparkSession, d: DataFrame, tag: str) -> DataFrame:
-    """Run the FULL live curation pipeline over the source corpus ``d`` and
-    return the curated docs READ BACK from the compacted topic — the
-    shared streaming preamble of the live token-certification gates (s24
-    manifest, s25 packing): Avro ingest topic -> s23 StreamCurationSink
-    (Gopher -> Bloom containment decontamination -> band-index near-dup
-    dedup, real tombstones) -> log-compacted curated topic carrying TEXT
-    in the payload -> ``read_compacted``.  ``tag`` isolates topics,
-    scratch dirs, and checkpoints per gate."""
-    from hiveka_spark.operators import dedup as D
-    from hiveka_spark.queries.extensions import _BLOOM_H, _BLOOM_M, _EVAL_SOURCES
-    from hiveka_spark.sources.kafka_io import (
-        KafkaTableConfig,
-        decode_wire,
-        write_kafka,
-    )
-    from hiveka_spark.sources.kafka_sim import SimBroker
-    from hiveka_spark.streaming.curation import (
-        StreamCurationSink,
-        curated_topic_config,
-        read_compacted,
-    )
-    from hiveka_spark.streaming.kafka_sink import KafkaStreamSink
-
-    ev = d.filter(F.col("source").isin(*_EVAL_SOURCES))
-    ev_sh = D.eval_shingle_set(ev, "text", k=3).localCheckpoint(eager=True)
-    bitset = D.build_bloom_bitset(ev_sh, _BLOOM_M, _BLOOM_H)
-
-    raw_topic, cur_topic = f"docs_raw{tag}", f"docs_curated{tag}"
-    broker = SimBroker(scratch_dir(prefix=f"gate_s{tag}broker_"))
-    cfg_in = KafkaTableConfig(
-        bootstrap_servers="sim://gate",
-        whitelist_topics=[raw_topic],
-        ddl="doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT",
-    )
-    broker.create_topic(raw_topic, partitions=4)
-    raw = d.filter(~F.col("source").isin(*_EVAL_SOURCES)).select(
-        "doc_id", "text", "lang", F.col("n_chars").cast("bigint").alias("n_chars")
-    )
-    write_kafka(raw, cfg_in, raw_topic, key_col="doc_id", broker=broker)
-
-    cfg_out = curated_topic_config("sim://gate", cur_topic, with_text=True)
-    broker.create_topic(cur_topic, partitions=4)
-
-    typed = decode_wire(
-        broker.stream(spark, raw_topic, max_files_per_trigger=1), cfg_in
-    ).select("doc_id", "text", "lang", "n_chars")
-
-    sink = StreamCurationSink(
-        scratch_dir(prefix=f"gate_s{tag}state_"),
-        KafkaStreamSink(
-            cfg_out, cur_topic, scratch_dir(prefix=f"gate_s{tag}commits_"),
-            broker=broker, key_col="doc_id", tombstone_col="_tombstone",
-        ),
-        bitset, ev_sh,
-        num_perm=32, bands=8, k=3, threshold=0.8,
-        bloom_m=_BLOOM_M, bloom_h=_BLOOM_H,
-        payload_cols=("text", "lang", "n_chars"),
-    )
-    q = (
-        typed.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix=f"ckpt_s{tag}_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    return read_compacted(
-        spark, cfg_out, broker=broker, payload_cols=("text", "lang", "n_chars")
-    )
 
 
 def _s23_curation_ctes(contain_pct: int = 50) -> str:
@@ -1524,7 +1456,9 @@ def s24_curated_token_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hiveka_spark.queries.curation_ext import _trained_merge_vocab
 
     d = table(spark, sf_dir, "documents")
-    cur = _live_curated_docs(spark, d, tag="24")
+    raw, run, read = _live_curation(spark, d, "24", ("text", "lang", "n_chars"))
+    run(raw)
+    cur = read()
 
     # tokenizer trained on the full SOURCE corpus (the x76/x81 posture —
     # one corpus pass; the curated set is a subset, so its units are in
@@ -1643,8 +1577,9 @@ def s25_live_packed_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hiveka_spark.catalog import table
 
     d = table(spark, sf_dir, "documents")
-    cur = _live_curated_docs(spark, d, tag="25")
-    return s25_packed(cur, d)
+    raw, run, read = _live_curation(spark, d, "25", ("text", "lang", "n_chars"))
+    run(raw)
+    return s25_packed(read(), d)
 
 
 # ---------------------------------------------------------------------------
@@ -1752,123 +1687,46 @@ def s26_live_incremental_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from hiveka_spark.catalog import table
-    from hiveka_spark.operators import dedup as D
     from hiveka_spark.queries.curation_ext import (
         _X95_V2_PRED,
         _trained_merge_vocab,
         x95_doc_manifest,
     )
-    from hiveka_spark.queries.extensions import _BLOOM_H, _BLOOM_M, _EVAL_SOURCES
-    from hiveka_spark.sources.kafka_io import (
-        KafkaTableConfig,
-        decode_wire,
-        write_kafka,
-    )
-    from hiveka_spark.sources.kafka_sim import SimBroker
-    from hiveka_spark.streaming.curation import (
-        StreamCurationSink,
-        curated_topic_config,
-        read_compacted,
-    )
-    from hiveka_spark.streaming.kafka_sink import KafkaStreamSink
 
     d = table(spark, sf_dir, "documents")
-    ev = d.filter(F.col("source").isin(*_EVAL_SOURCES))
-    ev_sh = D.eval_shingle_set(ev, "text", k=3).localCheckpoint(eager=True)
-    bitset = D.build_bloom_bitset(ev_sh, _BLOOM_M, _BLOOM_H)
-
-    raw_topic, cur_topic = "docs_raw26", "docs_curated26"
-    broker = SimBroker(scratch_dir(prefix="gate_s26broker_"))
-    cfg_in = KafkaTableConfig(
-        bootstrap_servers="sim://gate",
-        whitelist_topics=[raw_topic],
-        ddl="doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT",
-    )
-    broker.create_topic(raw_topic, partitions=4)
-    cfg_out = curated_topic_config("sim://gate", cur_topic, with_text=True)
-    broker.create_topic(cur_topic, partitions=4)
-
-    raw = d.filter(~F.col("source").isin(*_EVAL_SOURCES)).select(
-        "doc_id", "text", "lang", F.col("n_chars").cast("bigint").alias("n_chars")
-    )
+    raw, run, read = _live_curation(spark, d, "26", ("text", "lang", "n_chars"))
     drop2 = F.expr(_X95_V2_PRED)
-    roots = {
-        k: scratch_dir(prefix=f"gate_s26{k}_")
-        for k in ("state", "commits", "ckpt")
-    }
-
-    def run_stream() -> None:
-        # FRESH sink + query objects every call; only the on-disk roots
-        # (checkpoint offsets, band-index state, commit markers, broker
-        # log) carry over — the pinned kill-and-resume posture
-        sink = StreamCurationSink(
-            roots["state"],
-            KafkaStreamSink(
-                cfg_out, cur_topic, roots["commits"], broker=broker,
-                key_col="doc_id", tombstone_col="_tombstone",
-            ),
-            bitset, ev_sh,
-            num_perm=32, bands=8, k=3, threshold=0.8,
-            bloom_m=_BLOOM_M, bloom_h=_BLOOM_H,
-            payload_cols=("text", "lang", "n_chars"),
-        )
-        typed = decode_wire(
-            broker.stream(spark, raw_topic, max_files_per_trigger=1), cfg_in
-        ).select("doc_id", "text", "lang", "n_chars")
-        q = (
-            typed.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", roots["ckpt"])
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     # tokenizer frozen BEFORE any drop (one corpus pass, the s24 posture)
     merges, vocab = _trained_merge_vocab(d)
     store = scratch_dir(prefix="gate_s26store_")
 
     # ---- refresh 1: drop 1 ingested, curated, snapshot fully tokenized
-    write_kafka(raw.filter(~drop2), cfg_in, raw_topic, key_col="doc_id", broker=broker)
-    run_stream()
-    snap1 = read_compacted(
-        spark, cfg_out, broker=broker, payload_cols=("text", "lang", "n_chars")
-    )
+    run(raw.filter(~drop2))
     x95_doc_manifest(
-        snap1.select("doc_id", "text"), merges, vocab
+        read().select("doc_id", "text"), merges, vocab
     ).withColumn("batch", F.lit(1)).write.mode("overwrite").parquet(
         f"{store}/b=1"
     )
-    # per-partition next-unconsumed offset — the A8 resume watermark.
-    # Taken from the broker's end-offset METADATA (the consumer
-    # ``endOffsets()`` call; the simulator's ``latest()`` is its analog,
-    # maintained transactionally by every produce) instead of the full
-    # topic scan + max(offset) aggregate this used to be: identical value
-    # — meta ``next`` is exactly max(offset)+1 per partition, 0 for an
-    # empty partition, matching the delta read's COALESCE(..., 0) — with
-    # zero Spark jobs (r16, guide §1.2).
-    hwm = {int(p): int(o) for p, o in broker.latest()[cur_topic].items()}
 
-    # ---- refresh 2: drop 2 arrives, stream resumes, DELTA-only tokenize
-    write_kafka(raw.filter(drop2), cfg_in, raw_topic, key_col="doc_id", broker=broker)
-    run_stream()
+    # ---- refresh 2: drop 2 arrives, stream resumes, DELTA-only tokenize.
+    # ``hwm`` is the curated topic's per-partition next-unconsumed offset
+    # before the drain, the A8 resume watermark, read from the broker's
+    # end-offset metadata (the consumer ``endOffsets()`` call) with no
+    # Spark job.
+    hwm = run(raw.filter(drop2))
     # EVERY delta upsert re-manifests (not just unseen keys): compaction
     # permits a later refresh to overwrite a key's payload, and the compose
     # takes the latest batch per key, so a re-upserted doc can never serve
     # a stale manifest row.  Still delta-sized — the cost is the refresh's
     # upserts, never the corpus.
-    delta = read_compacted(
-        spark, cfg_out, broker=broker,
-        payload_cols=("text", "lang", "n_chars"), start_offsets=hwm,
-    ).select("doc_id", "text")
+    delta = read(start_offsets=hwm).select("doc_id", "text")
     x95_doc_manifest(delta, merges, vocab).withColumn(
         "batch", F.lit(2)
     ).write.mode("overwrite").parquet(f"{store}/b=2")
 
     # ---- compose: persisted manifests × live keys, nothing else
-    alive = read_compacted(spark, cfg_out, broker=broker, payload_cols=()).select(
-        "doc_id"
-    )
+    alive = read(payload_cols=()).select("doc_id")
     man = spark.read.parquet(f"{store}/b=1", f"{store}/b=2").select(
         "doc_id", "batch", "n_tokens", "ids_digest"
     )
@@ -1938,17 +1796,15 @@ def s27_stream_fertility_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     VersionedUpsertSink discipline (disk-derived predecessor, queryable
     parquet snapshot at every batch boundary, restart-safe) — and the
     fertility ratio is computed from the drained sums, never averaged
-    across batches.  4 real micro-batches; the drained snapshot must
-    equal x104's batch derivation, which the DuckDB oracle replays
+    across batches.  4 real micro-batches (``drain_files``); the drained
+    snapshot must equal x104's batch derivation, which the DuckDB oracle replays
     (training recursion + application + per-language rollup)."""
     from hiveka_spark.catalog import table
     from hiveka_spark.operators.bpe import bpe_apply_fast, bpe_train_capped_rows
     from hiveka_spark.operators.text import tokens
     from hiveka_spark.queries.curation_ext import _X76_MAX_WORDS, _X76_MERGES
-    from hiveka_spark.streaming.upsert import VersionedUpsertSink
 
     src_dir = scratch_dir(prefix="gate_s27src_")
-    state_root = scratch_dir(prefix="gate_s27state_")
     d = table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     # frozen v1 tokenizer: trained on the batch corpus BEFORE the stream
     merges = [
@@ -1956,15 +1812,9 @@ def s27_stream_fertility_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         for (_r, lhs, rhs, _m, _c) in bpe_train_capped_rows(
             d, "text", n_merges=_X76_MERGES, max_words=_X76_MAX_WORDS, units=True
         )
-    ]  # bounded: n_merges; rows seam (r16) — no DataFrame round trip
+    ]  # bounded: n_merges; rows seam — no DataFrame round trip
 
     d.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def batch_reduce(batch_df: DataFrame) -> DataFrame:
         counts = bpe_apply_fast(batch_df, merges, "text", "doc_id", units=True)
@@ -1994,18 +1844,7 @@ def s27_stream_fertility_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    sink = VersionedUpsertSink(state_root, batch_reduce, merge)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_s27_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = sink.latest_path()
-    assert final is not None
-    snap = spark.read.parquet(final)
+    snap = _upsert_snapshot(spark, src_dir, "s27", batch_reduce, merge)
     return snap.select(
         "lang", "n_docs", "sum_words", "sum_tokens",
         F.expr("CAST(sum_tokens * 10000 DIV sum_words AS BIGINT)")
@@ -2075,10 +1914,8 @@ def s28_stream_secret_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the batch rule over the full corpus."""
     from hiveka_spark.catalog import table
     from hiveka_spark.queries.pipeline_ext import _X112_MIN_LEN
-    from hiveka_spark.streaming.upsert import VersionedUpsertSink
 
     src_dir = scratch_dir(prefix="gate_s28src_")
-    state_root = scratch_dir(prefix="gate_s28state_")
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     aug = d.select(
         "doc_id",
@@ -2093,12 +1930,6 @@ def s28_stream_secret_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     aug.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def batch_reduce(batch_df: DataFrame) -> DataFrame:
         ws = batch_df.select(
@@ -2120,18 +1951,9 @@ def s28_stream_secret_retraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     def merge(prev: DataFrame, b: DataFrame) -> DataFrame:
         return prev.unionByName(b).distinct()
 
-    sink = VersionedUpsertSink(state_root, batch_reduce, merge)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_s28_"))
-        .trigger(availableNow=True)
-        .start()
+    return secret_report(
+        _upsert_snapshot(spark, src_dir, "s28", batch_reduce, merge)
     )
-    q.awaitTermination()
-    final = sink.latest_path()
-    assert final is not None
-    return secret_report(spark.read.parquet(final))
 
 
 def secret_report(pairs: DataFrame) -> DataFrame:
@@ -2187,10 +2009,10 @@ def s29_stream_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per batch one broadcast-centroid argmax (zero shuffle
     on the batch side) + one segment write; serving is the equi-join on
-    cell over read-back segments.  4 real micro-batches via
-    maxFilesPerTrigger; batch-id-keyed segment dirs make replayed
-    batches overwrite idempotently (the s19 versioned-state
-    discipline)."""
+    cell over read-back segments.  4 real micro-batches
+    (``drain_files``); segments are published by batch id through
+    :mod:`hiveka_spark.commit`, so a replayed batch replaces its own
+    segment whole."""
     from hiveka_spark.catalog import table
     from hiveka_spark.operators.similarity import ivf_index_topk, ivf_index_update
 
@@ -2205,24 +2027,11 @@ def s29_stream_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)  # frozen offline parameters (k rows)
     )
     e.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         ivf_index_update(spark, batch_df, root, batch_id, cents)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_s29_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    P.drain_files(spark, src_dir, sink, scratch_dir(prefix="ckpt_s29_"))
     return ivf_index_topk(
         spark, root, e.filter(F.col("vec_id") < 10), cents, k=5, n_probe=4
     ).localCheckpoint(eager=True)  # materialize before scratch cleanup
@@ -2244,9 +2053,9 @@ def s30_stream_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (prior count exactly 1), which is what lets the union of per-batch
     emissions converge to the one-shot batch answer without ever
     re-reading earlier batches' text.  The fixture streams as 4 real
-    micro-batches (maxFilesPerTrigger=1); per-batch state is versioned-dir
-    overwrite, so checkpoint replay is idempotent (kill-and-resume pinned
-    in tests/test_streaming_neardup.py).
+    micro-batches (``drain_files``); per-batch state is published by batch
+    id through :mod:`hiveka_spark.commit`, so checkpoint replay is
+    idempotent (kill-and-resume pinned in tests/test_streaming_neardup.py).
 
     Convergence contract: the final per-doc span report (island merge over
     all emitted starts) equals x96's one-shot answer over the whole corpus
@@ -2316,8 +2125,8 @@ def s31_stream_likelihood_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     drifted from the distribution the vocabulary was trained on — the
     signal to retrain or extend (x98's decision input, at stream time).
 
-    4 real micro-batches; the drained snapshot must equal x137's batch
-    derivation over the whole corpus, which the DuckDB oracle replays
+    4 real micro-batches (``drain_files``); the drained snapshot must
+    equal x137's batch derivation over the whole corpus, which the DuckDB oracle replays
     (training chain + apply recursion + per-source rollup)."""
     from hiveka_spark.catalog import table
     from hiveka_spark.operators.unigram import unigram_score, unigram_train
@@ -2327,24 +2136,15 @@ def s31_stream_likelihood_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         _UG_MAX_WORDS,
         _UG_SEED,
     )
-    from hiveka_spark.streaming.upsert import VersionedUpsertSink
 
     src_dir = scratch_dir(prefix="gate_s31src_")
-    state_root = scratch_dir(prefix="gate_s31state_")
     d = table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     vocab = unigram_train(
         d, "text",
         max_words=_UG_MAX_WORDS, max_piece_len=_UG_MAX_PIECE,
         n_seed=_UG_SEED, keep_multi=_UG_KEEP_MULTI,
     )
-
     d.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def batch_reduce(batch_df: DataFrame) -> DataFrame:
         scored = unigram_score(
@@ -2372,18 +2172,7 @@ def s31_stream_likelihood_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    sink = VersionedUpsertSink(state_root, batch_reduce, merge)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_s31_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = sink.latest_path()
-    assert final is not None
-    snap = spark.read.parquet(final)
+    snap = _upsert_snapshot(spark, src_dir, "s31", batch_reduce, merge)
     return snap.select(
         "source", "n_docs", "sum_tokens", "sum_cost_q",
         F.expr("sum_cost_q DIV GREATEST(sum_tokens, 1)")
@@ -2457,22 +2246,10 @@ def s32_stream_ivf_compacting(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)  # frozen offline parameters (k rows)
     )
     e.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    P.drain_files(
+        spark, src_dir, make_ivf_stream_sink(root, cents, compact_after=2),
+        scratch_dir(prefix="ckpt_s32_"),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            make_ivf_stream_sink(root, cents, compact_after=2)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_s32_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # compaction must actually have run mid-stream: at least one odd
     # (_COMPACTED) segment, fewer live segments than batches
     segs = _glob.glob(f"{root}/v=*")
@@ -2542,22 +2319,11 @@ def s33_stream_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)  # frozen offline parameters (k rows)
     )
     e.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    P.drain_files(
+        spark, src_dir,
+        make_knn_graph_sink(state_root, cents, k=_X139_K, n_probe=4),
+        scratch_dir(prefix="ckpt_s33_"),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            make_knn_graph_sink(state_root, cents, k=_X139_K, n_probe=4)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_s33_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return knn_graph_snapshot(spark, state_root).select(
         "query_id", "neighbor_id", "cosine", "rank"
     ).localCheckpoint(eager=True)  # materialize before scratch cleanup

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 
 from hiveka_spark import commit
 from hiveka_spark.scratch import scratch_dir
+from hiveka_spark.streaming.pipeline import drain_files
 
 
 #: partition fan-out of the compacted band segment: c{top} is laid out as
@@ -155,22 +156,6 @@ def band_index_step(
     return D._verified_jaccard(cand, s.read.parquet(sh_dir, *prior_sh), threshold)
 
 
-def _drain_files(spark: SparkSession, src_dir: str, sink, checkpoint_dir: str) -> None:
-    """Run the parquet files of ``src_dir`` through the foreachBatch
-    ``sink``, one file per micro-batch, until none is left."""
-    (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
 def committed_versions(root: str, before: int) -> list[str]:
     """Committed ``b{id}`` per-batch deltas and ``c{id}`` folded bases with
     id < ``before`` (:func:`hiveka_spark.commit.committed`).  A c-dir's id
@@ -228,10 +213,12 @@ def stream_minhash_dedup(
     id_offset: int = 0,
     compact_after: int | None = None,
 ) -> DataFrame:
-    """Run ``docs`` (doc_id, text) through the streaming band-index dedup
-    as ``n_batches`` REAL micro-batches; returns the distinct verified
-    (id_a, id_b, jaccard) pair set — accumulated across ALL runs sharing
-    ``state_root``, not just this one.  See module docstring.
+    """Run ``docs`` (doc_id, text) through the streaming band-index dedup,
+    written as ``n_batches`` files and drained one file per micro-batch
+    (:func:`~hiveka_spark.streaming.pipeline.drain_files`); returns the
+    distinct verified (id_a, id_b, jaccard) pair set — accumulated across
+    ALL runs sharing ``state_root``, not just this one.  See module
+    docstring.
 
     ``id_offset`` shifts this run's version-dir ids: a RESUMED stream
     (same checkpoint) continues Spark's batch ids automatically, but a
@@ -294,7 +281,7 @@ def stream_minhash_dedup(
             # before=batch_id: the replay rule of hiveka_spark.commit
             compact_band_index(batch_df.sparkSession, state_root, before=batch_id)
 
-    _drain_files(spark, src_dir, sink, scratch_dir(prefix="ckpt_sneardup_"))
+    drain_files(spark, src_dir, sink, scratch_dir(prefix="ckpt_sneardup_"))
     emitted = committed_versions(pairs_root, 10**9)
     assert emitted, "no micro-batch emitted pairs output"
     return spark.read.parquet(*emitted).distinct()
@@ -423,9 +410,10 @@ def stream_substring_dedup(
     compact_after: int | None = None,
 ) -> DataFrame:
     """Run ``docs`` (doc_id, text) through the streaming window-count
-    substring dedup as ``n_batches`` REAL micro-batches and return the
-    CONVERGED per-doc duplicated-span report — (doc_id, n_words,
-    n_dup_spans, dup_words, dup_frac_q), equal to the one-shot
+    substring dedup, written as ``n_batches`` files and drained one file
+    per micro-batch (:func:`~hiveka_spark.streaming.pipeline.drain_files`),
+    and return the CONVERGED per-doc duplicated-span report — (doc_id,
+    n_words, n_dup_spans, dup_words, dup_frac_q), equal to the one-shot
     :func:`~hiveka_spark.operators.dedup.substring_dup_spans` over the
     whole corpus for any batch split (gate s30's oracle pins one split
     against x96's DuckDB replay; the tests pin several splits against the
@@ -453,7 +441,7 @@ def stream_substring_dedup(
         ).parquet(src_dir)
     sink = sink_fn or make_substring_sink(state_root, min_len,
                                           compact_after=compact_after)
-    _drain_files(spark, src_dir, sink, checkpoint_dir)
+    drain_files(spark, src_dir, sink, checkpoint_dir)
     emitted = committed_versions(os.path.join(state_root, "starts"), 10**9)
     assert emitted, "no micro-batch emitted starts output"
     starts = spark.read.parquet(*emitted).distinct()

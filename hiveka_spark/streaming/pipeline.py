@@ -13,8 +13,14 @@ moves to `readStream.format("kafka")` unchanged.
 
 Scale posture: every aggregation is keyed by (window/session, key) so state
 is bounded by watermark retention; `maxFilesPerTrigger`/`maxOffsetsPerTrigger`
-give backpressure; sinks go through foreachBatch for exactly-once idempotent
-writes.
+give backpressure.
+
+Two drains run a stream to completion under the ``availableNow`` trigger:
+:func:`run_available_now` collects it through a memory sink (no recovery),
+and :func:`drain` hands each micro-batch to a foreachBatch sink whose
+per-batch-id idempotence gives exactly-once output across checkpoint
+restarts.  :func:`drain_files` is :func:`drain` over a directory of
+parquet files, one file per micro-batch.
 """
 
 from __future__ import annotations
@@ -245,13 +251,47 @@ def run_available_now(
     return spark.sql(f"SELECT * FROM {name}")
 
 
+def drain(
+    stream_df: DataFrame, sink, checkpoint: str, output_mode: str = "append"
+) -> None:
+    """Run ``stream_df`` through the foreachBatch ``sink`` until everything
+    available now is processed.
+
+    The sink contract: ``sink(batch_df, batch_id)`` must be idempotent per
+    ``batch_id`` (publish each batch's output by id through
+    :mod:`hiveka_spark.commit`, or gate it on a per-id marker), because a
+    restart on the same ``checkpoint`` replays the last uncommitted batch.
+    Source offsets, keyed state and batch ids resume from ``checkpoint``;
+    only new input is processed."""
+    (
+        stream_df.writeStream.foreachBatch(sink)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def drain_files(spark: SparkSession, src_dir: str, sink, checkpoint: str) -> None:
+    """:func:`drain` over the parquet files of ``src_dir``, one file per
+    micro-batch, read with the files' own schema: a dir of n files gives
+    batch ids 0..n-1, and a second call on the same ``checkpoint`` calls
+    ``sink`` only for files added since."""
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src_dir).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
+    drain(stream, sink, checkpoint)
+
+
 def run_foreach_batch_parquet(
     stream_df: DataFrame, out_dir: str, checkpoint: str, output_mode: str = "append"
 ) -> None:
-    """Exactly-once idempotent sink: foreachBatch writes each micro-batch as
-    parquet keyed by batch id, published through :mod:`hiveka_spark.commit`
-    (a re-run of a batch replaces its version whole, never duplicates it).
-    Unlike the memory sink this supports CHECKPOINT RECOVERY — a restarted
+    """:func:`drain` into parquet: micro-batch ``batch_id`` is published as
+    ``out_dir/batch=<batch_id>`` through :mod:`hiveka_spark.commit`.
+    Unlike the memory sink this supports checkpoint recovery: a restarted
     query resumes source offsets and keyed state and continues batch ids."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -260,11 +300,4 @@ def run_foreach_batch_parquet(
             batch_df.write.mode("overwrite").parquet,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream_df, sink, checkpoint, output_mode)

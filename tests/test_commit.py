@@ -346,6 +346,40 @@ def _ivf_segments():
     return setup, lambda spark, state: update(spark, state, [4, 5, 6], 1), read
 
 
+def _knn_sink():
+    # the act replays batch 1 (version 2 * 1 + 2 = 4) after an earlier run
+    # of it committed b4 in both home cells.  The replay touches one cell:
+    # every step costs a whole sink run, so fewer publishes keep it cheap
+    def batch(spark, ids):
+        return spark.createDataFrame(
+            [(i, [1.0, 0.01 * i, 0.0, 0.0] if i < 10 else [0.0, 1.0, 0.01 * i, 0.0])
+             for i in ids],
+            "vec_id bigint, embedding array<float>",
+        ).coalesce(1)
+
+    def run(spark, state, ids, batch_id):
+        from hiveka_spark.operators.similarity import make_knn_graph_sink
+
+        cents = spark.createDataFrame(
+            [(0, [10.0, 0.0, 0.0, 0.0]), (1, [0.0, 10.0, 0.0, 0.0])],
+            "cell bigint, embedding array<float>",
+        )
+        make_knn_graph_sink(state, cents, k=2, n_probe=1, dim=4)(
+            batch(spark, ids), batch_id
+        )
+
+    def setup(spark, state):
+        run(spark, state, [0, 1, 10], 0)
+        run(spark, state, [2, 11], 1)
+
+    def read(state):
+        from pyspark.sql import SparkSession
+
+        return _graph(SparkSession.getActiveSession(), state)
+
+    return setup, lambda spark, state: run(spark, state, [12, 13], 1), read
+
+
 STORES = {
     "band_index": _band_index,
     "band_index_step": _band_index_step,
@@ -357,6 +391,7 @@ STORES = {
     "schema_registry": _schema_registry,
     "upsert_sink": _upsert_sink,
     "ivf_segments": _ivf_segments,
+    "knn_sink": _knn_sink,
 }
 
 

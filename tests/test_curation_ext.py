@@ -1516,7 +1516,7 @@ def test_compact_edge_cells_one_staged_fold(spark, tmp_path):
         assert len(live) == 1, (c, live)
         if c in multi:
             assert os.path.basename(live[0]).startswith("c"), (c, live)
-    assert not os.path.exists(os.path.join(edges, "_fold_staging"))
+    assert not os.path.exists(commit.staging_path(os.path.join(edges, "fold")))
 
     expected = sorted(
         (r.query_id, r.rank, r.neighbor_id, r.cosine)

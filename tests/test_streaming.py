@@ -13,6 +13,7 @@ import pytest
 from hiveka_spark.catalog import table
 from hiveka_spark.streaming.pipeline import (
     dedup_stream,
+    drain_files,
     events_stream,
     run_available_now,
     run_foreach_batch_parquet,
@@ -180,6 +181,27 @@ def test_foreach_batch_parquet_sink(spark, tmp_path):
     run_foreach_batch_parquet(stream.select("event_id", "event_type"), out_dir, str(tmp_path / "ck"))
     written = spark.read.parquet(out_dir + "/batch=*")
     assert written.count() == table(spark, SF_SMOKE, "events").count()
+
+
+def test_drain_files_one_file_per_batch_and_resumes(spark, tmp_path):
+    """The contract every file-stream gate relies on: a 3-file dir drains
+    as batch ids 0, 1, 2, one file each, and a second drain on the same
+    checkpoint finds nothing new."""
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    table(spark, SF_SMOKE, "events").select("event_id").repartition(3).write.parquet(src)
+    calls: list[tuple[int, int]] = []
+
+    def sink(batch_df, batch_id):
+        calls.append((batch_id, batch_df.count()))
+
+    drain_files(spark, src, sink, ckpt)
+    assert [b for b, _ in calls] == [0, 1, 2]
+    assert all(n > 0 for _, n in calls)
+    assert sum(n for _, n in calls) == table(spark, SF_SMOKE, "events").count()
+    calls.clear()
+    drain_files(spark, src, sink, ckpt)
+    assert calls == []
 
 
 def test_update_mode_emits_incrementally_and_converges(spark, tmp_path):

@@ -439,9 +439,11 @@ def dup_rate_probes(spark: SparkSession, n: int):
         # fixed cost
         import os as _os
 
+        from hiveka_spark import commit
         from hiveka_spark.queries.extensions import _BLOOM_H, _BLOOM_M
         from hiveka_spark.scratch import scratch_dir
         from hiveka_spark.streaming.neardup import committed_versions
+        from hiveka_spark.streaming.pipeline import drain_files
 
         ev = synth_docs(spark, 200)
         ev_sh = D.eval_shingle_set(ev, "text", k=3).localCheckpoint(eager=True)
@@ -451,27 +453,17 @@ def dup_rate_probes(spark: SparkSession, n: int):
         docs.select("doc_id", "text").repartition(4).write.mode(
             "overwrite"
         ).parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
 
         def sink(batch_df, batch_id):
-            D.bloom_probe(
-                batch_df, bitset, ev_sh, "doc_id", "text",
-                k=3, m_bits=_BLOOM_M, n_hashes=_BLOOM_H,
-            ).write.mode("overwrite").parquet(_os.path.join(out_root, f"b{batch_id}"))
+            commit.write_version(
+                _os.path.join(out_root, f"b{batch_id}"),
+                D.bloom_probe(
+                    batch_df, bitset, ev_sh, "doc_id", "text",
+                    k=3, m_bits=_BLOOM_M, n_hashes=_BLOOM_H,
+                ).write.mode("overwrite").parquet,
+            )
 
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", scratch_dir(prefix="sprobe_s20ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain_files(spark, src, sink, scratch_dir(prefix="sprobe_s20ckpt_"))
         return spark.read.parquet(*committed_versions(out_root, 10**9))
 
     def x72_bpe_uncapped():
