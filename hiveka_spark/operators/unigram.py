@@ -62,6 +62,7 @@ from typing import Iterator
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from hiveka_spark import commit
 from hiveka_spark.operators.bpe import _sp_pretokenize, sp_unit_freq
 from hiveka_spark.sqlexpr import qident
 
@@ -533,10 +534,9 @@ _ARTIFACT_FORMAT = 1
 
 def _unigram_token(vocab_rows: list[tuple[str, int, int]], max_piece_len: int) -> str:
     """Deterministic content token pairing the artifact's vocab table with
-    its contract — written to ``meta`` first and to ``commit`` LAST (the
-    save_tokenizer torn-save discipline: a save that dies between the
-    per-table overwrites leaves a token mismatch load_unigram turns into
-    a loud error).  Every field is length-prefixed before hashing (the
+    its contract, stored in ``meta``: load_unigram recomputes it from the
+    table it read, so a table changed outside save_unigram is a loud
+    error.  Every field is length-prefixed before hashing (the
     round-12 lesson: pieces come from corpus text and can contain any
     character, so separator concatenation is ambiguous)."""
     import hashlib
@@ -566,29 +566,32 @@ def save_unigram(
 ) -> None:
     """Persist a trained unigram-LM tokenizer as the ship artifact gate
     x130 round-trips: ``vocab`` (piece_id/piece/cnt/cost_q — piece_id is
-    the x125 order, chars first then multi-char, each piece-ascending),
-    the one-row ``meta`` contract (max_piece_len + content token + format)
-    and a ``commit`` marker carrying the same token written LAST.
-    Everything is vocabulary-bounded."""
+    the x125 order, chars first then multi-char, each piece-ascending) and
+    the one-row ``meta`` contract (max_piece_len + content token + format),
+    staged together and published with one rename
+    (:func:`commit.write_version`).  Everything is vocabulary-bounded."""
     token = _unigram_token(vocab_rows, max_piece_len)
-    spark.createDataFrame(
-        [(max_piece_len, token, _ARTIFACT_FORMAT)],
-        "max_piece_len int, content_token string, format int",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-    spark.createDataFrame(
-        [(i, p, cnt, cq) for i, (p, cnt, cq) in enumerate(vocab_rows)],
-        "piece_id bigint, piece string, cnt bigint, cost_q bigint",
-    ).write.mode("overwrite").parquet(f"{path}/vocab")
-    spark.createDataFrame(
-        [(token,)], "content_token string"
-    ).write.mode("overwrite").parquet(f"{path}/commit")
+
+    def write(staged: str) -> None:
+        spark.createDataFrame(
+            [(max_piece_len, token, _ARTIFACT_FORMAT)],
+            "max_piece_len int, content_token string, format int",
+        ).write.mode("overwrite").parquet(f"{staged}/meta")
+        spark.createDataFrame(
+            [(i, p, cnt, cq) for i, (p, cnt, cq) in enumerate(vocab_rows)],
+            "piece_id bigint, piece string, cnt bigint, cost_q bigint",
+        ).write.mode("overwrite").parquet(f"{staged}/vocab")
+
+    commit.write_version(path, write)
 
 
 def load_unigram(spark, path: str) -> tuple[list[tuple[str, int, int]], int]:
     """Reload a :func:`save_unigram` artifact — returns (vocab_rows,
-    max_piece_len) with vocab_rows in piece_id order.  Verifies the
-    torn-save guard: the reloaded table's content token must equal BOTH
-    the meta row's and the commit marker's.  Bounded collects only."""
+    max_piece_len) with vocab_rows in piece_id order.  Refuses a dir
+    save_unigram did not publish, and checks that the reloaded table's
+    content token equals the meta row's.  Bounded collects only."""
+    if not commit.is_committed(path):
+        raise RuntimeError(f"no published unigram artifact at {path}")
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
     if meta["format"] != _ARTIFACT_FORMAT:
         raise RuntimeError(
@@ -599,13 +602,10 @@ def load_unigram(spark, path: str) -> tuple[list[tuple[str, int, int]], int]:
         (r["piece"], int(r["cnt"]), int(r["cost_q"]))
         for r in spark.read.parquet(f"{path}/vocab").orderBy("piece_id").collect()
     ]
-    commit = spark.read.parquet(f"{path}/commit").collect()[0]["content_token"]
-    expect = _unigram_token(rows, int(meta["max_piece_len"]))
-    if not (meta["content_token"] == commit == expect):
+    if meta["content_token"] != _unigram_token(rows, int(meta["max_piece_len"])):
         raise RuntimeError(
-            f"torn or corrupted unigram artifact at {path}: meta/commit/"
-            "content tokens disagree (a save died mid-overwrite, or the "
-            "tables were modified outside save_unigram)"
+            f"corrupted unigram artifact at {path}: the content token does "
+            "not match its table (it was modified outside save_unigram)"
         )
     return rows, int(meta["max_piece_len"])
 

@@ -3659,8 +3659,8 @@ def _tokenizer_artifact_gate(
     save_tokenizer(spark, art_dir, merges, vocab, norm_mode, byte_fallback=True)
 
     # reload — everything downstream uses ONLY the read-back artifact
-    # (load_tokenizer itself re-reads + torn-save-verifies the meta row, so
-    # the art fields ARE the read-back meta; no second meta scan)
+    # (load_tokenizer itself re-reads + content-token-verifies the meta row,
+    # so the art fields ARE the read-back meta; no second meta scan)
     mback = spark.read.parquet(f"{art_dir}/merges")
     vback = spark.read.parquet(f"{art_dir}/vocab")
     art = load_tokenizer(spark, art_dir)

@@ -19,7 +19,7 @@ mapInPandas shape.
   with TWO families on the same corpus — the reason x104 exists finally
   has a second column.
 - x130 ship artifact: persist + reload + behavior-preserving tokenize
-  certification from read-back tables (x86's torn-save discipline).
+  certification from read-back tables (x86's save/reload discipline).
 - x131 token-ID encode: per-doc content-AND-order digests over the
   artifact id space with UNK fallback (x80's certificate).
 
@@ -496,9 +496,9 @@ def x130_unigram_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The unigram-LM tokenizer as a SHIPPED, RELOADABLE artifact — x86's
     discipline for the new family: train x125's vocabulary, persist it
     (vocab: piece_id/piece/cnt/cost_q; one-row meta carrying the
-    max_piece_len contract + a length-prefixed sha256 content token; a
-    commit marker written LAST so a torn save fails loudly at load), read
-    it back, and certify from the READ-BACK frames only:
+    max_piece_len contract + a length-prefixed sha256 content token; both
+    published with one rename, so a save is whole or absent), read it
+    back, and certify from the READ-BACK frames only:
 
     - 'vocab' row: ordered 31-ary digest over portable_hash60 of each
       reloaded row's canonical rendering — any lost/reordered/corrupted
@@ -537,7 +537,7 @@ def x130_unigram_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     save_unigram(spark, art_dir, vocab, _UG_MAX_PIECE)
 
     vback = spark.read.parquet(f"{art_dir}/vocab")
-    loaded_rows, mpl = load_unigram(spark, art_dir)  # torn-save verified
+    loaded_rows, mpl = load_unigram(spark, art_dir)  # content-token verified
     if mpl != _UG_MAX_PIECE:
         raise RuntimeError(f"unigram artifact meta corrupted: {mpl}")
 

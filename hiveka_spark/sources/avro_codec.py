@@ -6,13 +6,12 @@ Parity targets in the reference:
   magic byte / schema-id header; see BaseProducer.java:44-54).
 - encode: BaseProducer.serializeAvro (BaseProducer.java:44-54).
 
-This environment ships no spark-avro jar and no fastavro, so the engine
-carries its own wire-format implementation (Avro 1.x binary encoding:
-zigzag varints, little-endian IEEE floats, length-prefixed bytes/strings,
-block-coded arrays/maps, index-prefixed unions).  On a cluster with
-spark-avro available, sources.kafka_io prefers the JVM from_avro/to_avro
-path; this codec is the dependency-free fallback and the reference
-implementation for tests.
+The engine carries its own wire-format implementation (Avro 1.x binary
+encoding: zigzag varints, little-endian IEEE floats, length-prefixed
+bytes/strings, block-coded arrays/maps, index-prefixed unions, and the
+timestamp, date and decimal logical types), and it is the one Avro codec
+of the Kafka-table layer: sources.kafka_io decodes and encodes every Avro
+payload through it.
 
 DataFrame integration is mapInPandas (Arrow batches) — per-batch Python cost,
 never per-row pickling.
@@ -25,6 +24,7 @@ import json
 import struct as _struct
 from collections.abc import Iterator
 from datetime import date, datetime, timedelta, timezone
+from decimal import Context, Decimal
 from typing import Any
 
 import pandas as pd
@@ -74,11 +74,13 @@ def _read_varint(buf: io.BytesIO) -> int:
 
 # --------------------------------------------------------------------------
 # logical types: naive datetimes are UTC (the engine pins the session time
-# zone to UTC, so that is what Spark hands a pandas UDF)
+# zone to UTC, so that is what Spark hands a pandas UDF); a decimal is its
+# unscaled value at the schema's scale, two's-complement big-endian bytes
 # --------------------------------------------------------------------------
 
 _EPOCH = datetime(1970, 1, 1)
 _TIME_UNITS = {"timestamp-micros": 1, "timestamp-millis": 1000}
+_WIDE = Context(prec=80)  # exact for every Spark decimal (precision <= 38)
 
 
 def _is_logical_value(logical: str, value: Any) -> bool:
@@ -86,12 +88,22 @@ def _is_logical_value(logical: str, value: Any) -> bool:
         return isinstance(value, datetime)
     if logical == "date":
         return isinstance(value, date) and not isinstance(value, datetime)
+    if logical == "decimal":
+        return isinstance(value, Decimal)
     return False
 
 
-def _to_wire(logical: str, value: Any) -> int:
+def _to_wire(schema: dict, value: Any) -> Any:
+    logical = schema["logicalType"]
     if logical == "date":
         return (value - _EPOCH.date()).days
+    if logical == "decimal":
+        scale = schema.get("scale", 0)
+        unscaled = value.scaleb(scale, _WIDE)
+        n = int(unscaled)
+        if n != unscaled:
+            raise ValueError(f"{value!r} has more than {scale} decimal places")
+        return n.to_bytes((n + (n < 0)).bit_length() // 8 + 1, "big", signed=True)
     if value.tzinfo is not None:
         value = value.astimezone(timezone.utc).replace(tzinfo=None)
     d = value - _EPOCH
@@ -99,11 +111,14 @@ def _to_wire(logical: str, value: Any) -> int:
     return micros // _TIME_UNITS[logical]
 
 
-def _from_wire(logical: str, n: Any) -> Any:
+def _from_wire(schema: dict, n: Any) -> Any:
+    logical = schema["logicalType"]
     if logical == "date":
         return _EPOCH.date() + timedelta(days=n)
     if logical in _TIME_UNITS:
         return _EPOCH + timedelta(microseconds=n * _TIME_UNITS[logical])
+    if logical == "decimal":
+        return Decimal(f"{int.from_bytes(n, 'big', signed=True)}E-{schema.get('scale', 0)}")
     return n
 
 
@@ -230,7 +245,7 @@ def _encode_value(out: io.BytesIO, schema: Any, value: Any) -> None:
         _write_varint(out, 0)
     elif "logicalType" in schema:
         if _is_logical_value(schema["logicalType"], value):
-            value = _to_wire(schema["logicalType"], value)
+            value = _to_wire(schema, value)
         _encode_value(out, kind, value)
     else:
         raise ValueError(f"unsupported Avro schema {schema!r}")
@@ -298,7 +313,7 @@ def _decode_value(buf: io.BytesIO, schema: Any) -> Any:
                 k = _decode_value(buf, "string")
                 out[k] = _decode_value(buf, schema["values"])
     if "logicalType" in schema:
-        return _from_wire(schema["logicalType"], _decode_value(buf, kind))
+        return _from_wire(schema, _decode_value(buf, kind))
     raise ValueError(f"unsupported Avro schema {schema!r}")
 
 
@@ -475,6 +490,8 @@ def encode_avro_df(
             "confluent framing needs schema_id — register the schema "
             "(FileSchemaRegistry.register) and pass the returned id"
         )
+    if tombstone_col and not key_col:
+        raise ValueError("tombstone_col requires key_col (tombstones are key-only)")
     schema_dict = json.loads(avro_schema) if isinstance(avro_schema, str) else avro_schema
     field_names = [f["name"] for f in schema_dict["fields"]]
 

@@ -25,9 +25,10 @@ Without the spark-sql-kafka jar, live reads/writes gate behind
 end-to-end against the file-backed broker simulator
 (`hiveka_spark.sources.kafka_sim.SimBroker`, the ``broker=`` argument on
 every entry point): produce -> offset-range scan -> decode -> SQL view, with
-the same option semantics.  Avro decode/encode dispatches to JVM
-``from_avro``/``to_avro`` when spark-avro is present (``avro_jvm_available``)
-and falls back to the Arrow-batched Python wire codec otherwise.
+the same option semantics.  Avro payloads have one codec,
+:mod:`hiveka_spark.sources.avro_codec` over Arrow batches, and one schema
+resolution rule, :func:`schema_registry.resolve_record`, whichever broker
+is bound.
 """
 
 from __future__ import annotations
@@ -42,9 +43,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hiveka_spark import commit
 from hiveka_spark.schema import avro_json, ddl_to_struct
-from hiveka_spark.sources.avro_codec import decode_avro_df
+from hiveka_spark.sources.avro_codec import decode_avro_df, encode_avro_df
 
-WIRE_COLUMNS = ["key", "value", "topic", "partition", "offset", "timestamp", "timestampType"]
+# the one wire schema: what the Kafka source emits and the simulator stores
+WIRE_DDL = (
+    "key binary, value binary, topic string, partition int, offset long, "
+    "timestamp timestamp, timestampType int"
+)
+WIRE_COLUMNS = [c.split()[0] for c in WIRE_DDL.split(", ")]
 
 
 @dataclass
@@ -123,42 +129,28 @@ def reader_options(cfg: KafkaTableConfig, streaming: bool = False) -> dict[str, 
     return opts
 
 
-# classpath probes memoized per JVM gateway (r16, guide §5 driver work):
-# the answer cannot change within an application's lifetime, and the
-# missing-class branch pays a marshaled JVM exception per call — which the
-# streaming sinks were paying once per micro-batch via decode_wire /
-# encode_payload.  Keyed on the py4j gateway identity so a fresh JVM
-# (new local session in tests) re-probes.
-_CLASSPATH_PROBE_CACHE: dict[tuple[int, str], bool] = {}
-
-
-def _jvm_class_present(spark: SparkSession, cls: str) -> bool:
-    key = (id(spark._sc._gateway), cls)
-    hit = _CLASSPATH_PROBE_CACHE.get(key)
-    if hit is None:
-        try:
-            spark._jvm.java.lang.Class.forName(cls)
-            hit = True
-        except Exception:
-            hit = False
-        _CLASSPATH_PROBE_CACHE[key] = hit
-    return hit
+# the connector probe is memoized per JVM gateway: the answer cannot change
+# within an application's lifetime, and the missing-class branch pays a
+# marshaled JVM exception per call.  Keyed on the py4j gateway identity so
+# a fresh JVM (new local session in tests) re-probes.
+_KAFKA_PROBE_CACHE: dict[int, bool] = {}
 
 
 def kafka_available(spark: SparkSession) -> bool:
     """True when the spark-sql-kafka connector classes are on the JVM
     classpath."""
-    return _jvm_class_present(
-        spark, "org.apache.spark.sql.kafka010.KafkaSourceProvider"
-    )
-
-
-def avro_jvm_available(spark: SparkSession) -> bool:
-    """True when the spark-avro module is on the JVM classpath, i.e.
-    ``pyspark.sql.avro.functions.from_avro``/``to_avro`` will actually
-    evaluate (the Python wrappers import fine either way; evaluation needs
-    org.apache.spark.sql.avro.* from the spark-avro jar)."""
-    return _jvm_class_present(spark, "org.apache.spark.sql.avro.AvroDataToCatalyst")
+    key = id(spark._sc._gateway)
+    hit = _KAFKA_PROBE_CACHE.get(key)
+    if hit is None:
+        try:
+            spark._jvm.java.lang.Class.forName(
+                "org.apache.spark.sql.kafka010.KafkaSourceProvider"
+            )
+            hit = True
+        except Exception:
+            hit = False
+        _KAFKA_PROBE_CACHE[key] = hit
+    return hit
 
 
 def _require_kafka(spark: SparkSession) -> None:
@@ -215,7 +207,6 @@ def decode_wire(
     cfg: KafkaTableConfig,
     mode: str = "PERMISSIVE",
     event_time_field: str | None = None,
-    use_jvm_avro: bool | None = None,
     registry=None,
     registry_topic: str | None = None,
 ) -> DataFrame:
@@ -225,26 +216,19 @@ def decode_wire(
     precedence — payload header time, payload timestamp field, then broker
     timestamp (KafkaAvroMessageDecoder.java:194-205, A23).
 
-    Avro decode dispatch (``use_jvm_avro=None`` auto-probes the classpath):
-    when the spark-avro module is present, decode stays JVM-side via
-    ``from_avro`` — at 100 TB no payload byte should ever cross into Python.
-    Without the jar (this container), the Arrow-batched pure-Python wire
-    codec (`avro_codec.decode_avro_df`) is the fallback and the test oracle.
-    json/csv always use JVM ``from_json``/``from_csv``.
+    Avro payloads decode through the Arrow-batched Python wire codec
+    (`avro_codec.decode_avro_df`); json/csv use JVM ``from_json``/``from_csv``.
 
     ``cfg.framing='confluent'`` (the registry wire path the reference
     declares but disables, KafkaAvroMessageDecoder.java:96,131-144): each
     message carries 0x00 + a 4-byte schema id.  Pass ``registry``
     (:class:`~hiveka_spark.sources.schema_registry.FileSchemaRegistry`) +
     ``registry_topic`` to resolve per-record WRITER schemas and surface rows
-    under the declared reader schema (Avro resolution: defaults, promotions,
-    drops).  The registry is read ONCE on the driver into a plain id->schema
-    dict; workers never touch it.  The JVM ``from_avro`` path validates the
-    magic byte and strips the header with binary expressions (PERMISSIVE ->
-    null row on bad magic, FAILFAST -> raise_error), then decodes against the
-    single declared schema — like stock spark-avro it cannot dispatch
-    per-record schema ids, so mixed-version topics must use the Python codec
-    (``use_jvm_avro=False``) or pre-split by id.
+    under the declared reader schema with
+    :func:`~hiveka_spark.sources.schema_registry.resolve_record` (defaults,
+    promotions, drops).  The registry is read ONCE on the driver into a
+    plain id->schema dict; workers never touch it.  Without a registry every
+    record decodes against the declared schema.
     """
     schema_json = cfg.schema_json()
     payload_fields = {f["name"] for f in json.loads(schema_json)["fields"]}
@@ -261,71 +245,27 @@ def decode_wire(
         df = df.withColumnRenamed(old, new)
     fmt = cfg.payload_format.lower()
     if fmt == "avro":
-        if use_jvm_avro is None:
-            use_jvm_avro = avro_jvm_available(df.sparkSession)
-        if use_jvm_avro:
-            # JVM-side decode: whole-stage-codegen-friendly, zero Python in
-            # the payload path (A18 scale path).  PERMISSIVE -> all-null
-            # struct on corrupt records, matching the Python codec's
-            # null-record treatment.
-            from pyspark.sql.avro.functions import from_avro
-
-            value = F.col("value")
-            if cfg.framing == "confluent":
-                # validate magic + strip the 5-byte header entirely JVM-side
-                magic_ok = (F.length(value) >= F.lit(5)) & (
-                    F.substring(value, 1, 1) == F.lit(bytes([0]))
-                )
-                body = F.expr("substring(value, 6, length(value) - 5)")
-                parsed = from_avro(body, schema_json, {"mode": mode})
-                if mode.upper() == "FAILFAST":
-                    # assert_true can't sit in a WHEN branch with from_avro's
-                    # struct type; evaluate it as a sibling expression (null
-                    # column when ok, raises on the first bad magic byte)
-                    decoded = (
-                        df.select(
-                            *keep,
-                            parsed.alias("_payload"),
-                            F.assert_true(
-                                magic_ok, F.lit("bad confluent magic byte (expected 0x00)")
-                            ).alias("_magic_chk"),
-                        )
-                        .filter(F.col("_magic_chk").isNull())  # keeps _magic_chk live
-                        .select(*keep, "_payload.*")
-                    )
-                else:
-                    null_payload = F.lit(None).cast(cfg.spark_struct())
-                    parsed = F.when(magic_ok, parsed).otherwise(null_payload)
-                    decoded = df.select(*keep, parsed.alias("_payload")).select(
-                        *keep, "_payload.*"
-                    )
-            else:
-                parsed = from_avro(value, schema_json, {"mode": mode})
-                decoded = df.select(*keep, parsed.alias("_payload")).select(
-                    *keep, "_payload.*"
-                )
-        else:
-            schemas_by_id = None
-            if cfg.framing == "confluent" and registry is not None:
-                topic = registry_topic or (
-                    cfg.whitelist_topics[0] if cfg.whitelist_topics else None
-                )
-                if topic is None:
-                    raise ValueError(
-                        "confluent decode with a registry needs registry_topic "
-                        "(or a single whitelist topic)"
-                    )
-                schemas_by_id = {
-                    v: registry.get(topic, v) for v in registry.versions(topic)
-                }
-            decoded = decode_avro_df(
-                df,
-                schema_json,
-                mode=mode,
-                keep_cols=keep,
-                framing=cfg.framing,
-                schemas_by_id=schemas_by_id,
+        schemas_by_id = None
+        if cfg.framing == "confluent" and registry is not None:
+            topic = registry_topic or (
+                cfg.whitelist_topics[0] if cfg.whitelist_topics else None
             )
+            if topic is None:
+                raise ValueError(
+                    "confluent decode with a registry needs registry_topic "
+                    "(or a single whitelist topic)"
+                )
+            schemas_by_id = {
+                v: registry.get(topic, v) for v in registry.versions(topic)
+            }
+        decoded = decode_avro_df(
+            df,
+            schema_json,
+            mode=mode,
+            keep_cols=keep,
+            framing=cfg.framing,
+            schemas_by_id=schemas_by_id,
+        )
     elif fmt in ("json", "csv"):
         struct = cfg.spark_struct()
         text = F.col("value").cast("string")
@@ -358,15 +298,14 @@ def encode_payload(
     df: DataFrame,
     cfg: KafkaTableConfig,
     key_col: str | None = None,
-    use_jvm_avro: bool | None = None,
     ts_col: str | None = None,
     tombstone_col: str | None = None,
 ) -> DataFrame:
     """Rows -> binary Kafka ``value`` (+ optional ``key``) in the table's
-    Avro schema.  Same dispatch as :func:`decode_wire`: JVM ``to_avro`` when
-    spark-avro is on the classpath, Arrow-batched Python wire codec
-    otherwise.  ``ts_col`` rides through as the producer-record
-    ``timestamp`` (enables time-based offset resolution on the scan side).
+    Avro schema, through the Arrow-batched Python wire codec
+    (`avro_codec.encode_avro_df`).  ``ts_col`` rides through as the
+    producer-record ``timestamp`` (enables time-based offset resolution on
+    the scan side).
 
     ``tombstone_col``: boolean column marking rows to emit as REAL Kafka
     tombstones — key set, ``value`` NULL — the record shape a
@@ -375,43 +314,10 @@ def encode_payload(
 
     ``cfg.framing='confluent'`` prepends 0x00 + big-endian ``cfg.schema_id``
     (the registry version the table schema was registered under — see
-    :func:`with_confluent_framing`); on the JVM path the header is a binary
-    ``concat``, still zero Python bytes."""
-    from hiveka_spark.sources.avro_codec import encode_avro_df
-
-    schema_json = cfg.schema_json()
-    if cfg.framing == "confluent" and cfg.schema_id is None:
-        raise ValueError(
-            "confluent framing needs cfg.schema_id — register the table "
-            "schema (with_confluent_framing / FileSchemaRegistry.register)"
-        )
-    if tombstone_col and not key_col:
-        raise ValueError("tombstone_col requires key_col (tombstones are key-only)")
-    if use_jvm_avro is None:
-        use_jvm_avro = avro_jvm_available(df.sparkSession)
-    if use_jvm_avro:
-        from pyspark.sql.avro.functions import to_avro
-
-        field_names = [f["name"] for f in json.loads(schema_json)["fields"]]
-        value = to_avro(F.struct(*[F.col(n) for n in field_names]), schema_json)
-        if cfg.framing == "confluent":
-            header = bytes([0]) + int(cfg.schema_id).to_bytes(4, "big")
-            value = F.concat(F.lit(header), value)
-        if tombstone_col:
-            value = F.when(F.col(tombstone_col), F.lit(None).cast("binary")).otherwise(
-                value
-            )
-        cols = [value.alias("value")]
-        if key_col:
-            cols.insert(
-                0, F.col(key_col).cast("string").cast("binary").alias("key")
-            )
-        if ts_col:
-            cols.append(F.col(ts_col).alias("timestamp"))
-        return df.select(*cols)
+    :func:`with_confluent_framing`)."""
     return encode_avro_df(
         df,
-        schema_json,
+        cfg.schema_json(),
         key_col=key_col,
         ts_col=ts_col,
         framing=cfg.framing,
@@ -454,18 +360,13 @@ def write_kafka(
     column to stamp as the producer-record timestamp.  ``tombstone_col``:
     boolean column marking rows produced as key-only null-value records
     (real compaction tombstones — see :func:`encode_payload`)."""
-    if broker is not None:
-        broker.produce(
-            encode_payload(
-                df, cfg, key_col=key_col, ts_col=ts_col, tombstone_col=tombstone_col
-            ),
-            topic,
-        )
-        return
-    _require_kafka(df.sparkSession)
     payload = encode_payload(
         df, cfg, key_col=key_col, ts_col=ts_col, tombstone_col=tombstone_col
     )
+    if broker is not None:
+        broker.produce(payload, topic)
+        return
+    _require_kafka(df.sparkSession)
     (
         payload.write.format("kafka")
         .option("kafka.bootstrap.servers", cfg.bootstrap_servers)

@@ -28,11 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from hiveka_spark import commit
-
-WIRE_DDL = (
-    "key binary, value binary, topic string, partition int, offset long, "
-    "timestamp timestamp, timestampType int"
-)
+from hiveka_spark.sources.kafka_io import WIRE_DDL
 
 
 class SimBroker:

@@ -15,7 +15,6 @@ word lists; behavior parity, not copied content).
 
 from __future__ import annotations
 
-import json
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,6 +22,7 @@ from pyspark.sql import types as T
 
 from hiveka_spark.schema import struct_to_avro
 from hiveka_spark.sources.avro_codec import encode_record
+from hiveka_spark.sources.kafka_io import WIRE_DDL
 
 DEMO_SCHEMA = T.StructType(
     [
@@ -105,17 +105,6 @@ def wire_df(
     value (BaseProducer.java:44-54 framing — no magic byte), topic/partition/
     offset/timestamp metadata like the real source emits."""
     avro = struct_to_avro(schema, record_name)
-    wire_schema = T.StructType(
-        [
-            T.StructField("key", T.BinaryType()),
-            T.StructField("value", T.BinaryType()),
-            T.StructField("topic", T.StringType()),
-            T.StructField("partition", T.IntegerType()),
-            T.StructField("offset", T.LongType()),
-            T.StructField("timestamp", T.TimestampType()),
-            T.StructField("timestampType", T.IntegerType()),
-        ]
-    )
     import datetime as _dt
 
     out = []
@@ -125,7 +114,7 @@ def wire_df(
             row.get("timestamp", 1704067200 + i), tz=_dt.timezone.utc
         ).replace(tzinfo=None)
         out.append((None, payload, topic, i % 4, i // 4, ts, 0))
-    return spark.createDataFrame(out, wire_schema)
+    return spark.createDataFrame(out, WIRE_DDL)
 
 
 def events_as_wire(spark: SparkSession, sf_dir: str, topic: str = "events") -> DataFrame:
@@ -160,17 +149,6 @@ def events_as_wire(spark: SparkSession, sf_dir: str, topic: str = "events") -> D
         )
         .collect()
     )
-    wire_schema = T.StructType(
-        [
-            T.StructField("key", T.BinaryType()),
-            T.StructField("value", T.BinaryType()),
-            T.StructField("topic", T.StringType()),
-            T.StructField("partition", T.IntegerType()),
-            T.StructField("offset", T.LongType()),
-            T.StructField("timestamp", T.TimestampType()),
-            T.StructField("timestampType", T.IntegerType()),
-        ]
-    )
     import datetime as _dt
 
     out = []
@@ -181,4 +159,4 @@ def events_as_wire(spark: SparkSession, sf_dir: str, topic: str = "events") -> D
         ts = _dt.datetime.utcfromtimestamp(r["ts_ms"] / 1000.0)
         out.append((None, payload, topic, part, per_part_offsets[part], ts, 0))
         per_part_offsets[part] += 1
-    return spark.createDataFrame(out, wire_schema)
+    return spark.createDataFrame(out, WIRE_DDL)

@@ -8,6 +8,8 @@ versioned registry per topic plus Avro-spec schema RESOLUTION, so payloads
 written under an old schema decode correctly under the topic's latest
 (reader) schema — missing fields take declared defaults, numeric types
 promote (int->long->float->double), and removed fields are dropped.
+:func:`resolve_record` is the one resolution rule: ``kafka_io.decode_wire``
+applies it per record to Confluent-framed payloads when given a registry.
 
 Registry layout: ``<root>/<topic>/v<NNN>.avsc`` (immutable versions) — the
 "latest" is the highest version, so concurrent readers never see a torn
@@ -19,8 +21,6 @@ from __future__ import annotations
 import json
 import os
 import re
-
-from pyspark.sql import DataFrame
 
 from hiveka_spark import commit
 
@@ -125,47 +125,3 @@ def resolve_record(writer_schema: dict, reader_schema: dict, record: dict) -> di
                 "the writer schema"
             )
     return out
-
-
-def decode_with_registry(
-    wire: DataFrame,
-    registry: FileSchemaRegistry,
-    topic: str,
-    writer_version: int,
-    mode: str = "PERMISSIVE",
-    keep_cols: list[str] | None = None,
-) -> DataFrame:
-    """Decode wire payloads written under ``writer_version`` and surface them
-    under the topic's LATEST registered schema — old payloads stay readable
-    after a compatible evolution (the consumer-upgrade path the reference
-    left disabled)."""
-    from hiveka_spark.schema import avro_to_struct
-    from hiveka_spark.sources.avro_codec import decode_avro_df
-
-    writer = registry.get(topic, writer_version)
-    _, reader = registry.latest(topic)
-    decoded = decode_avro_df(wire, writer, mode=mode, keep_cols=keep_cols)
-    if writer == reader:
-        return decoded
-    # project writer-decoded rows into the reader schema declaratively:
-    # name-matched fields (with numeric promotion via cast), added fields as
-    # default literals — all JVM-side expressions, no second Python pass
-    import pyspark.sql.functions as F
-
-    writer_names = {f["name"] for f in writer["fields"]}
-    reader_struct = avro_to_struct(reader)
-    cols = list(keep_cols or [])
-    for f, sf in zip(reader["fields"], reader_struct.fields):
-        name = f["name"]
-        if name in writer_names:
-            cols.append(F.col(name).cast(sf.dataType).alias(name))
-        elif "default" in f:
-            cols.append(F.lit(f["default"]).cast(sf.dataType).alias(name))
-        elif isinstance(f["type"], list) and "null" in f["type"]:
-            cols.append(F.lit(None).cast(sf.dataType).alias(name))
-        else:
-            raise ValueError(
-                f"reader field {name!r} has no default and is missing from "
-                "the writer schema"
-            )
-    return decoded.select(*cols)

@@ -255,9 +255,7 @@ class RunningTypeStatsProcessor(StatefulProcessor):
 def tws_available() -> bool:
     """True when the transformWithState Python runtime can actually run:
     the API ships with pyspark 4.x but its state-server protocol needs
-    ``google.protobuf`` on the worker Python path.  Same classpath-probe
-    pattern as sources.kafka_io.avro_jvm_available — implement against the
-    best primitive, dispatch on what the runtime provides."""
+    ``google.protobuf`` on the worker Python path."""
     if not TWS_AVAILABLE:
         return False
     try:  # pragma: no cover - environment probe

@@ -2,8 +2,9 @@
 
 The reference's only unit test is a single fixed-record Avro round-trip
 (BaseProducerTest.java:17-52).  These generalize it: for arbitrary values of
-every supported type, decode(encode(x)) == x, and varint/zigzag primitives
-hold their algebraic properties.  No Spark session needed — pure codec."""
+every supported type (decimals included), decode(encode(x)) == x, and
+varint/zigzag primitives hold their algebraic properties.  No Spark session
+needed — pure codec."""
 
 from __future__ import annotations
 
@@ -48,6 +49,17 @@ SCHEMA = {
         {"name": "arr", "type": {"type": "array", "items": "long"}},
         {"name": "m", "type": {"type": "map", "values": "string"}},
         {
+            "name": "amt",
+            "type": [
+                "null",
+                {"type": "bytes", "logicalType": "decimal", "precision": 10, "scale": 2},
+            ],
+        },
+        {
+            "name": "wide",
+            "type": {"type": "bytes", "logicalType": "decimal", "precision": 38, "scale": 10},
+        },
+        {
             "name": "nested",
             "type": {
                 "type": "record",
@@ -70,6 +82,14 @@ record_st = st.fixed_dictionaries(
         "opt": st.none() | I64,
         "arr": st.lists(I64, max_size=20),
         "m": st.dictionaries(st.text(max_size=20), st.text(max_size=20), max_size=10),
+        "amt": st.none() | st.decimals(
+            min_value=-(10**8) + 1, max_value=10**8 - 1, places=2,
+            allow_nan=False, allow_infinity=False,
+        ),
+        "wide": st.decimals(
+            min_value=-(10**28) + 1, max_value=10**28 - 1, places=10,
+            allow_nan=False, allow_infinity=False,
+        ),
         "nested": st.fixed_dictionaries({"x": I64}),
     }
 )

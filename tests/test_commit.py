@@ -380,6 +380,25 @@ def _knn_sink():
     return setup, lambda spark, state: run(spark, state, [12, 13], 1), read
 
 
+def _tokenizer_save():
+    # the act re-saves the artifact over the one the setup published: a
+    # crash at any step must leave one whole artifact, old or new
+    def save(merges):
+        def run(spark, state):
+            from hiveka_spark.operators.bpe import bpe_vocab, save_tokenizer
+
+            vocab = bpe_vocab(merges, list("abc"))
+            save_tokenizer(spark, f"{state}/tok", merges, vocab, byte_fallback=False)
+
+        return run
+
+    return (
+        save([("a", "b")]),
+        save([("a", "b"), ("ab", "c")]),
+        lambda state: [_rows([f"{state}/tok/{t}"]) for t in ("meta", "merges", "vocab")],
+    )
+
+
 STORES = {
     "band_index": _band_index,
     "band_index_step": _band_index_step,
@@ -392,6 +411,7 @@ STORES = {
     "upsert_sink": _upsert_sink,
     "ivf_segments": _ivf_segments,
     "knn_sink": _knn_sink,
+    "tokenizer_save": _tokenizer_save,
 }
 
 

@@ -11,11 +11,10 @@ import pyspark.sql.functions as F
 import pytest
 
 from hiveka_spark.sources import producers as P
-from hiveka_spark.sources.avro_codec import decode_avro_df, encode_avro_df, decode_record
+from hiveka_spark.sources.avro_codec import decode_avro_df, encode_avro_df
 from hiveka_spark.sources.kafka_io import (
     KafkaTableConfig,
     OffsetStore,
-    avro_jvm_available,
     decode_wire,
     encode_payload,
     kafka_available,
@@ -229,7 +228,7 @@ def test_corrupt_payload_permissive_vs_failfast(spark):
 
 
 def test_encode_decode_df_symmetry(spark):
-    """to_avro-equivalent write path feeds the read path (the sink the
+    """The encode write path feeds the read path (the sink the
     reference stubbed, done for real)."""
     rows = P.fake_tweets(10, seed=3, base_ts=1700000000)
     df = P.typed_df(spark, P.TWEET_SCHEMA, rows)
@@ -264,33 +263,27 @@ def test_events_fixture_as_wire_decodes_fully(spark):
         assert r["event_time"] is not None
 
 
-# ------------------------------------------------- avro decode path dispatch
-def _decode_rows(spark, use_jvm):
-    rows = P.demo_rows(20)
-    wire = P.wire_df(spark, P.DEMO_SCHEMA, rows, topic="t")
+# ------------------------------------------------------------ avro decode
+def test_decode_wire_avro_demo_rows(spark):
+    """A18: raw-framed demo records decode into typed rows (parity with
+    KafkaAvroMessageDecoder.java:153-177 decode semantics)."""
+    wire = P.wire_df(spark, P.DEMO_SCHEMA, P.demo_rows(20), topic="t")
     cfg = KafkaTableConfig(bootstrap_servers="none", ddl="a INT, b STRING")
-    out = decode_wire(wire, cfg, use_jvm_avro=use_jvm).collect()
-    return sorted((r["a"], r["b"]) for r in out)
+    got = sorted((r["a"], r["b"]) for r in decode_wire(wire, cfg).collect())
+    assert got == [(i, "static test string") for i in range(1, 21)]
 
 
-@pytest.mark.parametrize("use_jvm", [False, True])
-def test_decode_wire_both_avro_paths_agree(spark, use_jvm):
-    """A18 dispatch: the JVM from_avro path and the Python wire-codec path
-    must produce identical typed rows (parity with
-    KafkaAvroMessageDecoder.java:153-177 decode semantics).  The JVM case
-    skips when the spark-avro jar is absent — the Python path is the oracle
-    either way."""
-    if use_jvm and not avro_jvm_available(spark):
-        pytest.skip("spark-avro not on classpath; JVM from_avro untestable")
-    want = [(i, "static test string") for i in range(1, 21)]
-    assert _decode_rows(spark, use_jvm) == want
+def test_decode_wire_decimal_roundtrip(spark):
+    """A DECIMAL column crosses a Kafka table: encode writes the unscaled
+    two's-complement bytes at the column's scale, decode reads them back."""
+    from decimal import Decimal
 
-
-def test_decode_wire_auto_probe_matches_explicit(spark):
-    """use_jvm_avro=None must dispatch to whichever path the classpath
-    supports and agree with the explicitly-chosen one."""
-    auto = _decode_rows(spark, None)
-    assert auto == _decode_rows(spark, avro_jvm_available(spark))
+    ddl = "id BIGINT, amt DECIMAL(10,2)"
+    cfg = KafkaTableConfig(bootstrap_servers="none", ddl=ddl)
+    want = [(1, Decimal("1.50")), (2, Decimal("-12345678.99")), (3, Decimal("0.00")), (4, None)]
+    out = decode_wire(encode_payload(spark.createDataFrame(want, ddl), cfg), cfg)
+    assert dict(out.dtypes)["amt"] == "decimal(10,2)"
+    assert sorted((r["id"], r["amt"]) for r in out.collect()) == want
 
 
 def test_encode_payload_python_fallback_roundtrips(spark):
@@ -300,27 +293,8 @@ def test_encode_payload_python_fallback_roundtrips(spark):
         bootstrap_servers="none",
         ddl="username STRING, text STRING, timestamp BIGINT",
     )
-    enc = encode_payload(df, cfg, key_col="username", use_jvm_avro=False)
+    enc = encode_payload(df, cfg, key_col="username")
     assert [f.name for f in enc.schema.fields] == ["key", "value"]
-    avro = struct_to_avro(P.TWEET_SCHEMA, "tweet")
-    got = sorted(
-        (r["username"], r["text"], r["timestamp"])
-        for r in decode_avro_df(enc, avro).collect()
-    )
-    want = sorted((r["username"], r["text"], r["timestamp"]) for r in rows)
-    assert got == want
-
-
-def test_encode_payload_jvm_path(spark):
-    if not avro_jvm_available(spark):
-        pytest.skip("spark-avro not on classpath; JVM to_avro untestable")
-    rows = P.fake_tweets(8, seed=11, base_ts=1700000000)
-    df = P.typed_df(spark, P.TWEET_SCHEMA, rows)
-    cfg = KafkaTableConfig(
-        bootstrap_servers="none",
-        ddl="username STRING, text STRING, timestamp BIGINT",
-    )
-    enc = encode_payload(df, cfg, key_col="username", use_jvm_avro=True)
     avro = struct_to_avro(P.TWEET_SCHEMA, "tweet")
     got = sorted(
         (r["username"], r["text"], r["timestamp"])
@@ -400,7 +374,7 @@ def test_confluent_encode_requires_schema_id(spark):
         F.lit(1.0).alias("value"), F.lit("{}").alias("props"),
     )
     with pytest.raises(ValueError, match="schema_id"):
-        encode_payload(df, cfg, use_jvm_avro=False)
+        encode_payload(df, cfg)
 
 
 def test_confluent_roundtrip_single_schema(spark):
@@ -411,10 +385,10 @@ def test_confluent_roundtrip_single_schema(spark):
         [(1, 10, 100, "click", 1.5, "{}"), (2, 20, 200, "view", 2.5, "{}")],
         "event_id BIGINT, ts_ms BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING",
     )
-    wire = encode_payload(df, cfg, use_jvm_avro=False)
+    wire = encode_payload(df, cfg)
     first = bytes(wire.select("value").first()[0])
     assert first[0] == 0x00 and int.from_bytes(first[1:5], "big") == 3
-    out = decode_wire(wire, cfg, use_jvm_avro=False)
+    out = decode_wire(wire, cfg)
     got = sorted((r["event_id"], r["event_type"]) for r in out.collect())
     assert got == [(1, "click"), (2, "view")]
 
@@ -428,13 +402,11 @@ def test_confluent_wrong_magic_permissive_vs_failfast(spark):
         [(1, 10, 100, "click", 1.5, "{}")],
         "event_id BIGINT, ts_ms BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING",
     )
-    raw_wire = encode_payload(df, cfg_raw, use_jvm_avro=False)
-    permissive = decode_wire(raw_wire, cfg_conf, use_jvm_avro=False).collect()
+    raw_wire = encode_payload(df, cfg_raw)
+    permissive = decode_wire(raw_wire, cfg_conf).collect()
     assert len(permissive) == 1 and permissive[0]["event_id"] is None
     with pytest.raises(Exception):
-        decode_wire(
-            raw_wire, cfg_conf, mode="FAILFAST", use_jvm_avro=False
-        ).collect()
+        decode_wire(raw_wire, cfg_conf, mode="FAILFAST").collect()
 
 
 def test_confluent_unknown_schema_id_with_registry(spark, tmp_path):
@@ -449,15 +421,14 @@ def test_confluent_unknown_schema_id_with_registry(spark, tmp_path):
         [(1, 10, 100, "click", 1.5, "{}")],
         "event_id BIGINT, ts_ms BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING",
     )
-    wire = encode_payload(df, cfg, use_jvm_avro=False)
+    wire = encode_payload(df, cfg)
     out = decode_wire(
-        wire, cfg, use_jvm_avro=False, registry=registry, registry_topic="events"
+        wire, cfg, registry=registry, registry_topic="events"
     ).collect()
     assert len(out) == 1 and out[0]["event_id"] is None
     with pytest.raises(Exception):
         decode_wire(
-            wire, cfg, mode="FAILFAST", use_jvm_avro=False,
-            registry=registry, registry_topic="events",
+            wire, cfg, mode="FAILFAST", registry=registry, registry_topic="events",
         ).collect()
 
 
@@ -477,7 +448,7 @@ def test_confluent_schema_evolution_via_registry(spark, tmp_path):
     assert with_confluent_framing(cfg_v1, registry, "t").schema_id == 1
 
     df = spark.createDataFrame([(1, "x"), (2, "y")], "a BIGINT, b STRING")
-    wire = encode_payload(df, cfg_v1, use_jvm_avro=False)
+    wire = encode_payload(df, cfg_v1)
 
     v1 = json.loads(cfg_v1.schema_json())
     v2 = {
@@ -490,7 +461,7 @@ def test_confluent_schema_evolution_via_registry(spark, tmp_path):
 
     cfg_v2 = replace(cfg_v1, ddl=None, avro_schema=v2)
     out = decode_wire(
-        wire, cfg_v2, use_jvm_avro=False, registry=registry, registry_topic="t"
+        wire, cfg_v2, registry=registry, registry_topic="t"
     )
     got = sorted((r["a"], r["b"], r["tag"]) for r in out.collect())
     assert got == [(1, "x", "evolved"), (2, "y", "evolved")]

@@ -1137,7 +1137,7 @@ def test_sp_units_property_unicode(spark):
     assert got == dict(texts)
 
 
-def test_tokenizer_artifact_save_load_mode_dispatch(spark, tmp_path):
+def test_tokenizer_artifact_save_load_mode_dispatch(spark, tmp_path, monkeypatch):
     """save_tokenizer/load_tokenizer round-trip: the loaded artifact
     applies ITSELF under its persisted contract — byte_exact dispatches
     the marker pre-tokenizer (case/whitespace preserved), normalized the
@@ -1230,18 +1230,33 @@ def test_tokenizer_artifact_save_load_mode_dispatch(spark, tmp_path):
     with pytest.raises(ValueError, match="unknown norm_mode"):
         save_tokenizer(spark, str(tmp_path / "bad"), mt, vocab, "lowercased")
 
-    # torn-save guard: new meta written but the commit marker (written
-    # LAST) still carries the previous save's token -> loud error, never a
-    # stale contract applied to new tables
+    # a save that dies before its publish leaves the previous artifact
+    # whole and loadable
+    from hiveka_spark import commit
     from hiveka_spark.operators.bpe import _ARTIFACT_FORMAT
 
     path = str(tmp_path / "normalized_words")
+    before = load_tokenizer(spark, path)
+
+    def crash(staged, target):
+        raise OSError("crash before publish")
+
+    monkeypatch.setattr(commit, "publish", crash)
+    with pytest.raises(OSError, match="crash before publish"):
+        save_tokenizer(spark, path, mt[:1], vocab, "byte_exact")
+    monkeypatch.undo()
+    after = load_tokenizer(spark, path)
+    assert (after.merges, after.norm_mode) == (before.merges, before.norm_mode)
+    with pytest.raises(RuntimeError, match="no published tokenizer"):
+        load_tokenizer(spark, commit.staging_path(path))
+
+    # a tampered table fails the content-token check
     spark.createDataFrame(
         [("normalized", True, "stale", _ARTIFACT_FORMAT)],
         "norm_mode string, byte_fallback boolean, content_token string, "
         "format int",
     ).write.mode("overwrite").parquet(f"{path}/meta")
-    with pytest.raises(RuntimeError, match="torn or corrupted"):
+    with pytest.raises(RuntimeError, match="content token"):
         load_tokenizer(spark, path)
 
     # format guard: an artifact saved under the OLD token scheme (no

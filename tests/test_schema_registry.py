@@ -1,8 +1,8 @@
 """Schema registry (A22) + Avro schema resolution: versioned topic schemas,
 defaults for added fields, numeric promotions, and the DataFrame-level
-old-payload-under-new-schema decode path (the feature the reference's
-SchemaRegistry.java:16-62 declares but KafkaAvroMessageDecoder.java:131-144
-leaves disabled)."""
+old-payload-under-new-schema decode path through ``decode_wire`` with
+Confluent framing (the feature the reference's SchemaRegistry.java:16-62
+declares but KafkaAvroMessageDecoder.java:131-144 leaves disabled)."""
 
 from __future__ import annotations
 
@@ -10,9 +10,10 @@ import tempfile
 
 import pytest
 
+from hiveka_spark.sources.avro_codec import encode_record, frame_confluent
+from hiveka_spark.sources.kafka_io import KafkaTableConfig, decode_wire
 from hiveka_spark.sources.schema_registry import (
     FileSchemaRegistry,
-    decode_with_registry,
     resolve_record,
 )
 
@@ -39,6 +40,19 @@ V2 = {
 
 def _registry() -> FileSchemaRegistry:
     return FileSchemaRegistry(tempfile.mkdtemp(prefix="schema_reg_"))
+
+
+def _decode_v1_wire(spark, reg, records):
+    """Confluent-framed v1 payloads, decoded under the topic's latest
+    registered schema with per-record writer-schema resolution."""
+    wire = spark.createDataFrame(
+        [(frame_confluent(encode_record(V1, r), 1),) for r in records], "value binary"
+    )
+    _, reader = reg.latest("t")
+    cfg = KafkaTableConfig(
+        "none", whitelist_topics=["t"], avro_schema=reader, framing="confluent"
+    )
+    return decode_wire(wire, cfg, registry=reg, registry_topic="t")
 
 
 def test_register_versions_and_latest():
@@ -89,16 +103,8 @@ def test_decode_old_payloads_under_new_schema(spark):
     a arrives promoted to long, c takes its default, d is null."""
     reg = _registry()
     reg.register("t", V1)
-    rows = [{"a": i, "b": f"s{i}"} for i in range(1, 11)]
-    # build wire rows directly from the codec (the writer schema IS the v1
-    # avro dict)
-    from hiveka_spark.sources.avro_codec import encode_record
-
-    payloads = [(encode_record(V1, r),) for r in rows]
-    wire = spark.createDataFrame(payloads, "value binary")
-
     reg.register("t", V2)
-    out = decode_with_registry(wire, reg, "t", writer_version=1)
+    out = _decode_v1_wire(spark, reg, [{"a": i, "b": f"s{i}"} for i in range(1, 11)])
     assert [f.name for f in out.schema.fields] == ["a", "c", "d"]
     assert dict(out.dtypes)["a"] == "bigint"
     got = sorted((r["a"], r["c"], r["d"]) for r in out.collect())
@@ -108,10 +114,5 @@ def test_decode_old_payloads_under_new_schema(spark):
 def test_decode_same_version_passthrough(spark):
     reg = _registry()
     reg.register("t", V1)
-    from hiveka_spark.sources.avro_codec import encode_record
-
-    wire = spark.createDataFrame(
-        [(encode_record(V1, {"a": 1, "b": "x"}),)], "value binary"
-    )
-    out = decode_with_registry(wire, reg, "t", writer_version=1)
+    out = _decode_v1_wire(spark, reg, [{"a": 1, "b": "x"}])
     assert [(r["a"], r["b"]) for r in out.collect()] == [(1, "x")]

@@ -133,7 +133,7 @@ def test_gate_constants_consistent():
     assert T._UG_MAX_PIECE >= 2
 
 
-def test_unigram_artifact_roundtrip_and_torn_save(spark, tmp_path):
+def test_unigram_artifact_roundtrip_and_torn_save(spark, tmp_path, monkeypatch):
     from hiveka_spark.operators.unigram import (
         load_unigram,
         save_unigram,
@@ -148,13 +148,28 @@ def test_unigram_artifact_roundtrip_and_torn_save(spark, tmp_path):
     rows, mpl = load_unigram(spark, path)
     assert rows == vocab and mpl == 5
 
-    # torn save: rewrite the vocab table without updating meta/commit
-    save_unigram(spark, str(tmp_path / "art2"), vocab[:-1], 5)
+    # a save that dies before its publish leaves the previous artifact
+    # whole and loadable
+    from hiveka_spark import commit
+
+    def crash(staged, target):
+        raise OSError("crash before publish")
+
+    monkeypatch.setattr(commit, "publish", crash)
+    with pytest.raises(OSError, match="crash before publish"):
+        save_unigram(spark, path, vocab[:-1], 5)
+    monkeypatch.undo()
+    assert load_unigram(spark, path) == (vocab, 5)
+    with pytest.raises(RuntimeError, match="no published unigram"):
+        load_unigram(spark, commit.staging_path(path))
+
+    # a tampered table fails the content-token check
     import shutil
 
+    save_unigram(spark, str(tmp_path / "art2"), vocab[:-1], 5)
     shutil.rmtree(path + "/vocab")
     shutil.copytree(str(tmp_path / "art2") + "/vocab", path + "/vocab")
-    with pytest.raises(RuntimeError, match="torn or corrupted"):
+    with pytest.raises(RuntimeError, match="content token"):
         load_unigram(spark, path)
 
 

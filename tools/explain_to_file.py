@@ -9,8 +9,9 @@ for each query. Constructing the gate's DataFrame runs any driver-side
 preamble the gate performs (eager checkpoints, bounded collects) exactly as
 the bench does; the RETURNED frame is explained. Expression ids (``#12``,
 ``#12L``) and exchange plan ids (``plan_id=4506``) are session counters, not
-plan content, so they are removed before writing and two dumps of the same
-plan compare byte-for-byte:
+plan content, so they are removed before writing; so is the random suffix
+``tempfile.mkdtemp`` gives a gate's scratch dir (a file scan's
+``Location``).  Two dumps of the same plan then compare byte-for-byte:
 
     diff plans/r18/<query>_before.txt plans/r18/<query>_after.txt
 """
@@ -20,10 +21,13 @@ from __future__ import annotations
 import os
 import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _COUNTER_IDS = re.compile(r"#\d+L?|(?<=plan_id=)\d+")
+# mkdtemp appends 8 random characters from [a-z0-9_] to the prefix
+_TEMP_SUFFIX = re.compile("(" + re.escape(tempfile.gettempdir()) + r"/[^/\]\s]*?)[a-z0-9_]{8}(?=/)")
 
 
 def main() -> None:
@@ -43,7 +47,8 @@ def main() -> None:
         df = REGISTRY[name].fn(spark, sf_dir)
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(_COUNTER_IDS.sub("", formatted_plan(df)))
+            plan = _COUNTER_IDS.sub("", formatted_plan(df))
+            fh.write(_TEMP_SUFFIX.sub(r"\1<random>", plan))
         print(f"wrote {path}")
 
 
